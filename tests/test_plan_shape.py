@@ -12,6 +12,7 @@ import pytest
 
 from zopfli_spark import EngineConfig, decode_table, encode_table
 from zopfli_spark.datagen import synth_tokens_df
+from zopfli_spark.lineage import lineage_from_pages
 
 CFG = EngineConfig(
     page_budget_values=20_000, group_budget_values=80_000, giant_doc_values=40_000
@@ -23,8 +24,13 @@ def _plan(df) -> str:
 
 
 def _count_exchanges(plan: str) -> int:
-    # count shuffle exchanges, not broadcast exchanges
-    return len(re.findall(r"Exchange hashpartitioning|Exchange rangepartitioning", plan))
+    # count shuffle exchanges (encode places groups by id), not broadcasts
+    return len(
+        re.findall(
+            r"Exchange (?:hashpartitioning|rangepartitioning|shufflepartitionidpassthrough)",
+            plan,
+        )
+    )
 
 
 def test_encode_has_single_shuffle(spark):
@@ -49,3 +55,23 @@ def test_decode_prunes_page_columns(spark):
     plan = _plan(decoded)
     # decode must only pull header/payload/checksum through the UDF boundary
     assert re.search(r"header.*payload.*checksum", plan) is not None
+
+
+def test_resume_cogroup_input_side_single_shuffle(spark):
+    df = synth_tokens_df(spark, 200, seed=1)
+    pages = encode_table(df, CFG).cache()
+    resumed = encode_table(df, CFG, lineage=lineage_from_pages(pages, CFG.mode))
+    plan = _plan(resumed)
+    assert "FlatMapCoGroupsInArrow" in plan
+    # children print as ":- <input side>" then "+- <plans side>" at the same
+    # indent; the input side is every line up to the plans-side child
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "FlatMapCoGroupsInArrow" in ln)
+    indent = lines[top + 1].index(":- ")
+    end = next(
+        i for i in range(top + 2, len(lines)) if lines[i][indent : indent + 3] == "+- "
+    )
+    input_side = "\n".join(lines[top + 1 : end])
+    assert _count_exchanges(input_side) == 1, input_side
+    # both children keep the id placement: no re-shuffle by group hash above it
+    assert re.search(r"hashpartitioning\(_zs_group", plan) is None, plan

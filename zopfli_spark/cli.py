@@ -70,7 +70,7 @@ def cmd_encode(args) -> int:
     spark = _spark(args)
     df = spark.read.parquet(args.input)
     hints = spark.read.parquet(args.split_hints) if args.split_hints else None
-    # (encode_table repartitions the encode exchange to 2x the group count
+    # (encode_table sizes the encode exchange to one partition per group
     # itself — no conf juggling or extra input scan needed here)
     t0 = time.time()
     m = encode_to_store(

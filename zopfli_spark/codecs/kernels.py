@@ -894,6 +894,9 @@ def encode_best(
     # search's best would be from exact analytic sizes + realized candidates,
     # so the heuristic gates behave identically with or without a budget.
     heur = plain_size
+    # invariant: heur >= best_size. heur starts at plain_size >= best_size,
+    # and an exact analytic size below best_size is materialized, lowering
+    # both, so the lower-bound gates below compare against best_size alone.
 
     # --- analytic candidates -------------------------------------------------
     w_for = bit_width(vmax - vmin)
@@ -920,7 +923,7 @@ def encode_best(
     if ok(RLE) and n_runs <= n // 2:
         # lower bound: each run ≥ (w_for + 1 bit) — prune hopeless cases
         lb = 1 + 8 + (n_runs * (w_for + 1) + 7) // 8
-        if lb < min(best_size, heur):
+        if lb < best_size:
             blob = _build_rle(v, run_vals, run_lens)
             heur = min(heur, len(blob))
             if len(blob) < best_size:
@@ -937,7 +940,7 @@ def encode_best(
         card = len(uniq)
         w_idx = bit_width(card - 1)
         lb = 1 + 4 + 4 + (card * 2 + n * w_idx + 7) // 8
-        if card >= 2 and w_idx < 32 and lb < min(best_size, heur):
+        if card >= 2 and w_idx < 32 and lb < best_size:
             blob = _build_dict(v, uniq, inverse)
             heur = min(heur, len(blob))
             if len(blob) < best_size:
@@ -946,7 +949,7 @@ def encode_best(
 
     # --- coarsened (quantized) dictionary -------------------------------------
     if ok(DICT_SHIFT) and uniq is not None and len(uniq) > 256:
-        blob = _build_dict_shift(v, uniq, n, min(best_size, heur))
+        blob = _build_dict_shift(v, uniq, n, best_size)
         if blob is not None:
             heur = min(heur, len(blob))
             if len(blob) < best_size:

@@ -26,6 +26,7 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
+from .codecs.kernels import GROUP_HUFFMAN
 from .config import DEFAULT_CONFIG, EngineConfig
 from .deploy import ensure_shipped
 from .lineage import (
@@ -587,7 +588,7 @@ def _encode_group(
         byte-identical. Escaped tokens pay their ESC code plus an estimated
         side-channel literal."""
         if not config.group_dict or not config.gh_split_pricing or (
-            allowed_tags is not None and _gh_allow_tag() not in allowed_tags
+            allowed_tags is not None and GROUP_HUFFMAN not in allowed_tags
         ):
             return None
         ctx = _gh_ctx()
@@ -612,11 +613,6 @@ def _encode_group(
         if not _gh_bits_state:
             _gh_bits_state.append(_gh_split_bits())
         return _gh_bits_state[0]
-
-    def _gh_allow_tag() -> int:
-        from .codecs.kernels import GROUP_HUFFMAN
-
-        return GROUP_HUFFMAN
 
     _rc_state: list = []
 
@@ -741,13 +737,11 @@ def _encode_group(
         # independent (same values → same positions → same bytes), so
         # stashing min-over-flags alts keeps the revert exact.
         if config.group_dict and group_ok and forced is None and v1 > v0:
-            from .codecs.kernels import GROUP_HUFFMAN as _GH_TAG
-
             # the adoption candidate honors the codec allow-list like every
             # other tag (ADVICE r5 low: it bypassed allowed_tags, so a
             # decode-compat pin could silently be violated)
             ctx = _gh_ctx() if (
-                allowed_tags is None or _GH_TAG in allowed_tags
+                allowed_tags is None or GROUP_HUFFMAN in allowed_tags
             ) else {"blob": None}
             if ctx["blob"] is not None:
                 from .codecs.kernels import (
@@ -1173,13 +1167,17 @@ def encode_table(
     # task count must track GROUP count, not spark.sql.shuffle.partitions: a
     # fixed conf serializes the encode stage once num_groups outgrows it
     # (10^12 sequences → millions of groups) and pays empty python-UDF tasks
-    # when far below it. repartition-by-key with an explicit count satisfies
-    # the grouped-map distribution requirement, so the plan keeps exactly ONE
-    # exchange (asserted in tests/test_plan_shape.py). 2× groups ≈ one group
-    # per task under hash collisions (the balance the bench previously got
-    # from hand-tuning the global conf).
-    n_parts = max(1, 2 * num_groups)
-    grouped = grouped.repartition(n_parts, F.col(GROUP_COL))
+    # when far below it. Placement is exact, not hashed: repartitionById
+    # (Spark >= 4.1) sends regular group g to partition g, and long-tail id
+    # num_groups + h wraps (id mod n_parts) to partition h, beside regular
+    # group h. So no two regular groups share a task, and the encode output
+    # has num_groups partitions, empty only where a group id drew no doc:
+    # the downstream mapInArrow (decode_table) starts a Python task per
+    # partition, empty or not. The id placement satisfies the grouped-map
+    # clustering requirement, so the plan keeps exactly ONE exchange
+    # (asserted in tests/test_plan_shape.py).
+    n_parts = max(1, num_groups)
+    grouped = grouped.repartitionById(n_parts, F.col(GROUP_COL))
     if lineage is not None and isinstance(lineage, DataFrame):
         # scalable resume: no driver collect — per-group content keys are
         # aggregated JVM-side, equi-joined against the lineage table, and the
@@ -1199,7 +1197,9 @@ def encode_table(
                 "content_key",
             )
             .select(GROUP_COL, "content_hash", "plan")
-            .repartition(n_parts, F.col(GROUP_COL))
+            # same placement as the input side, so the cogroup's children
+            # stay co-partitioned and no re-shuffle is inserted above either
+            .repartitionById(n_parts, F.col(GROUP_COL))
         )
         return (
             grouped.groupBy(GROUP_COL)
@@ -1227,6 +1227,10 @@ def decode_table(
 
     Pages are independent → mapInArrow (narrow, no shuffle); decoded token
     arrays are emitted as flat Arrow list buffers (no per-row boxing).
+    encode_table's output holds one group per partition (regular group g on
+    partition g, long-tail groups beside a regular one), and mapInArrow
+    starts one Python task per partition, so a fused or cached
+    encode→decode runs exactly num_groups decode tasks.
 
     ``input_partitions``: partition count of a STORE-BACKED pages input
     (e.g. ``store.store_partition_count``). When supplied and clearly
