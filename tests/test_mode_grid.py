@@ -235,7 +235,8 @@ def test_grid_dial_winner_resumes_byte_identical(order_blind_group):
         vals[rng.choice(64, BUDGET // 2, p=p)].astype(np.int32) for _ in range(8)
     ]
     first = _encode_group(_tbl(docs), CFG)
-    # build the driver-dict lineage in the struct form the engine parses
+    # deliver the plan the way encode_table's lineage cogroup does: a
+    # one-row (content_hash, plan) table in the struct form the engine parses
     import json as _json
 
     plan = _json.dumps(
@@ -249,12 +250,15 @@ def test_grid_dial_winner_resumes_byte_identical(order_blind_group):
             )
         ]
     )
-    key = (
-        int(first.column("content_key")[0].as_py()),
-        CFG.mode,
+    plan_tbl = _pa.table(
+        {
+            "content_hash": _pa.array(
+                [first.column("content_hash_group")[0].as_py()], _pa.int64()
+            ),
+            "plan": [plan],
+        }
     )
-    lineage = {key: (int(first.column("content_hash_group")[0].as_py()), plan)}
-    second = _encode_group(_tbl(docs), CFG, lin=lineage)
+    second = _encode_group(_tbl(docs), CFG, plan_tbl=plan_tbl)
     assert set(second.column("resumed").to_pylist()) == {1}
     assert first.column("checksum").to_pylist() == second.column("checksum").to_pylist()
     assert first.column("enc_bytes").to_pylist() == second.column("enc_bytes").to_pylist()

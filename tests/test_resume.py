@@ -87,18 +87,10 @@ def test_stale_lineage_falls_back(spark, tokens_df):
     assert sig1[cols].equals(sig[cols])
 
 
-def test_dict_and_join_delivery_equivalent(spark, tokens_df):
-    """Lineage via driver dict (small scale) and via the collect-free cogroup
-    join (10^12-scale path) must produce identical bytes and both hit."""
-    from pyspark.sql import functions as F2
-
-    from zopfli_spark.lineage import lineage_dict
-
-    first = encode_table(tokens_df, CFG).cache()
-    lineage = lineage_from_pages(first, CFG.mode).cache()
-    via_join = encode_table(tokens_df, CFG, lineage=lineage)
-    via_dict = encode_table(tokens_df, CFG, lineage=lineage_dict(lineage))
-    a = via_join.agg(F2.sum(F2.crc32("payload")), F2.sum("resumed"), F2.count("*")).collect()[0]
-    b = via_dict.agg(F2.sum(F2.crc32("payload")), F2.sum("resumed"), F2.count("*")).collect()[0]
-    assert tuple(a) == tuple(b)
-    assert a[1] == a[2]  # every page resumed in both deliveries
+def test_lineage_must_be_a_dataframe(spark, tokens_df):
+    """Lineage has one delivery, the cogroup join of a lineage DataFrame: a
+    driver-side {(content_key, mode): (content_hash, plan)} dict is refused
+    up front instead of being silently ignored."""
+    plans = {(1, CFG.mode): (2, '[{"page_id":0,"n_rows":1,"codec":"plain"}]')}
+    with pytest.raises(TypeError, match="DataFrame"):
+        encode_table(tokens_df, CFG, lineage=plans)

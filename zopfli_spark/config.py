@@ -117,23 +117,11 @@ class EngineConfig:
     #: pages held 1.82 MB vs a 29 KB dict row). OFF by default (needs
     #: clustering's codec-pure pages to find training windows); ratio()
     #: turns both on — combined +9.1% ratio over the r4 ratio() notch on
-    #: the same workload
+    #: the same workload. With it on, the split estimator also prices every
+    #: range as min(own entropy, bits under the shared group code) whenever
+    #: the allow-list admits group_huffman (engine._gh_split_bits); that is
+    #: estimator-only, so it adds nothing to the mode fingerprint
     group_dict: bool = False
-    #: price the group_huffman candidate inside the split ESTIMATOR (r6):
-    #: every range cost becomes min(own-entropy, bits under the shared group
-    #: code), so the split search isolates heavy-tail content that is cheap
-    #: UNDER THE DICTIONARY even when mixed company makes its own entropy
-    #: look expensive — the r5 known gap (a mixed page held zipf content at
-    #: ~9.4 b/v realized vs ~7.4 achievable, ~2% of payload; four post-hoc
-    #: recovery policies all measured worse than split-time pricing, see
-    #: BENCH.md). Mirrors the reference splitting on LZ77-aware stats rather
-    #: than raw bytes (src/zopfli/blocksplitter.c:308-352). Estimator-only
-    #: dial (codec choice stays exact keep-if-smaller bytes), so it is
-    #: deliberately NOT in the mode fingerprint: replayed plans are exact
-    #: regardless of which estimator picked their geometry. Exists as a dial
-    #: so the BENCH.md A/B is reproducible; no reason to turn it off in
-    #: production. No-op unless group_dict is on
-    gh_split_pricing: bool = True
     #: conditional-entropy (distinctness) term in the split estimator (r6):
     #: bucket entropy saturates at log2(256) = 8 bits, so content families
     #: above 8 bits/value (e.g. card-9.6k vs card-68k near-uniform token
@@ -144,8 +132,8 @@ class EngineConfig:
     #: per group, ~0.2 s CPU per Mvalue — why it is a dial and not
     #: unconditional: the default/throughput notches are kernel-CPU-bound).
     #: Estimator-only (codec choice stays exact keep-if-smaller), so like
-    #: gh_split_pricing it is deliberately NOT in the mode fingerprint.
-    #: ratio() turns it on
+    #: the split-time group-code pricing that group_dict turns on it is
+    #: deliberately NOT in the mode fingerprint. ratio() turns it on
     split_card_term: bool = False
     #: deterministic seed; combined with content hashes so re-runs (and runs
     #: at different parallelism) produce byte-identical streams

@@ -32,7 +32,6 @@ from .deploy import ensure_shipped
 from .lineage import (
     group_content_hash,
     hints_dict,
-    lineage_dict,
     struct_plan_to_pages,
 )
 from .operators.pagecodec import decode_page, encode_page
@@ -407,7 +406,6 @@ def _tokens_flat(tbl: pa.Table) -> tuple[np.ndarray, np.ndarray]:
 def _encode_group(
     tbl: pa.Table,
     config: EngineConfig,
-    lin: dict | None = None,
     plan_tbl: pa.Table | None = None,
     hints: dict | None = None,
 ) -> pa.Table:
@@ -468,17 +466,13 @@ def _encode_group(
         # old boundaries and ignore the hint. Only a hint whose STRONG hash
         # matches may outrank: a stale hint (key collision / drift) must not
         # silently disable lineage resume (ADVICE r2).
-        plan_tbl, lin = None, None
+        plan_tbl = None
     if plan_tbl is not None and plan_tbl.num_rows:
-        # join-delivered lineage (scalable path): verify the strong hash
-        # before trusting the plan (portability-check discipline of the
-        # reference DB records, src/zopfli/deflate.c:1195-1199)
+        # cogroup-delivered lineage: verify the strong hash before trusting
+        # the plan (portability-check discipline of the reference DB
+        # records, src/zopfli/deflate.c:1195-1199)
         if int(plan_tbl.column("content_hash")[0].as_py()) == content_hash:
             plan = plan_tbl.column("plan")[0].as_py()
-    if plan is None and lin:
-        rec = lin.get((content_key, config.mode))
-        if rec is not None and rec[0] == content_hash:
-            plan = rec[1]
     forced_codecs: list[str] | None = None
     val_offsets = np.concatenate(([0], np.cumsum(lens)))
     if plan is not None:
@@ -587,7 +581,7 @@ def _encode_group(
         page bounds (window training), so pricing it here keeps replay
         byte-identical. Escaped tokens pay their ESC code plus an estimated
         side-channel literal."""
-        if not config.group_dict or not config.gh_split_pricing or (
+        if not config.group_dict or (
             allowed_tags is not None and GROUP_HUFFMAN not in allowed_tags
         ):
             return None
@@ -1160,7 +1154,16 @@ def encode_table(
     A hint whose strong hash matches the group's content pins the page
     boundaries exactly (codec argmin still runs); stale hints are ignored.
     Hints are boundary lists, ~bytes per group — broadcast-sized at any data
-    scale (unlike lineage plans, which ride the cogroup join)."""
+    scale (unlike lineage plans, which ride the cogroup join).
+
+    ``lineage`` (the StatsDB in-side): None, or a lineage DataFrame
+    (store.read_lineage / lineage.lineage_from_pages), whose plans have one
+    delivery, the cogroup join below; anything else raises TypeError."""
+    if lineage is not None and not isinstance(lineage, DataFrame):
+        raise TypeError(
+            "lineage must be None or a DataFrame of LINEAGE_SCHEMA rows, "
+            f"not {type(lineage).__name__}"
+        )
     ensure_shipped(df.sparkSession)
     grouped, num_groups = plan_groups(df, config, total_values=total_values)
     hints = hints_dict(split_hints)
@@ -1178,43 +1181,42 @@ def encode_table(
     # (asserted in tests/test_plan_shape.py).
     n_parts = max(1, num_groups)
     grouped = grouped.repartitionById(n_parts, F.col(GROUP_COL))
-    if lineage is not None and isinstance(lineage, DataFrame):
-        # scalable resume: no driver collect — per-group content keys are
-        # aggregated JVM-side, equi-joined against the lineage table, and the
-        # matching plans cogrouped into the encode UDF (one tiny extra
-        # shuffle of plan rows; nothing is broadcast through the driver)
-        keys = grouped.groupBy(GROUP_COL).agg(
-            F.bit_xor(F.col(ROW_HASH_COL)).alias("content_key")
-        ).select(
-            # fresh attribute ids: the cogroup below would otherwise see an
-            # ambiguous self-join on the group column
-            (F.col(GROUP_COL) + F.lit(0)).cast("int").alias(GROUP_COL),
-            F.col("content_key"),
+    if lineage is None:
+        return grouped.groupBy(GROUP_COL).applyInArrow(
+            lambda tbl: _encode_group(tbl, config, hints=hints),
+            schema=PAGES_SCHEMA,
         )
-        plans = (
-            keys.join(
-                lineage.filter(F.col("mode") == F.lit(config.mode)),
-                "content_key",
-            )
-            .select(GROUP_COL, "content_hash", "plan")
-            # same placement as the input side, so the cogroup's children
-            # stay co-partitioned and no re-shuffle is inserted above either
-            .repartitionById(n_parts, F.col(GROUP_COL))
+    # resume without a driver collect: per-group content keys are aggregated
+    # JVM-side, equi-joined against the lineage table, and the matching plans
+    # cogrouped into the encode UDF (one tiny extra shuffle of plan rows;
+    # nothing is broadcast through the driver)
+    keys = grouped.groupBy(GROUP_COL).agg(
+        F.bit_xor(F.col(ROW_HASH_COL)).alias("content_key")
+    ).select(
+        # fresh attribute ids: the cogroup below would otherwise see an
+        # ambiguous self-join on the group column
+        (F.col(GROUP_COL) + F.lit(0)).cast("int").alias(GROUP_COL),
+        F.col("content_key"),
+    )
+    plans = (
+        keys.join(
+            lineage.filter(F.col("mode") == F.lit(config.mode)),
+            "content_key",
         )
-        return (
-            grouped.groupBy(GROUP_COL)
-            .cogroup(plans.groupBy(GROUP_COL))
-            .applyInArrow(
-                lambda left, right: _encode_group(
-                    left, config, plan_tbl=right, hints=hints
-                ),
-                schema=PAGES_SCHEMA,
-            )
+        .select(GROUP_COL, "content_hash", "plan")
+        # same placement as the input side, so the cogroup's children
+        # stay co-partitioned and no re-shuffle is inserted above either
+        .repartitionById(n_parts, F.col(GROUP_COL))
+    )
+    return (
+        grouped.groupBy(GROUP_COL)
+        .cogroup(plans.groupBy(GROUP_COL))
+        .applyInArrow(
+            lambda left, right: _encode_group(
+                left, config, plan_tbl=right, hints=hints
+            ),
+            schema=PAGES_SCHEMA,
         )
-    lin = lineage_dict(lineage)
-    return grouped.groupBy(GROUP_COL).applyInArrow(
-        lambda tbl: _encode_group(tbl, config, lin, hints=hints),
-        schema=PAGES_SCHEMA,
     )
 
 

@@ -15,6 +15,11 @@ Keys are content-addressed (BLAKE2b-64 of the group's raw value bytes + doc
 ids), never positional, so lineage survives repartitioning — the same
 portability discipline as the reference's cross-arch DB records
 (deflate.c:1195-1199).
+
+Lineage is a DataFrame (store.read_lineage, or lineage_from_pages) and has
+one delivery: engine.encode_table equi-joins it against the per-group content
+keys and cogroups the matching plans into the encode UDF, so no plan is
+collected to the driver at any scale.
 """
 
 from __future__ import annotations
@@ -46,15 +51,6 @@ def group_content_hash(values: np.ndarray, doc_ids) -> int:
     h.update(lens.astype("<i8").tobytes())
     h.update(data)
     return int.from_bytes(h.digest(), "little", signed=True)
-
-
-def make_plan(page_rows: list[tuple[int, str]]) -> str:
-    """Serialize [(n_rows, codec), ...] — the 'best stats' payload."""
-    return json.dumps(page_rows, separators=(",", ":"))
-
-
-def parse_plan(plan: str) -> list[tuple[int, str]]:
-    return [(int(a), str(b)) for a, b in json.loads(plan)]
 
 
 def lineage_from_pages(pages: DataFrame, mode: int) -> DataFrame:
@@ -94,22 +90,6 @@ def lineage_from_pages(pages: DataFrame, mode: int) -> DataFrame:
             F.col("plan_struct").alias("plan"),
         )
     )
-
-
-def lineage_dict(lineage: DataFrame | dict | None) -> dict:
-    """Driver-side broadcastable lookup
-    {(content_key, mode): (content_hash, plan)} — the small-scale delivery;
-    DataFrame lineage goes through the collect-free cogroup join in
-    engine.encode_table instead."""
-    if lineage is None:
-        return {}
-    if isinstance(lineage, dict):
-        return lineage
-    rows = lineage.select("content_key", "content_hash", "mode", "plan").collect()
-    return {
-        (int(r["content_key"]), int(r["mode"])): (int(r["content_hash"]), r["plan"])
-        for r in rows
-    }
 
 
 def struct_plan_to_pages(plan: str) -> list[tuple[int, str]]:

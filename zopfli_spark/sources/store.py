@@ -159,10 +159,6 @@ def maybe_compact_lineage(root: str, spark: SparkSession, threshold_files: int =
     return False
 
 
-def lineage_file_count(root: str) -> int:
-    return store_partition_count(root, "lineage")
-
-
 def append_metrics(metrics: DataFrame, root: str) -> None:
     """Append per-run metrics rows, stamped with the append wall-clock so
     retention (:func:`compact_metrics`) can order runs without trusting
