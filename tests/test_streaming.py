@@ -3,6 +3,8 @@ page store, resumable via lineage, decoded output bit-identical."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -17,6 +19,28 @@ CFG = EngineConfig(
     group_budget_values=80_000,
     giant_doc_values=40_000,
 )
+
+
+def _stop_when_drained(q, timeout_s: float = 300.0) -> None:
+    """Stop a stateful availableNow query once it has processed all its data.
+
+    With processing-time timeouts Spark runs a no-data micro-batch on every
+    trigger, so such a query never ends on its own and never idles:
+    ``awaitTermination(300)`` waits out its whole timeout and
+    ``processAllAvailable()`` never returns. Spark plans a no-data batch only
+    when no source has new data, so the first progress that read no rows
+    marks every input file as processed."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        if not q.isActive:
+            q.awaitTermination()  # raises the query's failure, if any
+            return
+        p = q.lastProgress
+        if p is not None and p["numInputRows"] == 0:
+            break
+        assert time.monotonic() < deadline, "query did not drain its input"
+        time.sleep(0.05)
+    q.stop()
 
 
 def test_streaming_encode_roundtrip(spark, tmp_path_factory):
@@ -180,7 +204,7 @@ def test_stateful_dedup_ttl_expires_and_readmits(spark, tmp_path_factory):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _stop_when_drained(q)
 
     run_once()
     assert spark.read.parquet(out_dir).count() == 2  # A emitted
@@ -232,7 +256,7 @@ def test_stateful_dedup_under_rocksdb_provider(spark, tmp_path_factory):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _stop_when_drained(q)
         progress = q.recentProgress
     finally:
         for k, v in old.items():

@@ -692,12 +692,14 @@ def group_tokens(vals: np.ndarray, gd: GroupDict) -> tuple[np.ndarray, np.ndarra
     """→ (symbols, escaped values): dictionary positions for covered
     tokens, the ESCAPE symbol (index = card) for the rest. Shared by the
     exact-size pre-gate and the emitter so the argmin never tokenizes
-    twice."""
+    twice. Symbols are int32 (card ≤ _GH_MAX_CARD, so ESCAPE fits): half
+    the memory of the whole-group stream the engine caches per group."""
     v = _as_i64(vals)
     pos = np.searchsorted(gd.vals, v)
     pos[pos >= len(gd.vals)] = 0
     miss = gd.vals[pos] != v
-    sym = np.where(miss, len(gd.vals), pos)
+    sym = pos.astype(np.int32)
+    sym[miss] = len(gd.vals)
     return sym, v[miss]
 
 

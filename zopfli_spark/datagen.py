@@ -81,15 +81,18 @@ def gen_docs(indices: np.ndarray, seed: int) -> pd.DataFrame:
 
 def synth_tokens_df(spark: SparkSession, n_docs: int, seed: int = 42, parallelism: int | None = None) -> DataFrame:
     """Distributed deterministic tokens table."""
-    from .deploy import ensure_shipped
+    from .deploy import ensure_shipped, forget_zip_finders
 
     ensure_shipped(spark)
     parallelism = parallelism or spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b):
-                yield gen_docs(b["id"].to_numpy(), seed)
+        try:
+            for b in batches:
+                if len(b):
+                    yield gen_docs(b["id"].to_numpy(), seed)
+        finally:
+            forget_zip_finders()
 
     return (
         spark.range(n_docs, numPartitions=parallelism)

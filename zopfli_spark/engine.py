@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .codecs.kernels import GROUP_HUFFMAN
 from .config import DEFAULT_CONFIG, EngineConfig
-from .deploy import ensure_shipped
+from .deploy import ensure_shipped, forget_zip_finders
 from .lineage import (
     group_content_hash,
     hints_dict,
@@ -1181,11 +1181,18 @@ def encode_table(
     # (asserted in tests/test_plan_shape.py).
     n_parts = max(1, num_groups)
     grouped = grouped.repartitionById(n_parts, F.col(GROUP_COL))
+    # the UDFs below forget the worker's zip finders when they finish
+    # (deploy.forget_zip_finders); _encode_group itself stays pure, because
+    # the driver-side replay and the tests call it directly
     if lineage is None:
-        return grouped.groupBy(GROUP_COL).applyInArrow(
-            lambda tbl: _encode_group(tbl, config, hints=hints),
-            schema=PAGES_SCHEMA,
-        )
+
+        def enc(tbl: pa.Table) -> pa.Table:
+            try:
+                return _encode_group(tbl, config, hints=hints)
+            finally:
+                forget_zip_finders()
+
+        return grouped.groupBy(GROUP_COL).applyInArrow(enc, schema=PAGES_SCHEMA)
     # resume without a driver collect: per-group content keys are aggregated
     # JVM-side, equi-joined against the lineage table, and the matching plans
     # cogrouped into the encode UDF (one tiny extra shuffle of plan rows;
@@ -1208,15 +1215,17 @@ def encode_table(
         # stay co-partitioned and no re-shuffle is inserted above either
         .repartitionById(n_parts, F.col(GROUP_COL))
     )
+
+    def enc_resume(left: pa.Table, right: pa.Table) -> pa.Table:
+        try:
+            return _encode_group(left, config, plan_tbl=right, hints=hints)
+        finally:
+            forget_zip_finders()
+
     return (
         grouped.groupBy(GROUP_COL)
         .cogroup(plans.groupBy(GROUP_COL))
-        .applyInArrow(
-            lambda left, right: _encode_group(
-                left, config, plan_tbl=right, hints=hints
-            ),
-            schema=PAGES_SCHEMA,
-        )
+        .applyInArrow(enc_resume, schema=PAGES_SCHEMA)
     )
 
 
@@ -1286,42 +1295,45 @@ def decode_table(
         # raises loudly (decode_page) — e.g. after an arbitrary repartition;
         # keep pages grouped by part_id with page_id order intact.
         cur_gd = None
-        for b in batches:
-            headers = b.column(b.schema.get_field_index("header"))
-            payloads = b.column(b.schema.get_field_index("payload"))
-            checksums = b.column(b.schema.get_field_index("checksum"))
-            docs_l, srcs_l, lens_l, vals_l = [], [], [], []
-            acc_values = 0
-            for header, payload, checksum in zip(headers, payloads, checksums):
-                hdr = header.as_py()
-                if len(hdr) == 0:
-                    import zlib as _zlib
+        try:
+            for b in batches:
+                headers = b.column(b.schema.get_field_index("header"))
+                payloads = b.column(b.schema.get_field_index("payload"))
+                checksums = b.column(b.schema.get_field_index("checksum"))
+                docs_l, srcs_l, lens_l, vals_l = [], [], [], []
+                acc_values = 0
+                for header, payload, checksum in zip(headers, payloads, checksums):
+                    hdr = header.as_py()
+                    if len(hdr) == 0:
+                        import zlib as _zlib
 
-                    from .codecs.kernels import GroupDict
+                        from .codecs.kernels import GroupDict
 
-                    blob = payload.as_py()
-                    if verify and _zlib.crc32(blob) != int(checksum.as_py()):
-                        raise ValueError("group dictionary row checksum mismatch")
-                    cur_gd = GroupDict(blob)
-                    continue
-                doc_ids, sources, lens, values = decode_page(
-                    hdr,
-                    payload.as_py(),
-                    int(checksum.as_py()) if verify else None,
-                    split_rows=False,
-                    group_dict=cur_gd,
-                )
-                docs_l.append(doc_ids)
-                srcs_l.append(sources)
-                lens_l.append(lens)
-                vals_l.append(values)
-                acc_values += len(values)
-                if acc_values >= _FLUSH_VALUES:
+                        blob = payload.as_py()
+                        if verify and _zlib.crc32(blob) != int(checksum.as_py()):
+                            raise ValueError("group dictionary row checksum mismatch")
+                        cur_gd = GroupDict(blob)
+                        continue
+                    doc_ids, sources, lens, values = decode_page(
+                        hdr,
+                        payload.as_py(),
+                        int(checksum.as_py()) if verify else None,
+                        split_rows=False,
+                        group_dict=cur_gd,
+                    )
+                    docs_l.append(doc_ids)
+                    srcs_l.append(sources)
+                    lens_l.append(lens)
+                    vals_l.append(values)
+                    acc_values += len(values)
+                    if acc_values >= _FLUSH_VALUES:
+                        yield flush(docs_l, srcs_l, lens_l, vals_l)
+                        docs_l, srcs_l, lens_l, vals_l = [], [], [], []
+                        acc_values = 0
+                if docs_l:
                     yield flush(docs_l, srcs_l, lens_l, vals_l)
-                    docs_l, srcs_l, lens_l, vals_l = [], [], [], []
-                    acc_values = 0
-            if docs_l:
-                yield flush(docs_l, srcs_l, lens_l, vals_l)
+        finally:
+            forget_zip_finders()
 
     cols = ["header", "payload", "checksum"]
     selected = pages.select(*cols)

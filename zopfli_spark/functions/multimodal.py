@@ -170,7 +170,7 @@ def extract_features(
     ``decoders``: 'stub' (deterministic fakes — the oracle path), 'auto'
     (real Pillow/pyav codecs when importable, see :func:`resolve_decoders`),
     or an explicit {kind: callable} dict."""
-    from ..deploy import ensure_shipped
+    from ..deploy import ensure_shipped, forget_zip_finders
 
     ensure_shipped(media.sparkSession)
     decoder_map = (
@@ -178,60 +178,63 @@ def extract_features(
     )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            ids = tbl.column("media_id").to_pylist()
-            kinds = tbl.column("kind").to_pylist()
-            payloads = tbl.column("payload").to_pylist()
-            widths = tbl.column("width").to_pylist()
-            heights = tbl.column("height").to_pylist()
-            frames = tbl.column("n_frames").to_pylist()
-            cols = {f.name: [] for f in _FEATURES_ARROW}
-            rates = tbl.column("sample_rate").to_pylist()
-            for mid, kind, payload, w, h, nf, sr in zip(
-                ids, kinds, payloads, widths, heights, frames, rates
-            ):
-                if kind == "audio":
-                    # audio path: resample-to-fixed-length + mean-power
-                    # "luma" analog so the output schema stays uniform
-                    pcm = fake_decode_pcm(payload, sr or 16000, max((sr or 16000) // 4, out_w * out_h))
-                    idx = (np.arange(out_w * out_h) * len(pcm) // (out_w * out_h)).astype(np.int64)
-                    feat = np.abs(pcm[idx]).reshape(out_h, out_w) * 255.0
+        try:
+            for b in batches:
+                tbl = pa.Table.from_batches([b])
+                ids = tbl.column("media_id").to_pylist()
+                kinds = tbl.column("kind").to_pylist()
+                payloads = tbl.column("payload").to_pylist()
+                widths = tbl.column("width").to_pylist()
+                heights = tbl.column("height").to_pylist()
+                frames = tbl.column("n_frames").to_pylist()
+                cols = {f.name: [] for f in _FEATURES_ARROW}
+                rates = tbl.column("sample_rate").to_pylist()
+                for mid, kind, payload, w, h, nf, sr in zip(
+                    ids, kinds, payloads, widths, heights, frames, rates
+                ):
+                    if kind == "audio":
+                        # audio path: resample-to-fixed-length + mean-power
+                        # "luma" analog so the output schema stays uniform
+                        pcm = fake_decode_pcm(payload, sr or 16000, max((sr or 16000) // 4, out_w * out_h))
+                        idx = (np.arange(out_w * out_h) * len(pcm) // (out_w * out_h)).astype(np.int64)
+                        feat = np.abs(pcm[idx]).reshape(out_h, out_w) * 255.0
+                        cols["media_id"].append(mid)
+                        cols["kind"].append(kind)
+                        cols["out_width"].append(out_w)
+                        cols["out_height"].append(out_h)
+                        cols["n_frames_sampled"].append(1)
+                        cols["mean_luma"].append(float(feat.mean()))
+                        cols["feature"].append(
+                            np.ascontiguousarray(feat, dtype=np.float32).tobytes()
+                        )
+                        continue
+                    decoder = decoder_map.get(kind)
+                    if decoder is None:
+                        raise NotImplementedError(f"no decoder for kind={kind!r}")
+                    clip = decoder(payload, w, h, max(nf or 1, 1))
+                    sel = _frame_sample(clip.shape[0], max_frames)
+                    sampled = clip[sel]
+                    resized = np.stack([_resize_nn(f, out_w, out_h) for f in sampled])
+                    luma = (
+                        0.299 * resized[..., 0]
+                        + 0.587 * resized[..., 1]
+                        + 0.114 * resized[..., 2]
+                    )
                     cols["media_id"].append(mid)
                     cols["kind"].append(kind)
                     cols["out_width"].append(out_w)
                     cols["out_height"].append(out_h)
-                    cols["n_frames_sampled"].append(1)
-                    cols["mean_luma"].append(float(feat.mean()))
+                    cols["n_frames_sampled"].append(len(sel))
+                    cols["mean_luma"].append(float(luma.mean()))
                     cols["feature"].append(
-                        np.ascontiguousarray(feat, dtype=np.float32).tobytes()
+                        np.ascontiguousarray(luma.mean(axis=0), dtype=np.float32).tobytes()
                     )
-                    continue
-                decoder = decoder_map.get(kind)
-                if decoder is None:
-                    raise NotImplementedError(f"no decoder for kind={kind!r}")
-                clip = decoder(payload, w, h, max(nf or 1, 1))
-                sel = _frame_sample(clip.shape[0], max_frames)
-                sampled = clip[sel]
-                resized = np.stack([_resize_nn(f, out_w, out_h) for f in sampled])
-                luma = (
-                    0.299 * resized[..., 0]
-                    + 0.587 * resized[..., 1]
-                    + 0.114 * resized[..., 2]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(cols[f.name], type=f.type) for f in _FEATURES_ARROW],
+                    schema=_FEATURES_ARROW,
                 )
-                cols["media_id"].append(mid)
-                cols["kind"].append(kind)
-                cols["out_width"].append(out_w)
-                cols["out_height"].append(out_h)
-                cols["n_frames_sampled"].append(len(sel))
-                cols["mean_luma"].append(float(luma.mean()))
-                cols["feature"].append(
-                    np.ascontiguousarray(luma.mean(axis=0), dtype=np.float32).tobytes()
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=f.type) for f in _FEATURES_ARROW],
-                schema=_FEATURES_ARROW,
-            )
+        finally:
+            forget_zip_finders()
 
     return media.mapInArrow(run, schema=FEATURES_SCHEMA)
 

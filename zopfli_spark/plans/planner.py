@@ -18,8 +18,9 @@ Design properties, in scale order:
 * **Skew-safe**: long-tail docs (n_tok ≥ giant_doc_values) are routed to a
   separate keyspace of long-tail groups so one 10M-token doc never inflates a
   regular group (explicit salting for heavy keys — SURVEY.md §7 hard part c).
-* **One shuffle**: the only wide exchange in the encode path is the
-  groupBy(group) feeding applyInPandas.
+* **One shuffle**: the only wide exchange in the encode path is
+  ``repartitionById(num_groups, group)`` (group g on partition g), feeding
+  the grouped ``applyInArrow`` encode with no further exchange.
 """
 
 from __future__ import annotations
