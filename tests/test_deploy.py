@@ -5,6 +5,9 @@ imports from those zips."""
 from __future__ import annotations
 
 import importlib
+import json
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -82,3 +85,92 @@ def test_forget_zip_finders_drops_only_zip_finders(zipped_pkg, monkeypatch):
     assert beta.name() == "beta"
     assert mod.name() == "alpha"
     assert reads == []
+
+
+# One Spark process on local[1], so every Python task reuses one worker.
+# Before each engine step a "dirty" task imports a module that does not
+# exist, which scans the whole path and caches a finder for every zip on it
+# (pyspark.zip at least); a probe task right after the step counts the zip
+# finders left on the worker, and must find none. Both are pickled by value
+# (they are defined in __main__), so the probe imports nothing new and adds
+# no finder of its own.
+_ENGINE_UDFS_CODE = r'''
+import json, sys
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[1]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.ui.showConsoleProgress", "false")
+    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    .getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+sys.path.insert(0, %(repo)r)
+from zopfli_spark import EngineConfig, decode_table, encode_table
+from zopfli_spark.datagen import synth_tokens_df
+from zopfli_spark.functions.multimodal import extract_features, synth_media_df
+from zopfli_spark.lineage import lineage_from_pages
+
+
+def count_zip_finders(batches, dirty=False):
+    import zipimport
+
+    import pyarrow as pa
+
+    for _ in batches:
+        pass
+    if dirty:
+        try:
+            import zs_no_such_module  # noqa: F401
+        except ImportError:
+            pass
+    n = sum(
+        isinstance(f, zipimport.zipimporter)
+        for f in sys.path_importer_cache.values()
+    )
+    yield pa.RecordBatch.from_pydict({"n": [n]})
+
+
+def zip_finders(dirty=False):
+    udf = lambda it: count_zip_finders(it, dirty)
+    return spark.range(1, numPartitions=1).mapInArrow(udf, "n long").collect()[0].n
+
+
+cfg = EngineConfig(page_budget_values=20_000, group_budget_values=80_000,
+                   giant_doc_values=40_000)
+dirty, seen = {}, {}
+
+
+def step(name, run):
+    dirty[name] = zip_finders(dirty=True)
+    out = run()
+    seen[name] = zip_finders()
+    return out
+
+
+tokens = step("datagen", lambda: synth_tokens_df(spark, 200, seed=7).localCheckpoint())
+pages = step("encode", lambda: encode_table(tokens, cfg).localCheckpoint())
+step("decode", lambda: decode_table(pages).collect())
+lineage = lineage_from_pages(pages, cfg.mode).localCheckpoint()
+step("resume", lambda: encode_table(tokens, cfg, lineage=lineage).localCheckpoint())
+step("multimodal", lambda: extract_features(synth_media_df(spark, 4, seed=3)).collect())
+print("SEEN:" + json.dumps({"dirty": dirty, "seen": seen}))
+spark.stop()
+'''
+
+
+def test_engine_udfs_leave_no_zip_finder_on_reused_worker():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [sys.executable, "-c", _ENGINE_UDFS_CODE % {"repo": repo}],
+        capture_output=True,
+        text=True,
+        timeout=400,
+    )
+    lines = [l for l in p.stdout.splitlines() if l.startswith("SEEN:")]
+    assert lines, p.stderr[-1500:]
+    out = json.loads(lines[-1][5:])
+    dirty, seen = out["dirty"], out["seen"]
+    # before each step the worker holds zip finders, so a step that does not
+    # forget them shows up below
+    assert min(dirty.values()) > 0, dirty
+    assert seen == dict.fromkeys(dirty, 0), seen

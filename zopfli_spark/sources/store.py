@@ -461,11 +461,8 @@ def _commit_manifest(
             # name itself is never read by anyone
             if os.path.exists(marker_tmp):
                 os.unlink(marker_tmp)
-        # advisory cache for humans/old readers; correctness never reads it.
-        # The temp name is per commit: with a shared one, a concurrent
-        # committer's replace could move it away first, and this call would
-        # raise after its commit had landed
-        ptr_tmp = os.path.join(d, f".LATEST.{snap_id}.tmp")
+        # advisory cache for humans/old readers; correctness never reads it
+        ptr_tmp = os.path.join(d, ".LATEST.tmp")
         with open(ptr_tmp, "w") as fh:
             fh.write(name)
         os.replace(ptr_tmp, os.path.join(d, "LATEST"))
