@@ -41,9 +41,12 @@ def root(tmp_path):
 
 
 def _page_sig(spark, root):
+    return _sig(read_pages(spark, root))
+
+
+def _sig(pages):
     return (
-        read_pages(spark, root)
-        .orderBy("part_id", "page_id")
+        pages.orderBy("part_id", "page_id")
         .select(
             "part_id", "page_id", "codec", "checksum", "enc_bytes",
             F.crc32("payload").alias("pc"), F.crc32("header").alias("hc"),
@@ -249,6 +252,48 @@ def test_read_lineage_handles_pre_fix_int32_mode_files(spark, tmp_path):
     assert sorted(r["mode"] for r in read_lineage(spark, root).collect()) == [3, 2**40]
     # missing-lineage path still returns None
     assert read_lineage(spark, str(tmp_path / "nope")) is None
+
+
+def test_upgrade_from_lineage_without_part_id(spark, root):
+    """Upgrade path: lineage files written before the part_id column read it
+    as null and are never delivered, so the first run on such a store
+    searches every group, to the bytes of a cold encode. Its own rows carry
+    part_id and win the per-key dedup over the legacy rows, whichever side
+    of them the legacy files sit on, so the next run hits every group."""
+    from zopfli_spark import encode_table
+    from zopfli_spark.lineage import lineage_from_pages
+
+    cfg = EngineConfig(**CFG_KW)
+    df = synth_tokens_df(spark, 300, seed=11).cache()
+    cold = encode_table(df, cfg).cache()
+    legacy = lineage_from_pages(cold, cfg.mode).drop("part_id")
+    assert len(legacy.columns) == 6
+    lin_dir = os.path.join(root, "lineage")
+    legacy.write.parquet(lin_dir)
+    cols = ["part_id", "page_id", "codec", "checksum", "enc_bytes", "pc", "hc"]
+    cold_rows = list(_sig(cold)[cols].itertuples(index=False))
+
+    encode_to_store(df, root, cfg, run_id="r1")
+    sig1 = _page_sig(spark, root)
+    assert (sig1["resumed"] == 0).all()
+    assert list(sig1[cols].itertuples(index=False)) == cold_rows
+
+    # legacy rows now sit both before and after the routed ones
+    legacy.write.mode("append").parquet(lin_dir)
+    n_groups = cold.select("part_id").distinct().count()
+    lin = read_lineage(spark, root)
+    assert lin.count() == n_groups
+    assert lin.filter(F.col("part_id").isNull()).count() == 0
+    encode_to_store(df, root, cfg, run_id="r2")
+    sig2 = _page_sig(spark, root)
+    assert (sig2["resumed"] == 1).all(), "every group should hit the lineage"
+    assert list(sig2[cols].itertuples(index=False)) == cold_rows
+
+    # compaction keeps the routed row of every key
+    compact_lineage(root, spark)
+    on_disk = spark.read.parquet(lin_dir)
+    assert on_disk.count() == n_groups
+    assert on_disk.filter(F.col("part_id").isNull()).count() == 0
 
 
 def test_rle_overflow_crafted_blob_raises_not_crashes():

@@ -60,9 +60,16 @@ def test_decode_prunes_page_columns(spark):
 def test_resume_cogroup_input_side_single_shuffle(spark):
     df = synth_tokens_df(spark, 200, seed=1)
     pages = encode_table(df, CFG).cache()
-    resumed = encode_table(df, CFG, lineage=lineage_from_pages(pages, CFG.mode))
+    # checkpointed, so the plans side prints no cached copy of the input
+    lineage = lineage_from_pages(pages, CFG.mode).localCheckpoint()
+    resumed = encode_table(df, CFG, lineage=lineage)
     plan = _plan(resumed)
     assert "FlatMapCoGroupsInArrow" in plan
+    # plans are routed by group id: the input is scanned once, and no
+    # content-key aggregate or join runs beside it
+    assert plan.count("Range (") == 1, plan
+    assert "bit_xor" not in plan, plan
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan, plan
     # children print as ":- <input side>" then "+- <plans side>" at the same
     # indent; the input side is every line up to the plans-side child
     lines = plan.splitlines()

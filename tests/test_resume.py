@@ -94,3 +94,44 @@ def test_lineage_must_be_a_dataframe(spark, tokens_df):
     plans = {(1, CFG.mode): (2, '[{"page_id":0,"n_rows":1,"codec":"plain"}]')}
     with pytest.raises(TypeError, match="DataFrame"):
         encode_table(tokens_df, CFG, lineage=plans)
+
+
+def test_foreign_geometry_lineage_is_ignored(spark):
+    """Lineage recorded at a larger num_groups, applied to a smaller input
+    with fewer groups: plan rows whose group id this run does not have
+    (ids >= n_parts, long-tail ids) reach the cogroup with no input rows and
+    emit nothing, and rows at shared ids carry other content, so they fail
+    the strong-hash check. Nothing resumes, and the bytes equal a cold
+    encode; with the input's own plans added, every group resumes."""
+    from zopfli_spark.plans.planner import plan_groups
+
+    # a low giant threshold puts long-tail groups in both runs
+    cfg = EngineConfig(
+        page_budget_values=20_000,
+        group_budget_values=80_000,
+        giant_doc_values=3_000,
+        max_pages_per_group=16,
+    )
+    big = synth_tokens_df(spark, 500, seed=42).cache()
+    small = big.filter(F.col("doc_id") < "doc_000000000150").cache()
+    _, g_big = plan_groups(big, cfg)
+    _, g_small = plan_groups(small, cfg)
+    assert g_small < g_big
+    lineage = lineage_from_pages(encode_table(big, cfg), cfg.mode).cache()
+    ids = {r["part_id"] for r in lineage.select("part_id").collect()}
+    assert max(ids) >= g_big, "no long-tail group in the recorded lineage"
+    assert {i for i in ids if i >= 2 * g_small}, "no id outside this run's keyspace"
+
+    cold_pages = encode_table(small, cfg).cache()
+    cold = _page_signature(cold_pages)
+    resumed = _page_signature(encode_table(small, cfg, lineage=lineage))
+    assert (resumed["resumed"] == 0).all()
+    cols = ["part_id", "page_id", "codec", "checksum", "enc_bytes", "payload_crc", "header_crc"]
+    assert cold[cols].equals(resumed[cols])
+
+    # beside the small run's own plans, the foreign rows at shared ids do
+    # not shadow them: each group picks the plan whose hash matches
+    own = lineage_from_pages(cold_pages, cfg.mode)
+    mixed = _page_signature(encode_table(small, cfg, lineage=lineage.unionByName(own)))
+    assert (mixed["resumed"] == 1).all()
+    assert cold[cols].equals(mixed[cols])

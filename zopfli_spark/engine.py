@@ -428,9 +428,9 @@ def _encode_group(
     sources = _string_col(tbl, "source")
     values, lens = _tokens_flat(tbl)
     # order-insensitive content key: XOR of the JVM-computed per-row hashes —
-    # the lineage join key, computable on both sides of the shuffle without
-    # overflow (ANSI mode); the BLAKE2b content_hash below guards the weaker
-    # XOR against multiset cancellation before any plan is trusted
+    # the key of split hints and of the store's per-key lineage dedup; the
+    # BLAKE2b content_hash below guards the weaker XOR against multiset
+    # cancellation before any hint or plan is trusted
     row_h = tbl.column(ROW_HASH_COL).to_numpy(zero_copy_only=False).astype(np.uint64)
     content_key = (
         int(np.bitwise_xor.reduce(row_h).view(np.int64)) if len(row_h) else 0
@@ -468,11 +468,13 @@ def _encode_group(
         # silently disable lineage resume (ADVICE r2).
         plan_tbl = None
     if plan_tbl is not None and plan_tbl.num_rows:
-        # cogroup-delivered lineage: verify the strong hash before trusting
-        # the plan (portability-check discipline of the reference DB
-        # records, src/zopfli/deflate.c:1195-1199)
-        if int(plan_tbl.column("content_hash")[0].as_py()) == content_hash:
-            plan = plan_tbl.column("plan")[0].as_py()
+        # cogroup-delivered lineage: every plan recorded under this group id
+        # arrives; trust the first whose strong hash matches the group's
+        # content (portability-check discipline of the reference DB records,
+        # src/zopfli/deflate.c:1195-1199)
+        hashes = plan_tbl.column("content_hash").to_pylist()
+        if content_hash in hashes:
+            plan = plan_tbl.column("plan")[hashes.index(content_hash)].as_py()
     forced_codecs: list[str] | None = None
     val_offsets = np.concatenate(([0], np.cumsum(lens)))
     if plan is not None:
@@ -1154,11 +1156,15 @@ def encode_table(
     A hint whose strong hash matches the group's content pins the page
     boundaries exactly (codec argmin still runs); stale hints are ignored.
     Hints are boundary lists, ~bytes per group — broadcast-sized at any data
-    scale (unlike lineage plans, which ride the cogroup join).
+    scale (unlike lineage plans, which ride the cogroup).
 
     ``lineage`` (the StatsDB in-side): None, or a lineage DataFrame
     (store.read_lineage / lineage.lineage_from_pages), whose plans have one
-    delivery, the cogroup join below; anything else raises TypeError."""
+    delivery, the cogroup below: routed by group id, verified by content
+    hash. A content match recorded under a different group id (num_groups
+    changed while a group's whole doc set recurred) is not delivered, and
+    that group is searched again, to the same bytes. Anything else raises
+    TypeError."""
     if lineage is not None and not isinstance(lineage, DataFrame):
         raise TypeError(
             "lineage must be None or a DataFrame of LINEAGE_SCHEMA rows, "
@@ -1193,31 +1199,24 @@ def encode_table(
                 forget_zip_finders()
 
         return grouped.groupBy(GROUP_COL).applyInArrow(enc, schema=PAGES_SCHEMA)
-    # resume without a driver collect: per-group content keys are aggregated
-    # JVM-side, equi-joined against the lineage table, and the matching plans
-    # cogrouped into the encode UDF (one tiny extra shuffle of plan rows;
-    # nothing is broadcast through the driver)
-    keys = grouped.groupBy(GROUP_COL).agg(
-        F.bit_xor(F.col(ROW_HASH_COL)).alias("content_key")
-    ).select(
-        # fresh attribute ids: the cogroup below would otherwise see an
-        # ambiguous self-join on the group column
-        (F.col(GROUP_COL) + F.lit(0)).cast("int").alias(GROUP_COL),
-        F.col("content_key"),
-    )
+    # resume without a driver collect: routed by group id, verified by
+    # content hash. Plan rows go to the group id they were recorded under,
+    # placed like the input side (the cogroup's children stay co-partitioned
+    # and no re-shuffle is inserted above either); the UDF trusts only a
+    # plan whose strong hash matches its group's content.
     plans = (
-        keys.join(
-            lineage.filter(F.col("mode") == F.lit(config.mode)),
-            "content_key",
+        lineage.filter(
+            (F.col("mode") == F.lit(config.mode)) & F.col("part_id").isNotNull()
         )
-        .select(GROUP_COL, "content_hash", "plan")
-        # same placement as the input side, so the cogroup's children
-        # stay co-partitioned and no re-shuffle is inserted above either
+        .select(F.col("part_id").alias(GROUP_COL), "content_hash", "plan")
         .repartitionById(n_parts, F.col(GROUP_COL))
     )
 
     def enc_resume(left: pa.Table, right: pa.Table) -> pa.Table:
         try:
+            if not left.num_rows:
+                # plans recorded under a group id this run does not have
+                return _PAGES_ARROW.empty_table()
             return _encode_group(left, config, plan_tbl=right, hints=hints)
         finally:
             forget_zip_finders()

@@ -11,15 +11,19 @@ recomputes the content hash, and on a hit skips both the split search and the
 codec argmin, force-encoding the recorded winners — deterministically
 byte-identical to the original run.
 
-Keys are content-addressed (BLAKE2b-64 of the group's raw value bytes + doc
-ids), never positional, so lineage survives repartitioning — the same
-portability discipline as the reference's cross-arch DB records
-(deflate.c:1195-1199).
+Plans are verified by content (BLAKE2b-64 of the group's raw value bytes +
+doc ids), never trusted by position — the same portability discipline as the
+reference's cross-arch DB records (deflate.c:1195-1199).
 
 Lineage is a DataFrame (store.read_lineage, or lineage_from_pages) and has
-one delivery: engine.encode_table equi-joins it against the per-group content
-keys and cogroups the matching plans into the encode UDF, so no plan is
-collected to the driver at any scale.
+one delivery: routed by group id, verified by content hash. Each row carries
+the ``part_id`` (group id) it was recorded under; engine.encode_table places
+plan rows on that group's partition and cogroups them into the encode UDF,
+which trusts only a plan whose content_hash equals the group's. Group ids are
+a pure function of (doc_id, Σ n_tok, config) (plans/planner.py), so the same
+content lands on the same id at the same num_groups; no plan is collected to
+the driver at any scale. Rows from stores written before ``part_id`` existed
+read it as null and are never delivered.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 LINEAGE_SCHEMA = (
     "content_key long, content_hash long, mode long, n_values long, "
-    "n_rows int, plan string"
+    "n_rows int, plan string, part_id int"
 )
 
 
@@ -65,9 +69,12 @@ def lineage_from_pages(pages: DataFrame, mode: int) -> DataFrame:
         "n_rows",
         "n_values",
         "codec",
+        "part_id",
     )
     return (
-        per_page.groupBy("content_key", "content_hash_group")
+        # part_id is constant within a group: it only carries the group id
+        # along as the routing key
+        per_page.groupBy("content_key", "content_hash_group", "part_id")
         .agg(
             F.sum("n_values").alias("n_values"),
             F.sum("n_rows").alias("n_rows"),
@@ -88,6 +95,7 @@ def lineage_from_pages(pages: DataFrame, mode: int) -> DataFrame:
             "n_values",
             F.col("n_rows").cast("int"),
             F.col("plan_struct").alias("plan"),
+            F.col("part_id").cast("int"),
         )
     )
 

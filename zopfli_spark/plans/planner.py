@@ -39,9 +39,9 @@ def plan_groups(
     """Attach the deterministic group id column plus a per-row content hash.
 
     The row hash (xxhash64 over the full row) sums — order-insensitively —
-    into the group content key used for lineage joins: computable JVM-side
-    before the shuffle AND inside the UDF after it, with no driver round-trip
-    (the scalable replacement for collecting a lineage dict).
+    into the group content key that keys split hints and lineage records.
+    Lineage plans themselves are routed by the group id, which is why
+    membership must stay a pure function of content and total.
 
     ``total_values``: caller-supplied Σ n_tok (catalog stats / prior-run
     metrics / a previous count). Skips the pre-encode full scan — at 100 TB

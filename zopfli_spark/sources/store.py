@@ -70,6 +70,21 @@ def append_lineage(pages: DataFrame, root: str, config: EngineConfig = DEFAULT_C
     )
 
 
+def _live_lineage(df: DataFrame) -> DataFrame:
+    """One row per (content_key, mode) — DB-overwrite semantics of the
+    reference's StatsDBSave (src/zopfli/deflate.c:1230-1272). A row that
+    carries its group id wins over a legacy row whose part_id is null: only
+    rows with a part_id are delivered on resume, so an upgraded store that
+    kept the legacy row for a key would lose that hit on every run."""
+    rest = [c for c in df.columns if c not in ("content_key", "mode")]
+    return (
+        df.groupBy("content_key", "mode")
+        .agg(F.max_by(F.struct(*rest), F.col("part_id").isNotNull()).alias("_r"))
+        .select("content_key", "mode", "_r.*")
+        .select(*df.columns)
+    )
+
+
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
     from ..lineage import LINEAGE_SCHEMA
 
@@ -79,13 +94,12 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
         # `mode long` column, so a store whose early runs predate the
         # int64-mode fix (r4) reads cleanly alongside new appends — a plain
         # schema-inferred read fails with PARQUET_COLUMN_DATA_TYPE_MISMATCH
-        # on such mixed stores (verified empirically on Spark 4.1)
+        # on such mixed stores (verified empirically on Spark 4.1); files
+        # written before part_id existed read it as null
         df = spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     except Exception:
         return None
-    # latest record wins per (content_key, mode) — DB-overwrite semantics of
-    # the reference's StatsDBSave (src/zopfli/deflate.c:1230-1272)
-    return df.dropDuplicates(["content_key", "mode"])
+    return _live_lineage(df)
 
 
 def compact_lineage(root: str, spark: SparkSession) -> int:
@@ -126,7 +140,7 @@ def compact_lineage(root: str, spark: SparkSession) -> int:
         df = spark.read.schema(LINEAGE_SCHEMA).parquet(*old_files)
     except Exception:
         return -1
-    live = df.dropDuplicates(["content_key", "mode"])
+    live = _live_lineage(df)
     tmp = path + ".compact.tmp"
     _shutil.rmtree(tmp, ignore_errors=True)
     live.write.mode("overwrite").parquet(tmp)
@@ -462,7 +476,9 @@ def _commit_manifest(
             if os.path.exists(marker_tmp):
                 os.unlink(marker_tmp)
         # advisory cache for humans/old readers; correctness never reads it
-        ptr_tmp = os.path.join(d, ".LATEST.tmp")
+        # a per-commit temp name: with one shared name, an overlapping
+        # commit's os.replace could move this temp file away first
+        ptr_tmp = os.path.join(d, f".LATEST.{snap_id}.tmp")
         with open(ptr_tmp, "w") as fh:
             fh.write(name)
         os.replace(ptr_tmp, os.path.join(d, "LATEST"))
