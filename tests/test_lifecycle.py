@@ -273,6 +273,9 @@ def test_upgrade_from_lineage_without_part_id(spark, root):
     cols = ["part_id", "page_id", "codec", "checksum", "enc_bytes", "pc", "hc"]
     cold_rows = list(_sig(cold)[cols].itertuples(index=False))
 
+    # a key with only legacy rows keeps one
+    assert read_lineage(spark, root).count() == legacy.count()
+
     encode_to_store(df, root, cfg, run_id="r1")
     sig1 = _page_sig(spark, root)
     assert (sig1["resumed"] == 0).all()
@@ -294,6 +297,50 @@ def test_upgrade_from_lineage_without_part_id(spark, root):
     on_disk = spark.read.parquet(lin_dir)
     assert on_disk.count() == n_groups
     assert on_disk.filter(F.col("part_id").isNull()).count() == 0
+
+
+def test_same_content_at_two_group_ids_both_resume(spark, root):
+    """The same group content recorded at two num_groups sits under two
+    group ids. Resume delivers a plan only to the id it was recorded under,
+    so the store keeps a row at each id, through compaction too, and a run
+    at either geometry resumes."""
+    from zopfli_spark.plans.planner import GROUP_COL, plan_groups
+
+    y = synth_tokens_df(spark, 300, seed=11).cache()
+    total = y.agg(F.sum("n_tok")).first()[0]
+    # a budget just under y's total splits y into two groups; y's group 1
+    # alone fits one group, so as its own input it is group 0, same content
+    cfg = EngineConfig(
+        **{**CFG_KW, "group_budget_values": total - 1, "giant_doc_values": total}
+    )
+    grouped, n = plan_groups(y, cfg)
+    assert n == 2
+    x = grouped.filter(F.col(GROUP_COL) == 1).select(*y.columns).cache()
+    assert plan_groups(x, cfg)[1] == 1
+
+    encode_to_store(y, root, cfg, run_id="y1")
+    encode_to_store(x, root, cfg, run_id="x1")
+    x_sig = _page_sig(spark, root)
+    assert (x_sig["resumed"] == 0).all(), "nothing was recorded under id 0"
+
+    def ids_of_x_content():
+        lin = read_lineage(spark, root)
+        key = lin.filter(F.col("part_id") == 0).join(
+            lin.filter(F.col("part_id") == 1), ["content_key", "content_hash"]
+        ).select("content_key")
+        return sorted(
+            r["part_id"] for r in lin.join(key, "content_key").select("part_id").collect()
+        )
+
+    assert ids_of_x_content() == [0, 1]
+    compact_lineage(root, spark)
+    assert ids_of_x_content() == [0, 1]
+
+    for df, run_id in ((y, "y2"), (x, "x2")):
+        encode_to_store(df, root, cfg, run_id=run_id)
+        sig = _page_sig(spark, root)
+        assert (sig["resumed"] == 1).all(), f"{run_id} should hit every group"
+    assert sig.drop(columns="resumed").equals(x_sig.drop(columns="resumed"))
 
 
 def test_rle_overflow_crafted_blob_raises_not_crashes():

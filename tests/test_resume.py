@@ -98,14 +98,16 @@ def test_lineage_must_be_a_dataframe(spark, tokens_df):
 
 def test_foreign_geometry_lineage_is_ignored(spark):
     """Lineage recorded at a larger num_groups, applied to a smaller input
-    with fewer groups: plan rows whose group id this run does not have
-    (ids >= n_parts, long-tail ids) reach the cogroup with no input rows and
-    emit nothing, and rows at shared ids carry other content, so they fail
-    the strong-hash check. Nothing resumes, and the bytes equal a cold
-    encode; with the input's own plans added, every group resumes."""
-    from zopfli_spark.plans.planner import plan_groups
+    with fewer groups: plan rows at ids outside this run's keyspace never
+    leave the plan side, rows at keyspace ids the run has no doc at reach
+    the cogroup with no input rows and emit nothing, and rows at shared ids
+    carry other content, so they fail the strong-hash check. Nothing
+    resumes, and the bytes equal a cold encode; with the input's own plans
+    added, every group resumes."""
+    from zopfli_spark.plans.planner import GROUP_COL, plan_groups
 
-    # a low giant threshold puts long-tail groups in both runs
+    # a low giant threshold puts long-tail groups in the recorded run; the
+    # smaller input has no giant doc, so its long-tail ids [G, 2G) draw none
     cfg = EngineConfig(
         page_budget_values=20_000,
         group_budget_values=80_000,
@@ -113,7 +115,9 @@ def test_foreign_geometry_lineage_is_ignored(spark):
         max_pages_per_group=16,
     )
     big = synth_tokens_df(spark, 500, seed=42).cache()
-    small = big.filter(F.col("doc_id") < "doc_000000000150").cache()
+    small = big.filter(
+        (F.col("doc_id") < "doc_000000000150") & (F.col("n_tok") < cfg.giant_doc_values)
+    ).cache()
     _, g_big = plan_groups(big, cfg)
     _, g_small = plan_groups(small, cfg)
     assert g_small < g_big
@@ -121,6 +125,8 @@ def test_foreign_geometry_lineage_is_ignored(spark):
     ids = {r["part_id"] for r in lineage.select("part_id").collect()}
     assert max(ids) >= g_big, "no long-tail group in the recorded lineage"
     assert {i for i in ids if i >= 2 * g_small}, "no id outside this run's keyspace"
+    small_ids = {r[0] for r in plan_groups(small, cfg)[0].select(GROUP_COL).distinct().collect()}
+    assert {i for i in ids if i < 2 * g_small} - small_ids, "no empty-left cogroup"
 
     cold_pages = encode_table(small, cfg).cache()
     cold = _page_signature(cold_pages)

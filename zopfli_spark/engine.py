@@ -472,9 +472,9 @@ def _encode_group(
         # arrives; trust the first whose strong hash matches the group's
         # content (portability-check discipline of the reference DB records,
         # src/zopfli/deflate.c:1195-1199)
-        hashes = plan_tbl.column("content_hash").to_pylist()
-        if content_hash in hashes:
-            plan = plan_tbl.column("plan")[hashes.index(content_hash)].as_py()
+        hit = pc.index(plan_tbl.column("content_hash"), content_hash).as_py()
+        if hit >= 0:
+            plan = plan_tbl.column("plan")[hit].as_py()
     forced_codecs: list[str] | None = None
     val_offsets = np.concatenate(([0], np.cumsum(lens)))
     if plan is not None:
@@ -1200,13 +1200,14 @@ def encode_table(
 
         return grouped.groupBy(GROUP_COL).applyInArrow(enc, schema=PAGES_SCHEMA)
     # resume without a driver collect: routed by group id, verified by
-    # content hash. Plan rows go to the group id they were recorded under,
-    # placed like the input side (the cogroup's children stay co-partitioned
-    # and no re-shuffle is inserted above either); the UDF trusts only a
-    # plan whose strong hash matches its group's content.
+    # content hash. Plan rows at this run's ids (regular [0, G), long-tail
+    # [G, 2G); a legacy null part_id fails the range) go to the group id they
+    # were recorded under, placed like the input side, so the cogroup needs
+    # no re-shuffle; the UDF trusts only a plan whose strong hash matches.
     plans = (
         lineage.filter(
-            (F.col("mode") == F.lit(config.mode)) & F.col("part_id").isNotNull()
+            (F.col("mode") == F.lit(config.mode))
+            & F.col("part_id").between(0, 2 * n_parts - 1)
         )
         .select(F.col("part_id").alias(GROUP_COL), "content_hash", "plan")
         .repartitionById(n_parts, F.col(GROUP_COL))
@@ -1214,8 +1215,7 @@ def encode_table(
 
     def enc_resume(left: pa.Table, right: pa.Table) -> pa.Table:
         try:
-            if not left.num_rows:
-                # plans recorded under a group id this run does not have
+            if not left.num_rows:  # plans at an id that drew no doc
                 return _PAGES_ARROW.empty_table()
             return _encode_group(left, config, plan_tbl=right, hints=hints)
         finally:

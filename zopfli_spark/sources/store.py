@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..lineage import lineage_from_pages
@@ -71,16 +71,19 @@ def append_lineage(pages: DataFrame, root: str, config: EngineConfig = DEFAULT_C
 
 
 def _live_lineage(df: DataFrame) -> DataFrame:
-    """One row per (content_key, mode) — DB-overwrite semantics of the
-    reference's StatsDBSave (src/zopfli/deflate.c:1230-1272). A row that
-    carries its group id wins over a legacy row whose part_id is null: only
-    rows with a part_id are delivered on resume, so an upgraded store that
-    kept the legacy row for a key would lose that hit on every run."""
-    rest = [c for c in df.columns if c not in ("content_key", "mode")]
+    """One row per (content_key, mode, part_id) — DB-overwrite semantics of
+    the reference's StatsDBSave (src/zopfli/deflate.c:1230-1272), per group
+    id: resume delivers a plan only to the group id it was recorded under,
+    so the same content recorded at two num_groups keeps a row at each id.
+    A legacy row whose part_id is null (written before part_id existed) is
+    never delivered; it is dropped once its key has a row with a part_id."""
+    routed = F.bool_or(F.col("part_id").isNotNull()).over(
+        Window.partitionBy("content_key", "mode")
+    )
     return (
-        df.groupBy("content_key", "mode")
-        .agg(F.max_by(F.struct(*rest), F.col("part_id").isNotNull()).alias("_r"))
-        .select("content_key", "mode", "_r.*")
+        df.withColumn("_routed", routed)
+        .filter(F.col("part_id").isNotNull() | ~F.col("_routed"))
+        .dropDuplicates(["content_key", "mode", "part_id"])
         .select(*df.columns)
     )
 
@@ -103,7 +106,7 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
 
 
 def compact_lineage(root: str, spark: SparkSession) -> int:
-    """Rewrite the lineage table keeping one row per (content_key, mode) —
+    """Rewrite the lineage table keeping its live rows (:func:`_live_lineage`) —
     the StatsDB-lifecycle analog (reference src/zopfli/deflate.c:1164-1272
     keeps ONE record per (CRC, mode, size); ours appended every run forever,
     so resume shuffled an ever-growing full history — VERDICT r3 missing #1).
@@ -112,10 +115,11 @@ def compact_lineage(root: str, spark: SparkSession) -> int:
     would briefly leave no lineage at all, and a crash inside it silently
     destroyed the resume table): compacted files are moved INTO the live
     dir, then exactly the pre-existing file set is deleted. Every record for
-    a key is byte-identical (deterministic engine) and readers dedup, so
-    any interleaving — readers mid-compaction, a concurrent append (its new
-    files are not in the pre-listed set), a crash at any point — leaves a
-    table that is a superset of the live rows, never less.
+    a (content_key, mode, part_id) is byte-identical (deterministic engine)
+    and readers dedup, so any interleaving — readers mid-compaction, a
+    concurrent append (its new files are not in the pre-listed set), a crash
+    at any point — leaves a table that is a superset of the live rows, never
+    less.
     Returns the number of live rows kept, or -1 if there was no lineage."""
     import shutil as _shutil
     import uuid as _uuid
@@ -282,7 +286,7 @@ def encode_to_store(
     ``split_hints`` pins page boundaries (see engine.encode_table). When the
     append-only lineage dir has accumulated more than ``compact_after_files``
     parquet files, it is opportunistically compacted to one row per live key
-    so resume reads stay O(live groups), not O(run history)."""
+    and group id, so resume reads stay O(live groups), not O(run history)."""
     from ..engine import encode_table, metrics_table
 
     spark = df.sparkSession

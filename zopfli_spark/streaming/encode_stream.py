@@ -50,8 +50,9 @@ def encode_stream(
         write_pages(pages, root, mode="append")
         append_lineage(pages, root, config)
         # an always-on stream appends lineage every micro-batch forever;
-        # keep the resume table content-bounded (one row per live key, the
-        # StatsDB shape) via the same shared trigger as the batch path
+        # keep the resume table content-bounded (one row per live key and
+        # group id, the StatsDB shape) via the same shared trigger as the
+        # batch path
         maybe_compact_lineage(root, spark)
 
     writer = stream_df.writeStream.foreachBatch(process_batch).outputMode("append")
