@@ -108,8 +108,8 @@ class EngineConfig:
     #: dict header at fine page granularity; a shared table paid once per
     #: group removes it. Training set is content-pure (entropy-vs-floor rule
     #: + equal-weight KL refinement + greedy cardinality cap, see
-    #: engine._encode_group's _gh_ctx) so lineage replay reproduces the
-    #: dictionary byte-identically without re-running the adoption
+    #: engine.train_group_dict and GroupCtx.gh_dict) so lineage replay
+    #: reproduces the dictionary byte-identically without re-running the adoption
     #: comparison; out-of-dict values ride an ESCAPE code + literal side
     #: stream so heavy-tail pages can adopt without full coverage. Measured
     #: on the r5 mixture at the ratio() dials (with cluster_docs): a
@@ -119,8 +119,8 @@ class EngineConfig:
     #: turns both on — combined +9.1% ratio over the r4 ratio() notch on
     #: the same workload. With it on, the split estimator also prices every
     #: range as min(own entropy, bits under the shared group code) whenever
-    #: the allow-list admits group_huffman (engine._gh_split_bits); that is
-    #: estimator-only, so it adds nothing to the mode fingerprint
+    #: the allow-list admits group_huffman (engine.GroupCtx.gh_split_bits);
+    #: that is estimator-only, so it adds nothing to the mode fingerprint
     group_dict: bool = False
     #: conditional-entropy (distinctness) term in the split estimator (r6):
     #: bucket entropy saturates at log2(256) = 8 bits, so content families

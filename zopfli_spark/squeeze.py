@@ -34,7 +34,7 @@ import numpy as np
 EncodeFn = Callable[..., "tuple[bytes, bytes, str, int] | None"]
 
 
-def _page_sizes(pages: list[tuple[bytes, bytes, str, int]]) -> np.ndarray:
+def page_sizes(pages: list[tuple[bytes, bytes, str, int]]) -> np.ndarray:
     return np.array([len(h) + len(p) for h, p, _, _ in pages], dtype=np.int64)
 
 
@@ -54,7 +54,7 @@ def refine_boundaries(
         return row_bounds, pages, 0
     rng = np.random.Generator(np.random.PCG64(list(seed_key)))
     bounds = row_bounds.copy()
-    sizes = _page_sizes(pages)
+    sizes = page_sizes(pages)
     # blended per-page cost statistic — the AddWeighedStatFreqs analog
     # (reference src/zopfli/squeeze.c:64-77,619-625): each iteration the
     # proposal model is a 1:1 blend of the previous model and the freshly
