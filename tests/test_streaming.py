@@ -66,6 +66,39 @@ def test_streaming_encode_roundtrip(spark, tmp_path_factory):
     assert lin is not None and lin.count() > 0
 
 
+def test_encode_stream_computes_each_micro_batch_once(spark, tmp_path_factory):
+    """process_batch writes the pages and then the lineage of one encoded
+    micro-batch; the lineage must come from the same computation, not from
+    a second run of the encode. An identity mapInArrow upstream counts the
+    rows of every computation of the batch: the planner's Σ n_tok aggregate
+    reads it once and the encode once, while the emptiness probe stops at
+    its first row and reports no rows; encoding again for the lineage makes
+    it three passes."""
+    src = str(tmp_path_factory.mktemp("once_src"))
+    root = str(tmp_path_factory.mktemp("once_store"))
+    ckpt = str(tmp_path_factory.mktemp("once_ckpt"))
+    schema = "doc_id string, tokens array<int>, n_tok int, source string"
+    synth_tokens_df(spark, 120, seed=5).coalesce(1).write.parquet(src + "/b0")
+    n = spark.read.parquet(src + "/b0").count()
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(b.num_rows)
+            yield b
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(src + "/*")
+        .mapInArrow(count_rows, schema)
+    )
+    q = encode_stream(stream, root, CFG, checkpoint=ckpt, trigger_once=True)
+    q.awaitTermination(300)
+    assert read_pages(spark, root).filter("page_id >= 0").agg(F.sum("n_rows")).first()[0] == n
+    assert seen.value < 3 * n, (seen.value, n)
+
+
 def test_stateful_dedup_across_batches(spark, tmp_path_factory):
     """applyInPandasWithState dedup: a doc re-delivered in a LATER micro-
     batch must be dropped by the state store, not re-emitted."""

@@ -46,9 +46,14 @@ def encode_stream(
             return
         spark = batch_df.sparkSession
         lineage = read_lineage(spark, root)
-        pages = encode_table(batch_df, config, lineage=lineage)
-        write_pages(pages, root, mode="append")
-        append_lineage(pages, root, config)
+        # two writes read the pages: persist them so the batch is encoded
+        # once, for the page write, and the lineage reads the cached rows
+        pages = encode_table(batch_df, config, lineage=lineage).persist()
+        try:
+            write_pages(pages, root, mode="append")
+            append_lineage(pages, root, config)
+        finally:
+            pages.unpersist()
         # an always-on stream appends lineage every micro-batch forever;
         # keep the resume table content-bounded (one row per live key and
         # group id, the StatsDB shape) via the same shared trigger as the
