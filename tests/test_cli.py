@@ -5,6 +5,7 @@ spark-submit entry path, reference zopfli_bin.c:679-921 analog)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -76,10 +77,23 @@ def test_cli_gc(spark, tmp_path, capsys):
                                    "--remove-orphans"])
     assert rc == 0
     assert r["lineage_rows"] > 0
-    assert r["orphans_removed"] == []  # no snapshot layer -> nothing to sweep
-    from zopfli_spark.sources.store import read_lineage
+    assert r["orphans_removed"] == []  # every page file is still listed
+    from zopfli_spark.sources.store import current_snapshot, read_lineage
 
     assert read_lineage(spark, store).count() == r["lineage_rows"]
+    # each encode committed a snapshot; keep the newest, sweep the rest
+    rc, r = _run(capsys, COMMON + ["gc", "--store", store, "--keep-snapshots", "1",
+                                   "--remove-orphans", "--orphan-age-hours", "0"])
+    assert rc == 0 and len(r["expire"]["removed_snapshots"]) == 2
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), store)
+        for d, _, fs in os.walk(os.path.join(store, "pages"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == set(current_snapshot(store)["files"])
+    rc, v = _run(capsys, COMMON + ["verify", "--input", tok, "--store", store])
+    assert rc == 0 and v["ok"] is True
     # re-encode after compaction still resumes (ratio unchanged, fast path)
     rc, enc = _run(capsys, COMMON + ["encode", "--input", tok, "--output", store])
     assert rc == 0 and enc["ratio"] > 1.0

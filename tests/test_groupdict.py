@@ -333,10 +333,10 @@ def test_groupdict_store_roundtrip(spark, tokens_df, gd_pages, tmp_path):
     """Dict-row-before-data-pages survives the store: write partitioned,
     read back, decode — the (part_id, page_id) sortWithinPartitions keeps
     the dictionary streaming ahead of its group's pages."""
-    from zopfli_spark.sources.store import read_pages, write_pages
+    from zopfli_spark.sources.store import commit_snapshot, read_pages
 
     root = str(tmp_path / "store")
-    write_pages(gd_pages, root)
+    commit_snapshot(gd_pages, root)
     back = read_pages(spark, root)
     bad = roundtrip_check(tokens_df, decode_table(back, GD_CFG))
     assert bad.count() == 0
@@ -349,10 +349,10 @@ def test_groupdict_store_survives_scan_splitting(spark, tokens_df, gd_pages, tmp
     be separated from its pages. Force maximum split pressure (1 MB
     maxPartitionBytes — far below the store's file sizes) and decode must
     still be exact."""
-    from zopfli_spark.sources.store import read_pages, write_pages
+    from zopfli_spark.sources.store import commit_snapshot, read_pages
 
     root = str(tmp_path / "store")
-    write_pages(gd_pages, root)
+    commit_snapshot(gd_pages, root)
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
     try:
@@ -389,14 +389,14 @@ def test_groupdict_pairing_invariant_marginal_sizes(spark):
 
 
 def test_groupdict_snapshot_roundtrip(spark, tokens_df, gd_pages, tmp_path):
-    """The snapshot layer (commit → read_snapshot union of immutable dirs)
-    preserves the dict-row-before-pages stream too: each data dir keeps its
-    own part_id layout and single-row-group files."""
-    from zopfli_spark.sources.store import commit_snapshot, read_snapshot
+    """The snapshot layer (commit → read_pages of the files a manifest
+    lists) preserves the dict-row-before-pages stream too: every file keeps
+    the part_id layout and one row group."""
+    from zopfli_spark.sources.store import commit_snapshot, read_pages
 
     root = str(tmp_path / "snapstore")
     commit_snapshot(gd_pages, root)
-    back = read_snapshot(spark, root)
+    back = read_pages(spark, root)
     assert back.filter(back.codec == "group_dict_store").count() > 0
     bad = roundtrip_check(tokens_df, decode_table(back, GD_CFG))
     assert bad.count() == 0

@@ -161,39 +161,39 @@ def test_metrics_compaction_bounds_rows_and_files(spark, root):
 
 
 def test_expire_spares_inflight_dirs_orphans_age_gated(spark, root):
-    """ADVICE r3 medium: expire must only delete dirs the dropped manifests
-    referenced — a data dir with no manifest yet may be a commit in flight."""
+    """ADVICE r3 medium: expire must only delete files the dropped manifests
+    listed — a page file no manifest lists yet may be a commit in flight."""
     cfg = EngineConfig(**CFG_KW)
     from zopfli_spark import encode_table
 
     p1 = encode_table(synth_tokens_df(spark, 60, seed=1), cfg)
     p2 = encode_table(synth_tokens_df(spark, 60, seed=2), cfg)
-    m1 = commit_snapshot(p1, root)              # dirs: [d1]
-    m2 = commit_snapshot(p2, root, append=False)  # overwrite → dirs: [d2]
+    m1 = commit_snapshot(p1, root)              # files: f1
+    m2 = commit_snapshot(p2, root, append=False)  # overwrite → files: f2
 
-    # simulate a commit in flight: data dir exists, manifest not yet written
-    inflight = os.path.join(root, "data", "snap-inflight")
-    os.makedirs(inflight)
-    with open(os.path.join(inflight, "part.parquet"), "wb") as fh:
+    # simulate a commit in flight: its file moved in, manifest not yet written
+    rel = "pages/part_id=0/inflight-part.parquet"
+    inflight = os.path.join(root, rel)
+    with open(inflight, "wb") as fh:
         fh.write(b"x")
 
     res = expire_snapshots(root, keep_last=1)
     assert res["removed_snapshots"] == [m1["snapshot_id"]]
-    assert res["removed_dirs"] == m1["dirs"]  # d1: exclusively dropped
-    assert os.path.isdir(os.path.join(root, m2["dirs"][0]))
-    assert os.path.isdir(inflight), "expire must never sweep unreferenced dirs"
+    assert res["removed_files"] == sorted(m1["files"])  # f1: exclusively dropped
+    assert all(os.path.isfile(os.path.join(root, f)) for f in m2["files"])
+    assert os.path.isfile(inflight), "expire must never sweep unlisted files"
 
     # the age-gated orphan sweep: young → spared, old enough → removed
     assert remove_orphan_files(root, older_than_s=3600) == []
-    assert os.path.isdir(inflight)
-    assert remove_orphan_files(root, older_than_s=0.0) == ["data/snap-inflight"]
-    assert not os.path.isdir(inflight)
-    assert os.path.isdir(os.path.join(root, m2["dirs"][0]))
+    assert os.path.isfile(inflight)
+    assert remove_orphan_files(root, older_than_s=0.0) == [rel]
+    assert not os.path.isfile(inflight)
+    assert all(os.path.isfile(os.path.join(root, f)) for f in m2["files"])
 
 
 def test_expire_keeps_shared_dirs(spark, root):
-    """An appended snapshot shares its parent's dirs; dropping the parent
-    must not delete dirs the kept child still references."""
+    """An appended snapshot shares its parent's files; dropping the parent
+    must not delete files the kept child still lists."""
     cfg = EngineConfig(**CFG_KW)
     from zopfli_spark import encode_table
 
@@ -201,11 +201,11 @@ def test_expire_keeps_shared_dirs(spark, root):
     m2 = commit_snapshot(
         encode_table(synth_tokens_df(spark, 60, seed=4), cfg), root, append=True
     )
-    assert set(m1["dirs"]) < set(m2["dirs"])
+    assert set(m1["files"]) < set(m2["files"])
     res = expire_snapshots(root, keep_last=1)
-    assert res["removed_dirs"] == []  # d1 still referenced by kept m2
-    for d in m2["dirs"]:
-        assert os.path.isdir(os.path.join(root, d))
+    assert res["removed_files"] == []  # f1 still listed by kept m2
+    for f in m2["files"]:
+        assert os.path.isfile(os.path.join(root, f))
 
 
 def test_uncommitted_manifest_is_invisible(root):
@@ -216,7 +216,7 @@ def test_uncommitted_manifest_is_invisible(root):
     os.makedirs(sd)
     manifest = {
         "snapshot_id": "abc", "sequence": 1, "parent_id": None,
-        "operation": "overwrite", "dirs": ["data/snap-abc"],
+        "operation": "overwrite", "files": ["pages/part_id=0/abc.parquet"],
         "summary": {}, "schema": [],
     }
     with open(os.path.join(sd, "000001-abc.json"), "w") as fh:
@@ -225,6 +225,32 @@ def test_uncommitted_manifest_is_invisible(root):
     with open(os.path.join(sd, "LATEST"), "w") as fh:
         fh.write("000001-abc.json")
     assert [m["snapshot_id"] for m in list_snapshots(root)] == ["abc"]  # legacy
+
+
+def test_crashed_first_commit_keeps_legacy_files_readable(root):
+    """A store written before the snapshot layer (no snapshots/) reads as
+    its flat page files. A first commit creates snapshots/ before it moves
+    any file in; if it dies before its manifest lands, the legacy files
+    stay the readable base, and only the dead commit's file is an orphan."""
+    from zopfli_spark.sources.store import _init_snapshots, _snapshot
+
+    legacy = ["pages/part_id=0/part-0.parquet", "pages/part_id=1/part-1.parquet"]
+    moved = "pages/part_id=0/abc-part-0.parquet"
+
+    def touch(rel):
+        os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
+        with open(os.path.join(root, rel), "wb") as fh:
+            fh.write(b"x")
+
+    for rel in legacy:
+        touch(rel)
+    assert _snapshot(root)["files"] == legacy
+    _init_snapshots(root)  # write_pages, right before its move
+    touch(moved)  # the move; the commit dies before _commit_manifest
+    assert list_snapshots(root) == []
+    assert _snapshot(root)["files"] == legacy
+    assert remove_orphan_files(root, older_than_s=0.0) == [moved]
+    assert all(os.path.isfile(os.path.join(root, rel)) for rel in legacy)
 
 
 def test_strings_from_utf8_over_2gib_raises():
@@ -394,22 +420,23 @@ def test_rle_overflow_crafted_blob_raises_not_crashes():
 
 def test_remove_orphans_refuses_ambiguous_store(root):
     """Review r4: a store with manifests but no committed snapshot (lost
-    LATEST on a legacy store) must refuse the sweep — otherwise every data
-    dir reads as an orphan and a fully committed store gets deleted."""
+    LATEST on a legacy store) must refuse the sweep — otherwise every page
+    file reads as an orphan and a fully committed store gets deleted."""
     sd = os.path.join(root, "snapshots")
     os.makedirs(sd)
+    rel = "pages/part_id=0/abc-part.parquet"
     with open(os.path.join(sd, "000001-abc.json"), "w") as fh:
-        json.dump({"snapshot_id": "abc", "sequence": 1, "dirs": ["data/snap-abc"]}, fh)
-    d = os.path.join(root, "data", "snap-abc")
-    os.makedirs(d)
-    with open(os.path.join(d, "part.parquet"), "wb") as fh:
+        json.dump({"snapshot_id": "abc", "sequence": 1, "files": [rel]}, fh)
+    d = os.path.join(root, rel)
+    os.makedirs(os.path.dirname(d))
+    with open(d, "wb") as fh:
         fh.write(b"x")
     with pytest.raises(RuntimeError, match="refusing to sweep"):
         remove_orphan_files(root, older_than_s=0.0)
-    assert os.path.isdir(d), "data must survive the refused sweep"
+    assert os.path.isfile(d), "data must survive the refused sweep"
     # restoring the legacy pointer re-exposes the snapshot; sweep then
-    # correctly treats the referenced dir as live
+    # correctly treats the listed file as live
     with open(os.path.join(sd, "LATEST"), "w") as fh:
         fh.write("000001-abc.json")
     assert remove_orphan_files(root, older_than_s=0.0) == []
-    assert os.path.isdir(d)
+    assert os.path.isfile(d)

@@ -16,7 +16,7 @@ from zopfli_spark.sources.store import (
     commit_snapshot,
     current_snapshot,
     list_snapshots,
-    read_snapshot,
+    read_pages,
 )
 
 CFG = EngineConfig(
@@ -44,7 +44,7 @@ def test_append_and_time_travel(spark, root):
     assert current_snapshot(root)["snapshot_id"] == m2["snapshot_id"]
 
     # latest = union of both commits; decode recovers every doc exactly
-    latest = read_snapshot(spark, root)
+    latest = read_pages(spark, root)
     dec = decode_table(latest, CFG)
     both = df1.unionByName(df2)
     a = both.select("doc_id", F.col("tokens").cast("string").alias("t"))
@@ -52,7 +52,7 @@ def test_append_and_time_travel(spark, root):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
     # time travel: snapshot 1 still reads exactly the first commit
-    old = read_snapshot(spark, root, m1["snapshot_id"])
+    old = read_pages(spark, root, m1["snapshot_id"])
     dec1 = decode_table(old, CFG)
     assert dec1.count() == df1.count()
     assert m1["summary"]["added_rows"] == df1.count()
@@ -63,16 +63,16 @@ def test_overwrite_keeps_history(spark, root):
     df2 = synth_tokens_df(spark, 40, seed=4).cache()
     m1 = commit_snapshot(encode_table(df1, CFG), root)
     m2 = commit_snapshot(encode_table(df2, CFG), root, append=False)
-    assert m2["operation"] == "overwrite" and len(m2["dirs"]) == 1
-    assert decode_table(read_snapshot(spark, root), CFG).count() == 40
-    assert decode_table(read_snapshot(spark, root, m1["snapshot_id"]), CFG).count() == 60
+    assert m2["operation"] == "overwrite" and m2["files"] == m2["added"]
+    assert decode_table(read_pages(spark, root), CFG).count() == 40
+    assert decode_table(read_pages(spark, root, m1["snapshot_id"]), CFG).count() == 60
 
 
 def test_partition_pruning_survives_snapshot_union(spark, root):
     df = synth_tokens_df(spark, 150, seed=5).cache()
     commit_snapshot(encode_table(df, CFG), root)
     commit_snapshot(encode_table(df.limit(30), CFG), root, append=True)
-    snap = read_snapshot(spark, root).filter(F.col("part_id") == 0)
+    snap = read_pages(spark, root).filter(F.col("part_id") == 0)
     plan = snap._jdf.queryExecution().executedPlan().toString()
     # pruned scan: the part_id filter must reach partition discovery, not a
     # post-scan Filter over all partitions
@@ -82,24 +82,22 @@ def test_partition_pruning_survives_snapshot_union(spark, root):
 
 def test_concurrent_commits_no_lost_snapshot(tmp_path):
     """Two writers racing the same parent must BOTH land (optimistic
-    re-base), and an append must never lose the other writer's dirs —
+    re-base), and an append must never lose the other writer's files —
     the metadata protocol alone, no Spark needed (VERDICT r2 missing #4)."""
     import threading
 
     from zopfli_spark.sources.store import _commit_manifest
 
     root = str(tmp_path / "store")
-    os.makedirs(os.path.join(root, "data", "snap-base"))
-    _commit_manifest(root, "data/snap-base", {"added_pages": 1}, ["x"], append=True)
+    _commit_manifest(root, ["pages/part_id=0/base.parquet"], {"added_pages": 1}, ["x"], append=True)
 
     barrier = threading.Barrier(2)
     results = {}
 
     def writer(tag):
-        os.makedirs(os.path.join(root, "data", f"snap-{tag}"))
         barrier.wait()
         results[tag] = _commit_manifest(
-            root, f"data/snap-{tag}", {"added_pages": 1}, ["x"], append=True
+            root, [f"pages/part_id=0/{tag}.parquet"], {"added_pages": 1}, ["x"], append=True
         )
 
     ts = [threading.Thread(target=writer, args=(t,)) for t in ("a", "b")]
@@ -110,9 +108,9 @@ def test_concurrent_commits_no_lost_snapshot(tmp_path):
 
     snaps = list_snapshots(root)
     assert [m["sequence"] for m in snaps] == [1, 2, 3]
-    # the final snapshot's append chain contains EVERY committed dir
-    assert set(current_snapshot(root)["dirs"]) == {
-        "data/snap-base", "data/snap-a", "data/snap-b"
+    # the final snapshot's append chain contains EVERY committed file
+    assert set(current_snapshot(root)["files"]) == {
+        f"pages/part_id=0/{t}.parquet" for t in ("base", "a", "b")
     }
 
 
@@ -129,8 +127,7 @@ def test_contended_commit_stress_no_lost_snapshot(tmp_path):
     from zopfli_spark.sources.store import _commit_manifest
 
     root = str(tmp_path / "store")
-    os.makedirs(os.path.join(root, "data", "snap-base"))
-    _commit_manifest(root, "data/snap-base", {"added_pages": 1}, ["x"], append=True)
+    _commit_manifest(root, ["pages/part_id=0/base.parquet"], {"added_pages": 1}, ["x"], append=True)
 
     n_writers, n_rounds = 4, 6
     stop = threading.Event()
@@ -155,11 +152,10 @@ def test_contended_commit_stress_no_lost_snapshot(tmp_path):
     def writer(tag):
         try:
             for r in range(n_rounds):
-                rel = f"data/snap-{tag}-{r}"
-                os.makedirs(os.path.join(root, rel))
+                rel = f"pages/part_id={r}/{tag}.parquet"
                 barrier.wait()  # align every round so races actually happen
                 _commit_manifest(
-                    root, rel, {"added_pages": 1}, ["x"], append=True,
+                    root, [rel], {"added_pages": 1}, ["x"], append=True,
                     max_retries=64,
                 )
         except BaseException as e:  # noqa: BLE001
@@ -185,10 +181,10 @@ def test_contended_commit_stress_no_lost_snapshot(tmp_path):
     snaps = list_snapshots(root)
     total = 1 + n_writers * n_rounds
     assert [m["sequence"] for m in snaps] == list(range(1, total + 1))
-    expect = {"data/snap-base"} | {
-        f"data/snap-w{i}-{r}" for i in range(n_writers) for r in range(n_rounds)
+    expect = {"pages/part_id=0/base.parquet"} | {
+        f"pages/part_id={r}/w{i}.parquet" for i in range(n_writers) for r in range(n_rounds)
     }
-    assert set(current_snapshot(root)["dirs"]) == expect
+    assert set(current_snapshot(root)["files"]) == expect
 
 
 def test_overlapping_latest_pointer_writes_all_land(tmp_path, monkeypatch):
@@ -218,9 +214,9 @@ def test_overlapping_latest_pointer_writes_all_land(tmp_path, monkeypatch):
     def writer(tag):
         try:
             for r in range(n_rounds):
-                rel = f"data/snap-{tag}-{r}"
+                rel = f"pages/part_id={r}/{tag}.parquet"
                 barrier.wait()
-                _commit_manifest(root, rel, {}, ["x"], append=True, max_retries=64)
+                _commit_manifest(root, [rel], {}, ["x"], append=True, max_retries=64)
         except BaseException as e:  # noqa: BLE001
             errors.append(e)
             barrier.abort()
@@ -248,10 +244,8 @@ def test_bad_commit_markers_are_skipped(tmp_path):
     from zopfli_spark.sources.store import _commit_manifest, _snap_dir
 
     root = str(tmp_path / "store")
-    os.makedirs(os.path.join(root, "data", "snap-base"))
-    m1 = _commit_manifest(root, "data/snap-base", {"added_pages": 1}, ["x"], append=True)
-    os.makedirs(os.path.join(root, "data", "snap-two"))
-    m2 = _commit_manifest(root, "data/snap-two", {"added_pages": 1}, ["x"], append=True)
+    m1 = _commit_manifest(root, ["pages/part_id=0/base.parquet"], {"added_pages": 1}, ["x"], append=True)
+    m2 = _commit_manifest(root, ["pages/part_id=0/two.parquet"], {"added_pages": 1}, ["x"], append=True)
     d = _snap_dir(root)
     # legacy pre-link-protocol crash artifacts:
     with open(os.path.join(d, "000003.commit"), "w"):
@@ -259,8 +253,7 @@ def test_bad_commit_markers_are_skipped(tmp_path):
     with open(os.path.join(d, "000004.commit"), "w") as fh:
         fh.write("no-such-manifest.json")  # garbage name
     # marker whose manifest was deleted out from under it
-    os.makedirs(os.path.join(root, "data", "snap-gone"))
-    m5 = _commit_manifest(root, "data/snap-gone", {"added_pages": 1}, ["x"], append=True)
+    m5 = _commit_manifest(root, ["pages/part_id=0/gone.parquet"], {"added_pages": 1}, ["x"], append=True)
     os.unlink(os.path.join(d, f"{m5['sequence']:06d}-{m5['snapshot_id']}.json"))
 
     with pytest.warns(UserWarning, match="bad commit marker"):
@@ -279,11 +272,11 @@ def test_expire_snapshots(spark, root):
     m3 = commit_snapshot(encode_table(df2, CFG), root, append=True)
     out = expire_snapshots(root, keep_last=2)
     assert out["removed_snapshots"] == [m1["snapshot_id"]]
-    # m1's dir was only referenced by m1 (m2 overwrote) -> physically gone
-    assert m1["dirs"][0] in out["removed_dirs"]
-    assert not os.path.exists(os.path.join(root, m1["dirs"][0]))
+    # m1's files were only listed by m1 (m2 overwrote) -> physically gone
+    assert m1["files"] and set(m1["files"]) <= set(out["removed_files"])
+    assert not any(os.path.exists(os.path.join(root, f)) for f in m1["files"])
     # current snapshot still fully readable
-    assert decode_table(read_snapshot(spark, root), CFG).count() == 60
+    assert decode_table(read_pages(spark, root), CFG).count() == 60
     assert len(list_snapshots(root)) == 2
     with pytest.raises(KeyError):
-        read_snapshot(spark, root, m1["snapshot_id"])
+        read_pages(spark, root, m1["snapshot_id"])

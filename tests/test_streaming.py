@@ -3,6 +3,7 @@ page store, resumable via lineage, decoded output bit-identical."""
 
 from __future__ import annotations
 
+import itertools
 import time
 
 import pytest
@@ -11,7 +12,7 @@ from pyspark.sql import functions as F
 
 from zopfli_spark import EngineConfig, decode_table, roundtrip_check
 from zopfli_spark.datagen import synth_tokens_df
-from zopfli_spark.sources.store import read_lineage, read_pages
+from zopfli_spark.sources.store import list_snapshots, read_lineage, read_pages
 from zopfli_spark.streaming.encode_stream import encode_stream
 
 CFG = EngineConfig(
@@ -64,16 +65,46 @@ def test_streaming_encode_roundtrip(spark, tmp_path_factory):
     assert roundtrip_check(df, decoded).count() == 0
     lin = read_lineage(spark, root)
     assert lin is not None and lin.count() > 0
+    snaps = list_snapshots(root)
+    assert snaps and all(m["operation"] == "append" for m in snaps[1:])
+
+
+def test_stream_store_reads_as_one_scan(spark, tmp_path_factory):
+    """Each micro-batch commits an append snapshot; the current snapshot
+    lists every batch's files and reads as ONE parquet scan — no union of
+    per-commit relations, whose build and run time grew with the number of
+    commits."""
+    src = str(tmp_path_factory.mktemp("scan_src"))
+    root = str(tmp_path_factory.mktemp("scan_store"))
+    ckpt = str(tmp_path_factory.mktemp("scan_ckpt"))
+    df = synth_tokens_df(spark, 90, seed=17).cache()
+    for i in range(3):
+        df.filter(F.crc32("doc_id") % 3 == i).coalesce(1).write.parquet(f"{src}/b{i}")
+    stream = (
+        spark.readStream.schema("doc_id string, tokens array<int>, n_tok int, source string")
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+    encode_stream(stream, root, CFG, checkpoint=ckpt, trigger_once=True).awaitTermination(300)
+    snaps = list_snapshots(root)
+    assert len(snaps) == 3
+    assert [len(m["files"]) for m in snaps] == list(
+        itertools.accumulate(len(m["added"]) for m in snaps)
+    )
+    pages = read_pages(spark, root)
+    plan = pages._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1 and "Union" not in plan, plan
+    assert roundtrip_check(df, decode_table(pages, CFG)).count() == 0
 
 
 def test_encode_stream_computes_each_micro_batch_once(spark, tmp_path_factory):
-    """process_batch writes the pages and then the lineage of one encoded
-    micro-batch; the lineage must come from the same computation, not from
-    a second run of the encode. An identity mapInArrow upstream counts the
-    rows of every computation of the batch: the planner's Σ n_tok aggregate
-    reads it once and the encode once, while the emptiness probe stops at
-    its first row and reports no rows; encoding again for the lineage makes
-    it three passes."""
+    """process_batch must compute its micro-batch once: the emptiness
+    probe, the planner's Σ n_tok aggregate and the encode all read it, and
+    the lineage comes from the committed files, not from a second run of
+    the encode. An identity mapInArrow upstream counts the rows of every
+    computation of the batch; without the cached batch the aggregate and
+    the encode each read it, two passes."""
     src = str(tmp_path_factory.mktemp("once_src"))
     root = str(tmp_path_factory.mktemp("once_store"))
     ckpt = str(tmp_path_factory.mktemp("once_ckpt"))
@@ -96,7 +127,7 @@ def test_encode_stream_computes_each_micro_batch_once(spark, tmp_path_factory):
     q = encode_stream(stream, root, CFG, checkpoint=ckpt, trigger_once=True)
     q.awaitTermination(300)
     assert read_pages(spark, root).filter("page_id >= 0").agg(F.sum("n_rows")).first()[0] == n
-    assert seen.value < 3 * n, (seen.value, n)
+    assert seen.value == n, (seen.value, n)
 
 
 def test_stateful_dedup_across_batches(spark, tmp_path_factory):

@@ -9,7 +9,10 @@ Deployment (north rule):
         cli.py encode --input <tokens parquet> --output <store root> \
         [--page-budget N] [--group-budget N] [--iterations N] [--seed N]
 
-Subcommands: encode, decode, verify, datagen, package-zip.
+Subcommands: encode, decode, verify, datagen, gc, package-zip.
+
+``encode`` commits each run as a new snapshot of the store and keeps the
+earlier ones (time travel) until ``gc --keep-snapshots`` expires them.
 """
 
 from __future__ import annotations
@@ -229,14 +232,14 @@ def main(argv: list[str] | None = None) -> int:
     gen.add_argument("--output", required=True)
 
     gc = sub.add_parser("gc", help="store maintenance: expire snapshots, "
-                                   "remove aged orphan dirs, compact lineage")
+                                   "remove aged orphan files, compact lineage")
     gc.add_argument("--store", required=True, help="store root")
     gc.add_argument("--keep-snapshots", type=int, default=None,
                     help="expire all but the newest N snapshots")
     gc.add_argument("--remove-orphans", action="store_true",
-                    help="delete data dirs no manifest references (age-gated)")
+                    help="delete page files no manifest lists (age-gated)")
     gc.add_argument("--orphan-age-hours", type=float, default=24.0,
-                    help="only remove orphan dirs untouched this long")
+                    help="only remove orphan files untouched this long")
     gc.add_argument("--compact-lineage", action="store_true",
                     help="rewrite lineage to one row per live (key, mode)")
     gc.add_argument("--compact-metrics", action="store_true",
