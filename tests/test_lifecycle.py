@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from zopfli_spark import EngineConfig
 from zopfli_spark.datagen import synth_tokens_df
+from zopfli_spark.sources import store
 from zopfli_spark.sources.store import (
     commit_snapshot,
     compact_lineage,
@@ -70,6 +71,22 @@ def test_allowlist_mode_exceeds_int32_and_fits_long():
     assert len({cfg.mode, *others}) == 5
 
 
+@pytest.mark.parametrize(
+    "cfg, mode",
+    [
+        (EngineConfig(), 406897005),
+        (EngineConfig.throughput(), 402702573),
+        (EngineConfig.ratio(), 3779642355),
+        (EngineConfig(codec_allowlist=("rle", "dict", "plane_zlib")), 3085748318261789037),
+    ],
+)
+def test_mode_fingerprints_are_pinned(cfg, mode):
+    """The lineage key of every stored plan: a config field added, dropped
+    or re-packed must leave these values alone, or every store's resume
+    silently stops hitting."""
+    assert cfg.mode == mode
+
+
 def test_allowlist_resume_hits_and_is_byte_identical(spark, root):
     """The r3 bug: `mode int` truncated the allow-list fingerprint, so resume
     silently never hit for any allow-listed config."""
@@ -99,13 +116,14 @@ def test_allowlist_resume_hits_and_is_byte_identical(spark, root):
     }
 
 
-def test_lineage_compaction_keeps_rows_flat_and_resume_green(spark, root):
+def test_lineage_compaction_keeps_rows_flat_and_resume_green(spark, root, monkeypatch):
     cfg = EngineConfig(**CFG_KW)
     df = synth_tokens_df(spark, 300, seed=9).cache()
+    # a threshold of 0 forces compaction after every append
+    monkeypatch.setattr(store, "COMPACT_AFTER_FILES", 0)
     counts = []
     for i in range(4):
-        # compact_after_files=0 forces compaction after every append
-        encode_to_store(df, root, cfg, run_id=f"r{i}", compact_after_files=0)
+        encode_to_store(df, root, cfg, run_id=f"r{i}")
         counts.append(read_lineage(spark, root).count())
     assert counts[0] == counts[-1], f"lineage must stay O(live groups): {counts}"
     sig = _page_sig(spark, root)
@@ -115,14 +133,15 @@ def test_lineage_compaction_keeps_rows_flat_and_resume_green(spark, root):
     assert kept == counts[-1]
 
 
-def test_lineage_read_built_before_compaction_runs_after_it(spark, root):
+def test_lineage_read_built_before_compaction_runs_after_it(spark, root, monkeypatch):
     """A lineage read lists its files when it is built. A compaction before
     it runs deletes those files: the read must skip them, not fail, and it
     may only return live rows (a missed plan is searched again)."""
     cfg = EngineConfig(**CFG_KW)
     df = synth_tokens_df(spark, 120, seed=4)
+    monkeypatch.setattr(store, "COMPACT_AFTER_FILES", -1)  # no compaction
     for i in range(2):
-        encode_to_store(df, root, cfg, run_id=f"r{i}", compact_after_files=-1)
+        encode_to_store(df, root, cfg, run_id=f"r{i}")
     stale = read_lineage(spark, root)
     assert compact_lineage(root, spark) > 0
     rows = stale.select("content_key", "part_id", "plan").collect()

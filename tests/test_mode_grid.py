@@ -118,7 +118,7 @@ def test_split_mode_dp_roundtrips_and_dominates_estimate():
 
     def est(bounds):
         bs = [0, *bounds.tolist(), n_docs]
-        return sum(rc.cost_bits(bs[k], bs[k + 1]) for k in range(len(bs) - 1))
+        return float(rc.cost(bs[:-1], bs[1:]).sum())
 
     assert est(dp) <= est(greedy) + 1e-6
     cum = np.concatenate(([0], np.cumsum(lens)))

@@ -63,6 +63,18 @@ def test_entropy_is_a_lower_bound():
         assert pm >= h - 1e-9, name
 
 
+def test_entropy_over_a_stack_matches_each_histogram():
+    """One call over a stack of histograms (the split search prices every
+    candidate range this way) gives each row's own cost, bit for bit;
+    an empty histogram costs 0 and a one-symbol one costs 0."""
+    stack = np.array([[3, 0, 5, 1], [0, 0, 0, 0], [7, 0, 0, 0], [1, 1, 1, 1]])
+    got = entropy_bits(stack)
+    assert got.shape == (4,)
+    assert got.tolist() == [entropy_bits(row) for row in stack]
+    assert got[1] == 0.0 and got[2] == 0.0 and got[3] == 8.0
+    assert isinstance(entropy_bits(stack[0]), float)
+
+
 def test_length_limit_binds():
     # severely skewed: unrestricted depth would exceed 3 bits
     counts = np.array([64, 32, 16, 8, 4, 2, 1, 1])

@@ -262,6 +262,34 @@ def test_bad_commit_markers_are_skipped(tmp_path):
     assert current_snapshot(root)["snapshot_id"] == m2["snapshot_id"]
 
 
+def test_current_snapshot_loads_one_manifest(tmp_path, monkeypatch):
+    """A read of the current snapshot opens the newest committed manifest
+    only: its cost must not grow with the store's commit history. A read
+    by id loads that snapshot's manifest alone."""
+    import json
+
+    from zopfli_spark.sources.store import _commit_manifest, _snapshot
+
+    root = str(tmp_path / "store")
+    ms = [
+        _commit_manifest(root, [f"pages/part_id=0/f{i}.parquet"], {"added_pages": 1}, ["x"], append=True)
+        for i in range(6)
+    ]
+    loads = []
+    real_load = json.load
+
+    def counting_load(fh, *a, **kw):
+        loads.append(fh.name)
+        return real_load(fh, *a, **kw)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    assert current_snapshot(root)["snapshot_id"] == ms[-1]["snapshot_id"]
+    assert len(loads) == 1
+    assert _snapshot(root, ms[1]["snapshot_id"])["files"] == ms[1]["files"]
+    assert len(loads) == 2
+    assert len(list_snapshots(root)) == 6
+
+
 def test_expire_snapshots(spark, root):
     from zopfli_spark.sources.store import expire_snapshots
 

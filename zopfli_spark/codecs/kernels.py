@@ -68,7 +68,7 @@ import zlib
 import numpy as np
 
 from .bitio import bit_width, pack_bits, unpack_bits, zigzag_decode, zigzag_encode
-from ..model import optimize_counts_for_rle, package_merge
+from ..model import entropy_bits, optimize_counts_for_rle, package_merge
 
 # Codec tags
 PLAIN = 0
@@ -269,16 +269,6 @@ def _run_lengths(v: np.ndarray, dv: np.ndarray | None = None) -> tuple[np.ndarra
     return v[starts], (ends - starts).astype(np.int64)
 
 
-def _entropy_bits(counts: np.ndarray) -> float:
-    """Shannon bit cost of a histogram — reference src/zopfli/tree.c:66-88
-    (``log2(sum) - log2(count)`` per symbol, zero counts ignored for totals)."""
-    total = counts.sum()
-    if total == 0:
-        return 0.0
-    nz = counts[counts > 0].astype(np.float64)
-    return float(total * np.log2(total) - (nz * np.log2(nz)).sum())
-
-
 def _build_rle(v: np.ndarray, run_vals: np.ndarray, run_lens: np.ndarray) -> bytes:
     vb = encode_simple(run_vals)
     lenb = encode_simple(run_lens)
@@ -414,7 +404,7 @@ def _huffman_select_lengths(
     must not run on every page the entropy pre-gate lets through."""
     if l1 is None:
         l1 = package_merge(counts, _HUFF_MAXBITS)
-    t1 = encode_best(np.asarray(l1, dtype=np.int64), try_zlib=False, allowed=_LEN_TBL_ALLOWED)
+    t1 = encode_best(np.asarray(l1, dtype=np.int64), allowed=_LEN_TBL_ALLOWED)
     b1 = int((counts * l1).sum()) + 8 * len(t1)
     # smoothing moves at most ~table-size bytes: skip when the alphabet is
     # tiny or the unsmoothed table is already a few dozen bytes
@@ -425,7 +415,7 @@ def _huffman_select_lengths(
     )
     if not np.array_equal(c2, counts):
         l2 = package_merge(c2, _HUFF_MAXBITS)
-        t2 = encode_best(np.asarray(l2, dtype=np.int64), try_zlib=False, allowed=_LEN_TBL_ALLOWED)
+        t2 = encode_best(np.asarray(l2, dtype=np.int64), allowed=_LEN_TBL_ALLOWED)
         b2 = int((counts * l2).sum()) + 8 * len(t2)
         if b2 < b1:
             return l2, b2
@@ -493,7 +483,7 @@ def _enc_huffman(
     # the code-length table is itself entropy-coded (DEFLATE transmits its
     # tree huffman-coded too — reference src/zopfli/deflate.c:118-293); the
     # recursion terminates because the inner alphabet is ≤ maxbits symbols
-    len_tbl = encode_best(lengths, try_zlib=False, allowed=_LEN_TBL_ALLOWED)
+    len_tbl = encode_best(lengths, allowed=_LEN_TBL_ALLOWED)
     exact_size = (
         1 + 4 + 4 + len(dict_blob) + 1 + 4 + len(len_tbl) + 2 + 4
         + len(offsets_blob) + 4 + (total_bits + 7) // 8
@@ -635,7 +625,7 @@ def encode_group_dict(uniq: np.ndarray, counts: np.ndarray, zlib_level: int = 6)
     lengths = np.asarray(package_merge(hist, _GH_MAXBITS), dtype=np.int64)
     dict_blob = encode_simple(_as_i64(uniq))
     len_tbl = encode_best(
-        lengths, zlib_level=zlib_level, try_zlib=True, try_huffman=True,
+        lengths, zlib_level=zlib_level, try_huffman=True,
         huffman_headroom=1.0,
     )
     return (
@@ -846,7 +836,6 @@ def encode_best(
     v: np.ndarray,
     *,
     zlib_level: int = 6,
-    try_zlib: bool = True,
     allowed: frozenset | None = None,
     plane_strategy: str = "rle",
     try_huffman: bool = True,
@@ -965,7 +954,7 @@ def encode_best(
     # machinery on pages where plane DEFLATE already sits at/below entropy
     # (mixed-kind pages exploit ORDER structure order-0 Huffman cannot).
     counts = None
-    if try_zlib and ok(PLANE_ZLIB) and n >= 64:
+    if ok(PLANE_ZLIB) and n >= 64:
         # run DEFLATE only when the bitpack-family best is still far above the
         # order-0 entropy bound — i.e. distributional structure remains that
         # only an entropy coder can exploit. Lower-bound pruning discipline of
@@ -973,7 +962,7 @@ def encode_best(
         if uniq is None:
             uniq, inverse = np.unique(v, return_inverse=True)
         counts = np.bincount(inverse)
-        h_bytes = _entropy_bits(counts) / 8.0
+        h_bytes = entropy_bits(counts) / 8.0
         if heur > h_bytes * 1.1:
             pz = _enc_plane_zlib(v, vmin, w_for, zlib_level, plane_strategy)
             heur = min(heur, len(pz))
@@ -1003,7 +992,7 @@ def encode_best(
             lb_dict = 10 + (card - 1 + 7) // 8
             fixed = 1 + 4 + 4 + lb_dict + 1 + 4 + 9 + 2 + 4 + 1 + 4
             lb_table = (card * 3) // 8
-            if fixed + lb_table + int(_entropy_bits(counts)) // 8 < huffman_headroom * heur:
+            if fixed + lb_table + int(entropy_bits(counts)) // 8 < huffman_headroom * heur:
                 # optimal lengths first; the exact unsmoothed payload is a
                 # lower bound for both variants, so it gates BEFORE paying
                 # for the smoothed-variant comparison

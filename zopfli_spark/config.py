@@ -24,7 +24,6 @@ class EngineConfig:
     # --- codec search ----------------------------------------------------
     #: zlib candidate level for the entropy-coded fallback codecs
     zlib_level: int = 6
-    try_zlib: bool = True
     #: canonical-Huffman candidate on/off — the throughput dial the r2
     #: verdict asked for: Huffman trades encode CPU for ratio exactly like
     #: the reference's slow-but-smaller search modes (ZopfliOptions
@@ -146,8 +145,8 @@ class EngineConfig:
     def mode(self) -> int:
         """Codec-search config fingerprint for lineage keys — the mode
         dip-switch analog (reference src/zopfli/zopfli.h:100-112)."""
-        bits = 0
-        bits |= 1 if self.try_zlib else 0
+        # bit 0 stays set: every recorded lineage key was made with it on
+        bits = 1
         bits |= (self.zlib_level & 0xF) << 1
         bits |= (1 if self.split_mode == "cost" else 0) << 5
         bits |= (self.iterations & 0xFF) << 6

@@ -38,6 +38,7 @@ from .lineage import (
     hints_dict,
     struct_plan_to_pages,
 )
+from .model import entropy_bits
 from .operators.pagecodec import (
     HEADER_FLOOR,
     build_header,
@@ -226,7 +227,7 @@ def train_group_dict(values: np.ndarray, config) -> dict:
         u, cts = np.unique(sp, return_counts=True)
         if len(u) < _GH_MIN_TRAIN_CARD or len(u) > _GH_MAX_CARD - 1:
             continue
-        h0 = kernels._entropy_bits(cts) / n_sp
+        h0 = entropy_bits(cts) / n_sp
         w_for = bit_width(int(sp.max()) - int(sp.min()))
         if n_sp > 1:
             diffs = np.diff(sp)
@@ -599,7 +600,6 @@ class GroupCtx:
             self.lens[r0:r1],
             self.values[v0:v1],
             zlib_level=c.zlib_level if level is None else level,
-            try_zlib=c.try_zlib,
             forced_codec=forced,
             level_tag=(c.zlib_level if (dial and level is None) else level),
             zlib_only=zlib_only,

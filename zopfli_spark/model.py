@@ -1,9 +1,13 @@
 """Cost-model utilities: Shannon entropy and length-limited Huffman lengths.
 
-* :func:`entropy_bits` — the canonical bit-cost model of the reference
+* :func:`entropy_bits` — the one histogram bit-cost model of the engine
   (``ZopfliCalculateEntropy``, reference src/zopfli/tree.c:66-88): per-symbol
-  cost ``log2(total) - log2(count)``, zero counts priced as ``log2(total)``,
-  negatives clamped.
+  cost ``log2(total) - log2(count)``, summed over the histogram's last axis.
+  It prices every split candidate (``pages._RangeCost.cost``, the
+  EstimateCost/SplitCost analog, blocksplitter.c:129-144) and gates the
+  entropy-coded codec candidates (``kernels.encode_best``) and the group
+  dictionary's training spans (``engine.train_group_dict``) — the
+  GetCostStat role (squeeze.c:184-195).
 * :func:`package_merge` — optimal length-limited prefix-code lengths by the
   boundary package-merge algorithm (Katajainen/Moffat/Turpin '95 — the same
   published algorithm behind ``ZopfliLengthLimitedCodeLengths``, reference
@@ -19,14 +23,17 @@ from __future__ import annotations
 import numpy as np
 
 
-def entropy_bits(counts: np.ndarray) -> float:
-    """Shannon bits to code the histogram (fractional lower bound)."""
-    counts = np.asarray(counts, dtype=np.float64)
-    total = counts.sum()
-    if total == 0:
-        return 0.0
-    nz = counts[counts > 0]
-    return float(total * np.log2(total) - (nz * np.log2(nz)).sum())
+def entropy_bits(counts: np.ndarray) -> float | np.ndarray:
+    """Shannon bits to code a histogram (fractional lower bound), over the
+    last axis: one histogram gives a float, a stack of histograms an array
+    with one cost per histogram. Zero counts cost nothing; an empty
+    histogram costs 0."""
+    c = np.asarray(counts, dtype=np.float64)
+    total = c.sum(axis=-1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        clogc = np.where(c > 0, c * np.log2(c), 0.0).sum(axis=-1)
+        h = np.where(total > 0, total * np.log2(total), 0.0) - clogc
+    return float(h) if h.ndim == 0 else h
 
 
 def package_merge(counts: np.ndarray, maxbits: int = 15) -> np.ndarray:

@@ -95,7 +95,6 @@ def encode_page(
     values: np.ndarray,
     *,
     zlib_level: int = 6,
-    try_zlib: bool = True,
     forced_codec: str | None = None,
     level_tag: int | None = None,
     zlib_only: bool = False,
@@ -141,7 +140,6 @@ def encode_page(
         payload = encode_best(
             values,
             zlib_level=zlib_level,
-            try_zlib=try_zlib,
             allowed=allowed,
             plane_strategy=plane_strategy,
             try_huffman=try_huffman,

@@ -10,9 +10,10 @@ Mirrors the reference's split-point search (SURVEY.md §2.4):
 * ``ZopfliBlockSplitLZ77`` (greedily split the largest remaining block while
   cost decreases, bounded by blocksplittingmax, reference:
   src/zopfli/blocksplitter.c:222-306) → :func:`split_by_cost`.
-* Cost estimation uses Shannon entropy over **cumulative histograms** for
-  O(1) range-histogram queries — the chunked-cumulative-histogram idea of the
-  LZ77 store (reference: src/zopfli/lz77.c:99-150,169-214).
+* Cost estimation uses Shannon entropy (``model.entropy_bits``) over
+  **cumulative histograms** for O(1) range-histogram queries — the
+  chunked-cumulative-histogram idea of the LZ77 store (reference:
+  src/zopfli/lz77.c:99-150,169-214).
 * Two-phase discipline: splits are chosen on the cheap entropy estimate, the
   final encoding picks codecs by exact size ("simple LZ77 gives better
   blocks", reference: src/zopfli/blocksplitter.c:328-330).
@@ -25,6 +26,8 @@ page).
 from __future__ import annotations
 
 import numpy as np
+
+from .model import entropy_bits
 
 _N_BUCKETS = 256
 _NOVELTY_WINDOW = 1 << 16  # windowed first-occurrence horizon for the
@@ -66,6 +69,14 @@ def split_simple(lens: np.ndarray, page_budget: int) -> np.ndarray:
 
 class _RangeCost:
     """O(1) entropy cost of any row-range via cumulative bucket histograms.
+
+    :meth:`cost` is the one range price every split site uses (the greedy
+    FindMinimum probes and its last interval, the accept check in
+    :func:`split_by_cost`, the :func:`split_dp` sweep): the
+    ``model.entropy_bits`` of the range's bucket histogram, plus the
+    optional conditional card term, capped by the optional group-code bits,
+    plus the page header. Row indices broadcast, so one call prices one
+    range or a whole vector of candidates.
 
     ``gh_bits_per_value`` (optional): per-value bit cost under the GROUP
     shared Huffman code (escapes priced with their side-channel literal).
@@ -170,76 +181,49 @@ class _RangeCost:
         else:
             self.cum_gh = None
 
-    def cost_bits(self, i: int, j: int) -> float:
-        """Entropy bits of rows [i, j) + header cost — the EstimateCost
-        analog (reference src/zopfli/blocksplitter.c:129-133)."""
-        counts = self.cum[j] - self.cum[i]
-        total = self.cum_n[j] - self.cum_n[i]
-        if total == 0:
-            return _PAGE_HEADER_BYTES * 8.0
-        nz = counts[counts > 0].astype(np.float64)
-        # ZopfliCalculateEntropy formula (reference src/zopfli/tree.c:66-88)
-        h = total * np.log2(total) - float((nz * np.log2(nz)).sum())
+    def cost(self, lo, hi):
+        """Estimated bits of rows [lo, hi) plus the page header — the
+        EstimateCost analog (reference src/zopfli/blocksplitter.c:129-133).
+        ``lo`` and ``hi`` are row indices or broadcastable arrays of them;
+        the result has their broadcast shape."""
+        counts = (self.cum[hi] - self.cum[lo]).astype(np.float64)
+        h = entropy_bits(counts)
         if self.cum_nov is not None:
-            novc = (self.cum_nov[j] - self.cum_nov[i]).astype(np.float64)
+            novc = self.cum_nov[hi] - self.cum_nov[lo]
             cond = np.minimum(np.log2(np.maximum(novc, 1.0)), self.bucket_cap)
-            h += float((counts * cond).sum())
+            h = h + (counts * cond).sum(axis=-1)
         if self.cum_gh is not None:
-            h = min(h, float(self.cum_gh[j] - self.cum_gh[i]))
+            h = np.minimum(h, self.cum_gh[hi] - self.cum_gh[lo])
         return h + _PAGE_HEADER_BYTES * 8.0
 
-    def split_costs_batch(self, start: int, end: int, mids: np.ndarray) -> np.ndarray:
-        """Vectorized SplitCost over many candidate mids at once (one matrix
-        pass instead of per-candidate python calls)."""
-
-        def side(lo_idx, hi_idx):
-            counts = (self.cum[hi_idx] - self.cum[lo_idx]).astype(np.float64)
-            totals = counts.sum(axis=-1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ent = np.where(counts > 0, counts * np.log2(counts, where=counts > 0), 0.0)
-            h = np.where(totals > 0, totals * np.log2(np.maximum(totals, 1)), 0.0) - ent.sum(axis=-1)
-            if self.cum_nov is not None:
-                novc = (self.cum_nov[hi_idx] - self.cum_nov[lo_idx]).astype(np.float64)
-                cond = np.minimum(np.log2(np.maximum(novc, 1.0)), self.bucket_cap)
-                h = h + (counts * cond).sum(axis=-1)
-            if self.cum_gh is not None:
-                h = np.minimum(h, self.cum_gh[hi_idx] - self.cum_gh[lo_idx])
-            return h + _PAGE_HEADER_BYTES * 8.0
-
-        left = side(np.full(len(mids), start), mids)
-        right = side(mids, np.full(len(mids), end))
-        return left + right
-
-
-def _split_cost(rc: _RangeCost, start: int, end: int, mid: int) -> float:
-    """SplitCost analog (reference src/zopfli/blocksplitter.c:140-144)."""
-    return rc.cost_bits(start, mid) + rc.cost_bits(mid, end)
+    def split_costs(self, start: int, end: int, mids: np.ndarray) -> np.ndarray:
+        """SplitCost (reference src/zopfli/blocksplitter.c:140-144) of
+        [start, end) at every candidate mid at once."""
+        return self.cost(start, mids) + self.cost(mids, end)
 
 
 def _find_minimum(rc: _RangeCost, start: int, end: int) -> tuple[int, float]:
     """Recursive 9-point minimum search (reference blocksplitter.c:57-117)."""
     lo, hi = start + 1, end  # candidate mids in [lo, hi)
-    if hi - lo <= _EXHAUSTIVE_BELOW:
-        mids = np.arange(lo, hi)
-        costs = rc.split_costs_batch(start, end, mids)
-        k = int(np.argmin(costs))
-        return lo + k, float(costs[k])
     best_m, best_c = -1, np.inf
-    while hi - lo > _FIND_MINIMUM_PROBES:
-        probes = np.linspace(lo, hi - 1, _FIND_MINIMUM_PROBES).astype(np.int64)
-        probes = np.unique(probes)
-        costs = rc.split_costs_batch(start, end, probes)
-        k = int(np.argmin(costs))
-        if costs[k] < best_c:
-            best_c, best_m = costs[k], int(probes[k])
-        # narrow to the interval around the best probe
-        lo = int(probes[k - 1]) + 1 if k > 0 else lo
-        hi = int(probes[k + 1]) if k + 1 < len(probes) else hi
-    for m in range(lo, hi):
-        c = _split_cost(rc, start, end, m)
-        if c < best_c:
-            best_c, best_m = c, m
-    return best_m, best_c
+    if hi - lo > _EXHAUSTIVE_BELOW:
+        while hi - lo > _FIND_MINIMUM_PROBES:
+            probes = np.unique(
+                np.linspace(lo, hi - 1, _FIND_MINIMUM_PROBES).astype(np.int64)
+            )
+            costs = rc.split_costs(start, end, probes)
+            k = int(np.argmin(costs))
+            if costs[k] < best_c:
+                best_c, best_m = costs[k], int(probes[k])
+            # narrow to the interval around the best probe
+            lo = int(probes[k - 1]) + 1 if k > 0 else lo
+            hi = int(probes[k + 1]) if k + 1 < len(probes) else hi
+    # exhaustive below the threshold, and over the probes' last interval
+    costs = rc.split_costs(start, end, np.arange(lo, hi))
+    k = int(np.argmin(costs))
+    if costs[k] < best_c:
+        best_c, best_m = costs[k], lo + k
+    return best_m, float(best_c)
 
 
 _DP_MAX_ROWS = 768  # forward DP is O(rows · window · buckets); exact below this
@@ -251,7 +235,7 @@ def split_dp(rc: _RangeCost, lens: np.ndarray, page_budget: int) -> np.ndarray:
     ``TraceBackwards``, reference src/zopfli/squeeze.c:255-393,395-412),
     over candidate ROW boundaries instead of LZ77 symbol positions:
 
-        best[j] = min over i of best[i] + cost_bits(i, j)
+        best[j] = min over i of best[i] + cost(i, j)
         subject to the memory bound mass(i, j) ≤ 2 · page_budget
 
     The inner minimization is one vectorized `_RangeCost` pass per j (cost
@@ -270,7 +254,7 @@ def split_dp(rc: _RangeCost, lens: np.ndarray, page_budget: int) -> np.ndarray:
         if lo >= j:  # single row heavier than the cap — rows are atomic
             lo = j - 1
         cand = np.arange(lo, j)
-        costs = best[cand] + _range_cost_vec(rc, cand, j)
+        costs = best[cand] + rc.cost(cand, j)
         k = int(np.argmin(costs))
         best[j] = float(costs[k])
         parent[j] = int(cand[k])
@@ -281,22 +265,6 @@ def split_dp(rc: _RangeCost, lens: np.ndarray, page_budget: int) -> np.ndarray:
         bounds.append(int(parent[j]))
         j = int(parent[j])
     return np.array(sorted(bounds), dtype=np.int64)
-
-
-def _range_cost_vec(rc: _RangeCost, starts: np.ndarray, end: int) -> np.ndarray:
-    """Vectorized cost_bits of [i, end) for an array of i."""
-    counts = (rc.cum[end] - rc.cum[starts]).astype(np.float64)
-    totals = counts.sum(axis=-1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ent = np.where(counts > 0, counts * np.log2(counts, where=counts > 0), 0.0)
-    h = np.where(totals > 0, totals * np.log2(np.maximum(totals, 1)), 0.0) - ent.sum(axis=-1)
-    if rc.cum_nov is not None:
-        novc = (rc.cum_nov[end] - rc.cum_nov[starts]).astype(np.float64)
-        cond = np.minimum(np.log2(np.maximum(novc, 1.0)), rc.bucket_cap)
-        h = h + (counts * cond).sum(axis=-1)
-    if rc.cum_gh is not None:
-        h = np.minimum(h, rc.cum_gh[end] - rc.cum_gh[starts])
-    return h + _PAGE_HEADER_BYTES * 8.0
 
 
 def split_by_cost(
@@ -355,7 +323,7 @@ def split_by_cost(
         if end - start <= 1:
             continue
         mid, split_c = _find_minimum(rc, start, end)
-        orig_c = rc.cost_bits(start, end)
+        orig_c = rc.cost(start, end)
         if split_c < orig_c or -neg_m > page_budget:
             bounds_set.append(mid)
             n_pages += 1

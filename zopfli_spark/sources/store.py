@@ -28,6 +28,7 @@ import shutil
 import time
 import uuid
 import warnings
+from collections.abc import Iterator
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -243,11 +244,16 @@ def compact_lineage(root: str, spark: SparkSession) -> int:
     )
 
 
-def maybe_compact_lineage(root: str, spark: SparkSession, threshold_files: int = 64) -> bool:
+#: the lineage dir is compacted once it holds more parquet files than this
+COMPACT_AFTER_FILES = 64
+
+
+def maybe_compact_lineage(root: str, spark: SparkSession) -> bool:
     """Shared opportunistic-compaction trigger for the batch and streaming
     append paths: compact once the append-only dir has accumulated more
-    than ``threshold_files`` parquet files."""
-    if threshold_files >= 0 and store_partition_count(root, "lineage") > threshold_files:
+    than :data:`COMPACT_AFTER_FILES` parquet files (a negative value turns
+    compaction off)."""
+    if COMPACT_AFTER_FILES >= 0 and store_partition_count(root, "lineage") > COMPACT_AFTER_FILES:
         compact_lineage(root, spark)
         return True
     return False
@@ -327,20 +333,19 @@ def encode_and_commit(
     config: EngineConfig = DEFAULT_CONFIG,
     append: bool = False,
     split_hints: DataFrame | dict | None = None,
-    compact_after_files: int = 64,
 ) -> DataFrame:
     """Encode ``df`` against the store's lineage (hits skip the search),
     commit the pages as a snapshot (:func:`commit_snapshot`), and append
     their lineage. Returns the committed pages, read back from their files.
     When the append-only lineage dir has accumulated more than
-    ``compact_after_files`` parquet files, it is compacted to one row per
+    :data:`COMPACT_AFTER_FILES` parquet files, it is compacted to one row per
     live key and group id, so resume reads stay O(live groups), not O(run
     history)."""
     spark = df.sparkSession
     pages = encode_table(df, config, lineage=read_lineage(spark, root), split_hints=split_hints)
     added = _read_files(spark, root, commit_snapshot(pages, root, append)["added"])
     append_lineage(added, root, config)
-    maybe_compact_lineage(root, spark, compact_after_files)
+    maybe_compact_lineage(root, spark)
     return added
 
 
@@ -350,14 +355,13 @@ def encode_to_store(
     config: EngineConfig = DEFAULT_CONFIG,
     run_id: str = "run",
     split_hints: DataFrame | dict | None = None,
-    compact_after_files: int = 64,
 ) -> DataFrame:
     """End-to-end encode with resume: :func:`encode_and_commit` as an
     overwrite snapshot, then the run's metrics appended. Returns the metrics.
     Earlier snapshots stay readable (time travel) until
     :func:`expire_snapshots` drops them (``cli gc --keep-snapshots``).
     ``split_hints`` pins page boundaries (see engine.encode_table)."""
-    pages = encode_and_commit(df, root, config, False, split_hints, compact_after_files)
+    pages = encode_and_commit(df, root, config, False, split_hints)
     m = metrics_table(pages, run_id)
     append_metrics(m, root)
     return m
@@ -440,8 +444,10 @@ def _marker_target(d: str, marker: str) -> str | None:
     return name if name and os.path.isfile(os.path.join(d, name)) else ""
 
 
-def _committed_names(d: str) -> list[str]:
-    """Manifest file names that WON their sequence, in sequence order.
+def _committed_names(d: str) -> Iterator[str]:
+    """Manifest file names that WON their sequence, newest first. Lazy, so
+    a reader that wants the current snapshot opens one marker and one
+    manifest, not the whole history.
 
     The commit point for sequence k is the atomic-exclusive LINKING of
     ``<k>.commit`` (``os.link`` of a fully written private temp file —
@@ -459,57 +465,58 @@ def _committed_names(d: str) -> list[str]:
     ``*.json`` listing for stores written before the marker protocol
     existed."""
     names = os.listdir(d)
-    markers = sorted(f for f in names if f.endswith(".commit"))
-    if markers:
-        out = []
-        for m in markers:
-            name = _marker_target(d, m)
-            if name == "":
-                # skip with a warning — the table stays readable, the hole
-                # is at most one lost-race commit
-                warnings.warn(
-                    f"snapshot store {d}: skipping bad commit marker {m!r}", stacklevel=2
-                )
-            elif name:  # None: deleted under a concurrent expire
-                out.append(name)
-        return out
+    markers = sorted((f for f in names if f.endswith(".commit")), reverse=True)
+    for m in markers:
+        name = _marker_target(d, m)
+        if name == "":
+            # skip with a warning — the table stays readable, the hole
+            # is at most one lost-race commit
+            warnings.warn(f"snapshot store {d}: skipping bad commit marker {m!r}", stacklevel=3)
+        elif name:  # None: deleted under a concurrent expire
+            yield name
     # Legacy fallback: stores written before the marker protocol have a
     # LATEST pointer but no .commit files. Gate on that signature — on a
     # marker-era store mid-first-commit (manifest visible via os.replace but
     # the marker not yet claimed, so no LATEST either), an uncommitted
     # manifest must NOT be treated as committed (ADVICE r3 low).
-    if "LATEST" in names:
-        return sorted(f for f in names if f.endswith(".json"))
-    return []
+    if not markers and "LATEST" in names:
+        yield from sorted((f for f in names if f.endswith(".json")), reverse=True)
+
+
+def _manifests(root: str, snapshot_id: str | None = None) -> Iterator[dict]:
+    """Committed manifests, newest first, each loaded only when the caller
+    reaches it; with ``snapshot_id``, only the one named
+    ``<seq>-<snapshot_id>.json``."""
+    d = _snap_dir(root)
+    if not os.path.isdir(d):
+        return
+    for name in _committed_names(d):
+        if snapshot_id is None or name.endswith(f"-{snapshot_id}.json"):
+            try:
+                with open(os.path.join(d, name)) as fh:
+                    yield json.load(fh)
+            except FileNotFoundError:  # expired under this reader
+                continue
 
 
 def list_snapshots(root: str) -> list[dict]:
     """Committed manifests in sequence order (empty if no snapshot layer)."""
-    d = _snap_dir(root)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in _committed_names(d):
-        p = os.path.join(d, name)
-        if os.path.exists(p):
-            with open(p) as fh:
-                out.append(json.load(fh))
-    return sorted(out, key=lambda m: m["sequence"])
+    return sorted(_manifests(root), key=lambda m: m["sequence"])
 
 
 def current_snapshot(root: str) -> dict | None:
-    snaps = list_snapshots(root)
-    return snaps[-1] if snaps else None
+    """The newest committed manifest; loads no other."""
+    return next(_manifests(root), None)
 
 
 def _snapshot(root: str, snapshot_id: str | None = None) -> dict:
     """The committed snapshot ``snapshot_id``; by default the current one,
     or the legacy base (:func:`_legacy_base`) while none is committed."""
     if snapshot_id is not None:
-        for m in list_snapshots(root):
-            if m["snapshot_id"] == snapshot_id:
-                return m
-        raise KeyError(f"snapshot {snapshot_id} not found")
+        m = next(_manifests(root, snapshot_id), None)
+        if m is None:
+            raise KeyError(f"snapshot {snapshot_id} not found")
+        return m
     m = current_snapshot(root) or _legacy_base(root)
     if m is None:
         raise FileNotFoundError(f"no committed pages under {root}")
