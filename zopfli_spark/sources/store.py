@@ -494,9 +494,10 @@ def _manifests(root: str, snapshot_id: str | None = None) -> Iterator[dict]:
         if snapshot_id is None or name.endswith(f"-{snapshot_id}.json"):
             try:
                 with open(os.path.join(d, name)) as fh:
-                    yield json.load(fh)
+                    m = json.load(fh)
             except FileNotFoundError:  # expired under this reader
                 continue
+            yield m
 
 
 def list_snapshots(root: str) -> list[dict]:
