@@ -345,8 +345,12 @@ def _craft_zlib_garbage():
 
 
 def _craft_for_zlib_truncated():
+    import zlib as _z
+
     v = (np.arange(400, dtype=np.int64) * 7919) % 1000
-    blob = kernels.encode_forced(v, "for_zlib")
+    width = 10  # bit_width(999)
+    packed = bitio.pack_bits(v.astype(np.uint64), width)
+    blob = bytes([kernels.FOR_ZLIB]) + _i64(0) + bytes([width]) + _z.compress(packed, 6)
     return blob[: len(blob) - 6], 400
 
 

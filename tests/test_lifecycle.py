@@ -228,9 +228,8 @@ def test_expire_keeps_shared_dirs(spark, root):
 
 
 def test_uncommitted_manifest_is_invisible(root):
-    """ADVICE r3 low: a bare manifest with no .commit marker on a marker-era
-    store (no LATEST) must not be treated as committed; the legacy fallback
-    only fires for stores that predate the protocol (LATEST, no markers)."""
+    """ADVICE r3 low: a bare manifest with no .commit marker (a first commit
+    between its manifest landing and its marker claim) is not committed."""
     sd = os.path.join(root, "snapshots")
     os.makedirs(sd)
     manifest = {
@@ -241,35 +240,6 @@ def test_uncommitted_manifest_is_invisible(root):
     with open(os.path.join(sd, "000001-abc.json"), "w") as fh:
         json.dump(manifest, fh)
     assert list_snapshots(root) == []  # mid-first-commit window: invisible
-    with open(os.path.join(sd, "LATEST"), "w") as fh:
-        fh.write("000001-abc.json")
-    assert [m["snapshot_id"] for m in list_snapshots(root)] == ["abc"]  # legacy
-
-
-def test_crashed_first_commit_keeps_legacy_files_readable(root):
-    """A store written before the snapshot layer (no snapshots/) reads as
-    its flat page files. A first commit creates snapshots/ before it moves
-    any file in; if it dies before its manifest lands, the legacy files
-    stay the readable base, and only the dead commit's file is an orphan."""
-    from zopfli_spark.sources.store import _init_snapshots, _snapshot
-
-    legacy = ["pages/part_id=0/part-0.parquet", "pages/part_id=1/part-1.parquet"]
-    moved = "pages/part_id=0/abc-part-0.parquet"
-
-    def touch(rel):
-        os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
-        with open(os.path.join(root, rel), "wb") as fh:
-            fh.write(b"x")
-
-    for rel in legacy:
-        touch(rel)
-    assert _snapshot(root)["files"] == legacy
-    _init_snapshots(root)  # write_pages, right before its move
-    touch(moved)  # the move; the commit dies before _commit_manifest
-    assert list_snapshots(root) == []
-    assert _snapshot(root)["files"] == legacy
-    assert remove_orphan_files(root, older_than_s=0.0) == [moved]
-    assert all(os.path.isfile(os.path.join(root, rel)) for rel in legacy)
 
 
 def test_strings_from_utf8_over_2gib_raises():
@@ -312,51 +282,6 @@ def test_read_lineage_handles_pre_fix_int32_mode_files(spark, tmp_path):
     assert sorted(r["mode"] for r in read_lineage(spark, root).collect()) == [3, 2**40]
     # missing-lineage path still returns None
     assert read_lineage(spark, str(tmp_path / "nope")) is None
-
-
-def test_upgrade_from_lineage_without_part_id(spark, root):
-    """Upgrade path: lineage files written before the part_id column read it
-    as null and are never delivered, so the first run on such a store
-    searches every group, to the bytes of a cold encode. Its own rows carry
-    part_id and win the per-key dedup over the legacy rows, whichever side
-    of them the legacy files sit on, so the next run hits every group."""
-    from zopfli_spark import encode_table
-    from zopfli_spark.lineage import lineage_from_pages
-
-    cfg = EngineConfig(**CFG_KW)
-    df = synth_tokens_df(spark, 300, seed=11).cache()
-    cold = encode_table(df, cfg).cache()
-    legacy = lineage_from_pages(cold, cfg.mode).drop("part_id")
-    assert len(legacy.columns) == 6
-    lin_dir = os.path.join(root, "lineage")
-    legacy.write.parquet(lin_dir)
-    cols = ["part_id", "page_id", "codec", "checksum", "enc_bytes", "pc", "hc"]
-    cold_rows = list(_sig(cold)[cols].itertuples(index=False))
-
-    # a key with only legacy rows keeps one
-    assert read_lineage(spark, root).count() == legacy.count()
-
-    encode_to_store(df, root, cfg, run_id="r1")
-    sig1 = _page_sig(spark, root)
-    assert (sig1["resumed"] == 0).all()
-    assert list(sig1[cols].itertuples(index=False)) == cold_rows
-
-    # legacy rows now sit both before and after the routed ones
-    legacy.write.mode("append").parquet(lin_dir)
-    n_groups = cold.select("part_id").distinct().count()
-    lin = read_lineage(spark, root)
-    assert lin.count() == n_groups
-    assert lin.filter(F.col("part_id").isNull()).count() == 0
-    encode_to_store(df, root, cfg, run_id="r2")
-    sig2 = _page_sig(spark, root)
-    assert (sig2["resumed"] == 1).all(), "every group should hit the lineage"
-    assert list(sig2[cols].itertuples(index=False)) == cold_rows
-
-    # compaction keeps the routed row of every key
-    compact_lineage(root, spark)
-    on_disk = spark.read.parquet(lin_dir)
-    assert on_disk.count() == n_groups
-    assert on_disk.filter(F.col("part_id").isNull()).count() == 0
 
 
 def test_same_content_at_two_group_ids_both_resume(spark, root):
@@ -437,25 +362,31 @@ def test_rle_overflow_crafted_blob_raises_not_crashes():
         decode_blob(blob, n)
 
 
-def test_remove_orphans_refuses_ambiguous_store(root):
-    """Review r4: a store with manifests but no committed snapshot (lost
-    LATEST on a legacy store) must refuse the sweep — otherwise every page
-    file reads as an orphan and a fully committed store gets deleted."""
-    sd = os.path.join(root, "snapshots")
-    os.makedirs(sd)
-    rel = "pages/part_id=0/abc-part.parquet"
-    with open(os.path.join(sd, "000001-abc.json"), "w") as fh:
-        json.dump({"snapshot_id": "abc", "sequence": 1, "files": [rel]}, fh)
-    d = os.path.join(root, rel)
-    os.makedirs(os.path.dirname(d))
-    with open(d, "wb") as fh:
-        fh.write(b"x")
+def _write(root, rel, text="x"):
+    path = os.path.join(root, rel)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as fh:
+        fh.write(text)
+
+
+@pytest.mark.parametrize("layout", ["manifest-without-marker", "pointer-only", "flat-pages"])
+def test_remove_orphans_refuses_ambiguous_store(spark, root, layout):
+    """A store with no committed snapshot has no pages to read and none to
+    sweep: a manifest whose marker is missing, a snapshots/ dir holding only
+    a manifest and a LATEST pointer (stores from before the commit markers),
+    and flat pages/ files with no snapshots/ (stores from before the snapshot
+    layer). Sweeping would read every page file as an orphan and delete it,
+    so the sweep refuses and the file survives."""
+    rel = "pages/part_id=0/x.parquet"
+    _write(root, rel)
+    if layout != "flat-pages":
+        manifest = {"snapshot_id": "abc", "sequence": 1, "files": [rel]}
+        _write(root, "snapshots/000001-abc.json", json.dumps(manifest))
+    if layout == "pointer-only":
+        _write(root, "snapshots/LATEST", "000001-abc.json")
+    assert list_snapshots(root) == []
+    with pytest.raises(FileNotFoundError):
+        read_pages(spark, root)
     with pytest.raises(RuntimeError, match="refusing to sweep"):
         remove_orphan_files(root, older_than_s=0.0)
-    assert os.path.isfile(d), "data must survive the refused sweep"
-    # restoring the legacy pointer re-exposes the snapshot; sweep then
-    # correctly treats the listed file as live
-    with open(os.path.join(sd, "LATEST"), "w") as fh:
-        fh.write("000001-abc.json")
-    assert remove_orphan_files(root, older_than_s=0.0) == []
-    assert os.path.isfile(d)
+    assert os.path.isfile(os.path.join(root, rel)), "data must survive the refused sweep"

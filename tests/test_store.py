@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -17,7 +15,6 @@ from zopfli_spark.sources.store import (
     encode_to_store,
     read_lineage,
     read_pages,
-    remove_orphan_files,
 )
 
 CFG = EngineConfig(
@@ -79,14 +76,13 @@ def test_lineage_latest_record_wins(spark, tokens_df, tmp_path_factory):
     assert dup.count() == 0
 
 
-def _page_files(root):
-    pages = os.path.join(root, "pages")
-    return {
-        os.path.relpath(os.path.join(d, f), root)
-        for d, _, fs in os.walk(pages)
-        for f in fs
-        if f.endswith(".parquet")
-    }
+def test_read_lineage_plan_is_one_exchange(spark, tokens_df, tmp_path_factory):
+    """The live-lineage dedup is one aggregate: a partial dedup before the
+    store's one exchange and no window over the whole table."""
+    root = str(tmp_path_factory.mktemp("store"))
+    append_lineage(encode_table(tokens_df, CFG), root, CFG)
+    plan = read_lineage(spark, root)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange ") == 1 and "Window" not in plan
 
 
 def test_failed_encode_leaves_store_readable(spark, tokens_df, tmp_path_factory):
@@ -109,65 +105,3 @@ def test_failed_encode_leaves_store_readable(spark, tokens_df, tmp_path_factory)
     decoded = decode_table(read_pages(spark, root), CFG)
     assert roundtrip_check(tokens_df, decoded).count() == 0
     assert current_snapshot(root) == first
-
-
-def _legacy_store(spark, df, root):
-    """A store as written before the snapshot layer: Spark's overwrite of
-    the flat pages/ table, then the lineage of the pages read back."""
-    pages_dir = os.path.join(root, "pages")
-    (
-        encode_table(df, CFG)
-        .repartition(F.col("part_id"))
-        .sortWithinPartitions("part_id", "page_id")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(1 << 30))
-        .partitionBy("part_id")
-        .parquet(pages_dir)
-    )
-    append_lineage(spark.read.parquet(pages_dir), root, CFG)
-
-
-def test_legacy_store_reads_resumes_and_sweeps(spark, tokens_df, tmp_path_factory):
-    """A legacy store decodes through read_pages; the first commit into it
-    resumes every group from its lineage, and its overwrite leaves the old
-    files to the orphan sweep, which then keeps only the new snapshot's."""
-    root = str(tmp_path_factory.mktemp("legacy"))
-    _legacy_store(spark, tokens_df, root)
-    legacy_files = _page_files(root)
-    assert not os.path.exists(os.path.join(root, "snapshots"))
-    assert roundtrip_check(tokens_df, decode_table(read_pages(spark, root), CFG)).count() == 0
-    assert remove_orphan_files(root, older_than_s=0.0) == []  # all listed
-
-    encode_to_store(tokens_df, root, CFG, run_id="first-commit")
-    snap = current_snapshot(root)
-    assert snap["operation"] == "overwrite" and snap["parent_id"] is None
-    pages = read_pages(spark, root)
-    assert pages.filter(F.col("resumed") != 1).count() == 0
-    assert not legacy_files & set(snap["files"])
-
-    assert set(remove_orphan_files(root, older_than_s=0.0)) == legacy_files
-    assert _page_files(root) == set(snap["files"])
-    assert roundtrip_check(tokens_df, decode_table(read_pages(spark, root), CFG)).count() == 0
-
-
-def test_stream_append_keeps_legacy_docs(spark, tmp_path_factory):
-    """A micro-batch appended to a legacy store keeps the old docs: the
-    legacy files are the first commit's parent."""
-    from zopfli_spark.streaming.encode_stream import encode_stream
-
-    root = str(tmp_path_factory.mktemp("legacy_stream"))
-    src = str(tmp_path_factory.mktemp("legacy_src"))
-    old = synth_tokens_df(spark, 60, seed=31).cache()
-    new = synth_tokens_df(spark, 40, seed=32).select(
-        F.concat(F.lit("n_"), "doc_id").alias("doc_id"), "tokens", "n_tok", "source"
-    ).cache()
-    _legacy_store(spark, old, root)
-    legacy_files = _page_files(root)
-    new.coalesce(1).write.parquet(src + "/b0")
-    stream = spark.readStream.schema(new.schema).parquet(src + "/b0")
-    encode_stream(stream, root, CFG, trigger_once=True,
-                  checkpoint=str(tmp_path_factory.mktemp("legacy_ckpt"))).awaitTermination(300)
-    snap = current_snapshot(root)
-    assert snap["operation"] == "append" and legacy_files < set(snap["files"])
-    decoded = decode_table(read_pages(spark, root), CFG)
-    assert roundtrip_check(old.unionByName(new), decoded).count() == 0

@@ -26,8 +26,8 @@ Blob format (self-describing, recursive for composites)::
     DELTA       4: [i64 first][u8 width][packed zigzag diffs]
     RLE         5: [u32 n_runs][u32 len(values_blob)][values_blob][lengths_blob]
     DICT        6: [u32 card][u32 len(dict_blob)][dict_blob][indices_blob]
-    ZLIB        7: [zlib.compress of '<i4' raw]
-    FOR_ZLIB    8: [i64 base][u8 width][zlib of packed residuals]
+    ZLIB        7: [zlib.compress of '<i4' raw]              (decode only)
+    FOR_ZLIB    8: [i64 base][u8 width][zlib of packed residuals] (decode only)
     HUFFMAN    10: [u32 card][u32 len(dict_blob)][dict_blob]
                    [u8 max_code_len][u32 len(len_tbl)][len_tbl — nested blob]
                    [u16 miniblock K][u32 len(offsets_blob)][offsets_blob]
@@ -148,15 +148,6 @@ def _enc_for(v: np.ndarray, base: int, width: int) -> bytes:
 
 def _enc_delta(v: np.ndarray, zz: np.ndarray, width: int) -> bytes:
     return bytes([DELTA]) + _I64.pack(int(v[0])) + bytes([width]) + pack_bits(zz, width)
-
-
-def _enc_zlib(v: np.ndarray, level: int) -> bytes:
-    return bytes([ZLIB]) + zlib.compress(v.astype("<i4").tobytes(), level)
-
-
-def _enc_for_zlib(v: np.ndarray, base: int, width: int, level: int) -> bytes:
-    resid = (v - base).astype(np.uint64)
-    return bytes([FOR_ZLIB]) + _I64.pack(int(base)) + bytes([width]) + zlib.compress(pack_bits(resid, width), level)
 
 
 def _zcomp(data: bytes, level: int, strategy: int) -> bytes:
@@ -825,10 +816,6 @@ def encode_forced(
         return blob
     if codec_name == "plane_zlib":
         return _enc_plane_zlib(v, vmin, w_for, zlib_level, plane_strategy)
-    if codec_name == "zlib":
-        return _enc_zlib(v, zlib_level)
-    if codec_name == "for_zlib":
-        return _enc_for_zlib(v, vmin, w_for, zlib_level)
     raise ValueError(f"unknown codec name {codec_name!r}")
 
 

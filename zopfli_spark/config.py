@@ -4,7 +4,12 @@ executors inside pandas-UDF closures."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+#: stop refine_boundaries after this many non-improving iterations
+#: (maxunsuccessful/--mui analog, reference src/zopfli/squeeze.c:609); the
+#: deep pass allows one more. Fixed, but still packed into ``mode``
+MAX_UNSUCCESSFUL = 3
 
 
 @dataclass(frozen=True)
@@ -65,9 +70,6 @@ class EngineConfig:
     #: squeeze-loop iterations: perturb-and-keep-best rounds per group
     #: (reference src/zopfli/squeeze.c:511-655, numiterations default 15)
     iterations: int = 5
-    #: stop after this many non-improving iterations (maxunsuccessful/--mui
-    #: analog, reference src/zopfli/squeeze.c:609)
-    max_unsuccessful: int = 3
     #: recompression passes (--pass analog, reference src/zopfli/deflate.c:
     #: 1728-1836): re-encode worst-ratio pages with the full-effort zlib
     #: family (level 9, both plane strategies), keep if smaller. Measured on
@@ -138,9 +140,6 @@ class EngineConfig:
     #: at different parallelism) produce byte-identical streams
     seed: int = 42
 
-    # --- verification ----------------------------------------------------
-    verify_checksums: bool = True
-
     @property
     def mode(self) -> int:
         """Codec-search config fingerprint for lineage keys — the mode
@@ -150,7 +149,7 @@ class EngineConfig:
         bits |= (self.zlib_level & 0xF) << 1
         bits |= (1 if self.split_mode == "cost" else 0) << 5
         bits |= (self.iterations & 0xFF) << 6
-        bits |= (self.max_unsuccessful & 0xF) << 14
+        bits |= (MAX_UNSUCCESSFUL & 0xF) << 14
         bits |= (self.recompress_passes & 0x3) << 18
         bits |= (1 if self.mode_grid else 0) << 20
         bits |= (1 if self.split_mode == "dp" else 0) << 21

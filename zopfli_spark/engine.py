@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from .codecs import kernels
 from .codecs.bitio import bit_width
 from .codecs.kernels import _GH_MAX_CARD, GROUP_HUFFMAN
-from .config import DEFAULT_CONFIG, EngineConfig
+from .config import DEFAULT_CONFIG, MAX_UNSUCCESSFUL, EngineConfig
 from .deploy import ensure_shipped, forget_zip_finders
 from .lineage import (
     group_content_hash,
@@ -772,7 +772,7 @@ def _refine(g: GroupCtx, row_bounds: np.ndarray, pages: list) -> tuple[np.ndarra
                 g.val_offsets,
                 g.encode,
                 iterations=c.iterations,
-                max_unsuccessful=c.max_unsuccessful,
+                max_unsuccessful=MAX_UNSUCCESSFUL,
                 seed_key=(c.seed, g.seed_hash),
             )
     row_bounds, pages, _ = merge_pass(
@@ -836,7 +836,7 @@ def _mode_grid(g: GroupCtx, row_bounds: np.ndarray, pages: list) -> tuple[np.nda
             g.val_offsets,
             g.encode,
             iterations=2 * c.iterations,
-            max_unsuccessful=c.max_unsuccessful + 1,
+            max_unsuccessful=MAX_UNSUCCESSFUL + 1,
             seed_key=(c.seed ^ 0xA11, g.seed_hash),
         )
         if n_improved:
@@ -1137,9 +1137,12 @@ def decode_table(
     probed from the plan itself: ``.rdd.getNumPartitions()`` on a fused
     encode→decode pipeline materializes upstream shuffle stages at
     plan-construction time under AQE AND would coalesce away the
-    one-group-per-task balance encode_table arranges (ADVICE r2 medium)."""
+    one-group-per-task balance encode_table arranges (ADVICE r2 medium).
+
+    Every page and dictionary row is checked against its stored CRC32.
+    ``config`` sets nothing here (pages are self-describing); it is kept so
+    callers pass the same config to both directions."""
     ensure_shipped(pages.sparkSession)
-    verify = config.verify_checksums
 
     # list<int32> offsets are 32-bit: cap accumulated values per OUTPUT batch
     # well below 2^31 (a few hundred MB of tokens) — one Arrow input batch of
@@ -1194,14 +1197,14 @@ def decode_table(
                     hdr = header.as_py()
                     if len(hdr) == 0:
                         blob = payload.as_py()
-                        if verify and zlib.crc32(blob) != int(checksum.as_py()):
+                        if zlib.crc32(blob) != int(checksum.as_py()):
                             raise ValueError("group dictionary row checksum mismatch")
                         cur_gd = kernels.GroupDict(blob)
                         continue
                     doc_ids, sources, lens, values = decode_page(
                         hdr,
                         payload.as_py(),
-                        int(checksum.as_py()) if verify else None,
+                        int(checksum.as_py()),
                         split_rows=False,
                         group_dict=cur_gd,
                     )

@@ -22,8 +22,9 @@ plan rows on that group's partition and cogroups them into the encode UDF,
 which trusts only a plan whose content_hash equals the group's. Group ids are
 a pure function of (doc_id, Σ n_tok, config) (plans/planner.py), so the same
 content lands on the same id at the same num_groups; no plan is collected to
-the driver at any scale. Rows from stores written before ``part_id`` existed
-read it as null and are never delivered.
+the driver at any scale. ``part_id`` is never null in a row this code
+writes; lineage from builds that predate the column is not a layout the store
+reads, and such a store is re-encoded (sources/store.py).
 """
 
 from __future__ import annotations

@@ -129,12 +129,13 @@ def encode_page(
         name = forced_codec
     else:
         if zlib_only:
-            # recompress pass: only the zlib family responds to the level
-            # knob; PLAIN stays in as the stored-block guarantee. 'both'
-            # strategy = the try-harder analog for the plane codec.
-            from ..codecs.kernels import FOR_ZLIB, PLAIN, PLANE_ZLIB, ZLIB
+            # recompress pass: only PLANE_ZLIB (the one zlib-family codec
+            # encode_best emits) responds to the level knob; PLAIN stays in
+            # as the stored-block guarantee. 'both' strategy = the
+            # try-harder analog for the plane codec.
+            from ..codecs.kernels import PLAIN, PLANE_ZLIB
 
-            zl = frozenset({PLAIN, ZLIB, FOR_ZLIB, PLANE_ZLIB})
+            zl = frozenset({PLAIN, PLANE_ZLIB})
             allowed = zl if allowed is None else (allowed & zl) | {PLAIN}
             plane_strategy = "both"
         payload = encode_best(
@@ -149,7 +150,7 @@ def encode_page(
         if payload is None:
             return None
         name = blob_codec_name(payload)
-        if level_tag is not None and name in ("zlib", "for_zlib", "plane_zlib"):
+        if level_tag is not None and name == "plane_zlib":
             name = f"{name}@{level_tag}"
     header = build_header(doc_ids, sources, lens)
     if budget is not None and len(header) + len(payload) >= budget:

@@ -6,7 +6,8 @@ src/zopfli/gzip_container.c:33-83, zip_container.c:33-155). Here the
 envelope is a partitioned Parquet table with Iceberg-style snapshots:
 
     <root>/pages/part_id=<g>/*.parquet   immutable page files
-    <root>/snapshots/                    manifests: each snapshot's page files
+    <root>/snapshots/<seq>-<id>.json     manifests: each snapshot's page files
+    <root>/snapshots/<seq>.commit        commit markers: which manifest won <seq>
     <root>/lineage/                      StatsDB-analog resume records (append-only)
     <root>/metrics/                      per-run metrics rows (append-only)
 
@@ -18,7 +19,14 @@ property the resume path needs, mirroring the reference's StatsDB surviving
 SIGINT (src/zopfli/inthandler.c:7-15, README:75-78). A read scans one
 snapshot's files as one relation; the `part_id` partition column still
 prunes files before any I/O (checked in tests/test_store.py via the
-physical plan)."""
+physical plan).
+
+This is the only layout the store reads or writes. A store with no
+committed snapshot — including the flat ``pages/`` and pointer-only
+``snapshots/`` layouts of earlier builds — has no pages to read
+(:func:`read_pages` raises FileNotFoundError) and none to sweep
+(:func:`remove_orphan_files` raises); the encoder is deterministic, so
+such a store is migrated by re-encoding its source table."""
 
 from __future__ import annotations
 
@@ -32,7 +40,7 @@ from collections.abc import Iterator
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..engine import PAGES_SCHEMA, encode_table, metrics_table
@@ -103,9 +111,6 @@ def write_pages(pages: DataFrame, root: str) -> list[str]:
             .partitionBy("part_id")
             .parquet(staging)
         )
-        # snapshots/ exists before any file lands in pages/: a store that
-        # has it is never taken for a legacy one (_legacy_base)
-        _init_snapshots(root)
         return [os.path.relpath(f, root) for f in _move_files(staging, pages_dir)]
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -150,17 +155,9 @@ def _live_lineage(df: DataFrame) -> DataFrame:
     the reference's StatsDBSave (src/zopfli/deflate.c:1230-1272), per group
     id: resume delivers a plan only to the group id it was recorded under,
     so the same content recorded at two num_groups keeps a row at each id.
-    A legacy row whose part_id is null (written before part_id existed) is
-    never delivered; it is dropped once its key has a row with a part_id."""
-    routed = F.bool_or(F.col("part_id").isNotNull()).over(
-        Window.partitionBy("content_key", "mode")
-    )
-    return (
-        df.withColumn("_routed", routed)
-        .filter(F.col("part_id").isNotNull() | ~F.col("_routed"))
-        .dropDuplicates(["content_key", "mode", "part_id"])
-        .select(*df.columns)
-    )
+    Every record of such a key is byte-identical (deterministic engine), so
+    any one survives; the dedup runs map-side before its one exchange."""
+    return df.dropDuplicates(["content_key", "mode", "part_id"])
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
@@ -173,12 +170,12 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
     searched again, to the same bytes; no stale plan is ever delivered."""
     path = os.path.join(root, "lineage")
     try:
-        # explicit schema: Spark's parquet reader widens int32 files into the
-        # `mode long` column, so a store whose early runs predate the
-        # int64-mode fix (r4) reads cleanly alongside new appends — a plain
-        # schema-inferred read fails with PARQUET_COLUMN_DATA_TYPE_MISMATCH
-        # on such mixed stores (verified empirically on Spark 4.1); files
-        # written before part_id existed read it as null
+        # explicit schema: building the DataFrame runs no inference job, and
+        # Spark's parquet reader widens int32 files into the `mode long`
+        # column, so a store whose early runs predate the int64-mode fix (r4)
+        # reads cleanly alongside new appends — a plain schema-inferred read
+        # fails with PARQUET_COLUMN_DATA_TYPE_MISMATCH on such mixed stores
+        # (verified empirically on Spark 4.1)
         df = (
             spark.read.schema(LINEAGE_SCHEMA)
             .option("ignoreMissingFiles", "true")
@@ -262,34 +259,16 @@ def maybe_compact_lineage(root: str, spark: SparkSession) -> bool:
 def append_metrics(metrics: DataFrame, root: str) -> None:
     """Append per-run metrics rows, stamped with the append wall-clock so
     retention (:func:`compact_metrics`) can order runs without trusting
-    caller-supplied run_id strings to sort chronologically.
-
-    Schema note (ADVICE r5 low): pre-r5 files lack ``appended_at``, so the
-    metrics dir can hold MIXED schemas until a :func:`compact_metrics` run
-    (the upgrade path) rewrites it. Read the dir through
-    :func:`read_metrics`, which always merges footer schemas — a plain
-    ``spark.read.parquet`` may drop the column or surface it inconsistently
-    depending on which file's footer wins."""
+    caller-supplied run_id strings to sort chronologically."""
     metrics.withColumn("appended_at", F.lit(float(time.time()))).write.mode(
         "append"
     ).parquet(os.path.join(root, "metrics"))
 
 
-def _read_metrics_files(spark: SparkSession, *paths: str) -> DataFrame:
-    """Metrics files merged by footer schema (mixed pre-/post-r5 footers —
-    see :func:`append_metrics`); rows from files that predate the
-    ``appended_at`` stamp read it as null."""
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    if "appended_at" not in df.columns:
-        df = df.withColumn("appended_at", F.lit(None).cast("double"))
-    return df
-
-
 def read_metrics(spark: SparkSession, root: str) -> DataFrame | None:
-    """Read the metrics log (:func:`_read_metrics_files`). Returns None if
-    there is none."""
+    """Read the metrics log. Returns None if there is none."""
     try:
-        return _read_metrics_files(spark, os.path.join(root, "metrics"))
+        return spark.read.parquet(os.path.join(root, "metrics"))
     except Exception:
         return None
 
@@ -302,9 +281,8 @@ def compact_metrics(
     only the N most recent run_ids by append timestamp — the third store
     surface's lifecycle (lineage and snapshots got theirs in r4; metrics
     appended forever, VERDICT r4 missing #3). Same crash/concurrency
-    discipline as :func:`compact_lineage` (:func:`_compact`); pre-r5 files
-    without ``appended_at`` rank as oldest, so compacting is also the
-    upgrade path. Returns rows kept, or -1 if there were no metrics."""
+    discipline as :func:`compact_lineage` (:func:`_compact`). Returns rows
+    kept, or -1 if there were no metrics."""
 
     def keep(df: DataFrame) -> DataFrame:
         live = df.dropDuplicates()
@@ -312,7 +290,7 @@ def compact_metrics(
             return live
         recent = (
             live.groupBy("run_id")
-            .agg(F.max(F.coalesce("appended_at", F.lit(0.0))).alias("_at"))
+            .agg(F.max("appended_at").alias("_at"))
             .orderBy(F.desc("_at"), F.desc("run_id"))
             .limit(keep_runs)
             .select("run_id")
@@ -322,7 +300,7 @@ def compact_metrics(
     return _compact(
         spark,
         os.path.join(root, "metrics"),
-        lambda files: _read_metrics_files(spark, *files),
+        lambda files: spark.read.parquet(*files),
         keep,
     )
 
@@ -378,8 +356,6 @@ def encode_to_store(
 #   <root>/pages/part_id=<g>/<id>-part-*.parquet   immutable page files
 #   <root>/snapshots/<seq>-<id>.json               manifest: files + stats
 #   <root>/snapshots/<seq>.commit                  commit point (_committed_names)
-#   <root>/snapshots/LATEST                        advisory pointer to the newest manifest
-#   <root>/snapshots/LEGACY                        pre-snapshot files (_legacy_base)
 #
 # * commits are atomic: the files move in first, then the manifest lands
 #   (tmp + os.replace) and the commit marker claims its sequence; a failed
@@ -394,39 +370,6 @@ def encode_to_store(
 
 def _snap_dir(root: str) -> str:
     return os.path.join(root, "snapshots")
-
-
-def _legacy_base(root: str) -> dict | None:
-    """The parent of a store's first commit, as a manifest-shaped dict, or
-    None. A store without ``snapshots/`` was written before the snapshot
-    layer, and its flat ``pages/`` files are the base. Once ``snapshots/``
-    exists, the base is the file list it was created with (``LEGACY``), so a
-    first commit that fails or crashes leaves those files readable."""
-    d = _snap_dir(root)
-    if os.path.isdir(d):
-        try:
-            with open(os.path.join(d, "LEGACY")) as fh:
-                return json.load(fh)
-        except OSError:
-            return None
-    files = [os.path.relpath(f, root) for f in _parquet_files(os.path.join(root, "pages"))]
-    return {"snapshot_id": None, "sequence": 0, "files": files} if files else None
-
-
-def _init_snapshots(root: str) -> None:
-    """Create ``snapshots/`` holding ``LEGACY`` in one rename, so no reader
-    ever sees the dir without the legacy base."""
-    d = _snap_dir(root)
-    if os.path.isdir(d):
-        return
-    tmp = f"{d}.{uuid.uuid4().hex[:12]}.tmp"
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "LEGACY"), "w") as fh:
-        json.dump(_legacy_base(root), fh)
-    try:
-        os.rename(tmp, d)
-    except OSError:  # a concurrent first commit created it
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _marker_target(d: str, marker: str) -> str | None:
@@ -459,13 +402,11 @@ def _committed_names(d: str) -> Iterator[str]:
     snapshots *directory* as a manifest, crashed, and lost its snapshot). A
     crashed or lost-race writer leaves at most an unreferenced manifest or page
     files, never a torn table. Defensively, readers still skip
-    empty/unreadable markers and markers naming a missing manifest (a
-    legacy store could hold one from the pre-link protocol) instead of
-    trusting marker content (VERDICT r5 next #8). Falls back to bare
-    ``*.json`` listing for stores written before the marker protocol
-    existed."""
-    names = os.listdir(d)
-    markers = sorted((f for f in names if f.endswith(".commit")), reverse=True)
+    empty/unreadable markers and markers naming a missing manifest (the
+    pre-link protocol could leave one) instead of
+    trusting marker content (VERDICT r5 next #8). A manifest no marker
+    names is never committed."""
+    markers = sorted((f for f in os.listdir(d) if f.endswith(".commit")), reverse=True)
     for m in markers:
         name = _marker_target(d, m)
         if name == "":
@@ -474,13 +415,6 @@ def _committed_names(d: str) -> Iterator[str]:
             warnings.warn(f"snapshot store {d}: skipping bad commit marker {m!r}", stacklevel=3)
         elif name:  # None: deleted under a concurrent expire
             yield name
-    # Legacy fallback: stores written before the marker protocol have a
-    # LATEST pointer but no .commit files. Gate on that signature — on a
-    # marker-era store mid-first-commit (manifest visible via os.replace but
-    # the marker not yet claimed, so no LATEST either), an uncommitted
-    # manifest must NOT be treated as committed (ADVICE r3 low).
-    if not markers and "LATEST" in names:
-        yield from sorted((f for f in names if f.endswith(".json")), reverse=True)
 
 
 def _manifests(root: str, snapshot_id: str | None = None) -> Iterator[dict]:
@@ -501,7 +435,7 @@ def _manifests(root: str, snapshot_id: str | None = None) -> Iterator[dict]:
 
 
 def list_snapshots(root: str) -> list[dict]:
-    """Committed manifests in sequence order (empty if no snapshot layer)."""
+    """Committed manifests in sequence order (empty if none is committed)."""
     return sorted(_manifests(root), key=lambda m: m["sequence"])
 
 
@@ -511,14 +445,13 @@ def current_snapshot(root: str) -> dict | None:
 
 
 def _snapshot(root: str, snapshot_id: str | None = None) -> dict:
-    """The committed snapshot ``snapshot_id``; by default the current one,
-    or the legacy base (:func:`_legacy_base`) while none is committed."""
+    """The committed snapshot ``snapshot_id``; by default the current one."""
     if snapshot_id is not None:
         m = next(_manifests(root, snapshot_id), None)
         if m is None:
             raise KeyError(f"snapshot {snapshot_id} not found")
         return m
-    m = current_snapshot(root) or _legacy_base(root)
+    m = current_snapshot(root)
     if m is None:
         raise FileNotFoundError(f"no committed pages under {root}")
     return m
@@ -543,16 +476,16 @@ def _commit_manifest(
     exclusive marker creation; on conflict, re-base on the new parent and
     retry. Two concurrent committers both land — as sequence k+1 and k+2 —
     and an append never loses the other writer's files (VERDICT r2 missing
-    #4: last-write-wins on a bare LATEST pointer silently dropped one).
+    #4: last-write-wins on a bare pointer file silently dropped one).
 
     ``files`` (relative to root) are the commit's added page files; an
     append lists them after its parent's, an overwrite alone. The first
-    commit's parent is the store's legacy base, if any (:func:`_legacy_base`)."""
+    commit has no parent."""
     d = _snap_dir(root)
-    _init_snapshots(root)
+    os.makedirs(d, exist_ok=True)
     snap_id = uuid.uuid4().hex[:12]
     for _ in range(max_retries):
-        parent = current_snapshot(root) or _legacy_base(root)
+        parent = current_snapshot(root)
         seq = (parent["sequence"] + 1) if parent else 1
         # step over sequences burned by BAD markers: readers skip them, so
         # parent.sequence sits below the claimed number and claiming
@@ -594,8 +527,6 @@ def _commit_manifest(
             # the link (when it succeeded) keeps the inode alive; the temp
             # name itself is never read by anyone
             os.unlink(marker_tmp)
-        # advisory cache for humans/old readers; correctness never reads it
-        os.replace(_write_tmp(d, name), os.path.join(d, "LATEST"))
         return manifest
     raise RuntimeError(f"snapshot commit contention: {max_retries} retries exhausted")
 
@@ -658,26 +589,19 @@ def expire_snapshots(root: str, keep_last: int = 2) -> dict:
 def remove_orphan_files(root: str, older_than_s: float = 24 * 3600.0) -> list[str]:
     """Delete page files that NO committed manifest lists AND that are at
     least ``older_than_s`` seconds old (Iceberg remove_orphan_files): files
-    of expired or overwritten snapshots, a legacy store's files after its
-    first overwrite, and the leftovers of failed writes. The age gate is the
-    whole point: a commit moves its files in before it claims its sequence
-    marker, so only files old enough that no live writer can still be
-    mid-commit are orphans. Returns the removed paths, relative to root."""
+    of expired or overwritten snapshots and the leftovers of failed writes.
+    The age gate is the whole point: a commit moves its files in before it
+    claims its sequence marker, so only files old enough that no live
+    writer can still be mid-commit are orphans. Returns the removed paths,
+    relative to root.
+
+    Raises when no snapshot is committed: every page file would then read
+    as an orphan, and a store this code did not write (or one whose commit
+    markers were lost) would be deleted whole."""
     snaps = list_snapshots(root)
-    sd = _snap_dir(root)
-    if not snaps and os.path.isdir(sd) and any(
-        f.endswith(".json") for f in os.listdir(sd)
-    ):
-        # manifests exist but none read as committed — a legacy store whose
-        # advisory LATEST pointer was lost, or a half-migrated one. Sweeping
-        # here would treat EVERY page file as an orphan and delete a fully
-        # committed store's data; refuse instead (restore LATEST or backfill
-        # .commit markers to re-expose the snapshots).
-        raise RuntimeError(
-            f"{root}: snapshot manifests present but none committed "
-            "(missing .commit markers and LATEST) — refusing to sweep orphans"
-        )
-    listed = {f for m in (snaps or [_legacy_base(root) or {"files": []}]) for f in m["files"]}
+    if not snaps:
+        raise RuntimeError(f"{root}: no committed snapshot — refusing to sweep orphans")
+    listed = {f for m in snaps for f in m["files"]}
     now = time.time()
     removed = []
     for f in _parquet_files(os.path.join(root, "pages"), hidden=True):
