@@ -4,6 +4,7 @@ page store, resumable via lineage, decoded output bit-identical."""
 from __future__ import annotations
 
 import itertools
+import os
 import time
 
 import pytest
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from zopfli_spark import EngineConfig, decode_table, roundtrip_check
 from zopfli_spark.datagen import synth_tokens_df
-from zopfli_spark.sources.store import list_snapshots, read_lineage, read_pages
+from zopfli_spark.sources.store import current_snapshot, list_snapshots, read_lineage, read_pages
 from zopfli_spark.streaming.encode_stream import encode_stream
 
 CFG = EngineConfig(
@@ -233,6 +234,41 @@ def test_streaming_restart_processes_only_new_files(spark, tmp_path_factory):
     assert pages.count() > n_pages_1
     decoded = decode_table(pages, CFG)
     assert roundtrip_check(df, decoded).count() == 0, "all docs, each exactly once"
+
+
+def test_replayed_micro_batch_is_not_appended_twice(spark, tmp_path_factory):
+    """foreachBatch is at-least-once: a crash after the store commit but
+    before Spark's own commit makes the restarted query run the batch again.
+    Deleting the last ``commits/<n>`` file of the checkpoint reproduces it;
+    the replay must add no pages (at-least-once delivery, exactly-once
+    pages), so every input doc decodes exactly once."""
+    src = str(tmp_path_factory.mktemp("replay_src"))
+    root = str(tmp_path_factory.mktemp("replay_store"))
+    ckpt = str(tmp_path_factory.mktemp("replay_ckpt"))
+    df = synth_tokens_df(spark, 120, seed=23).cache()
+    for i in range(2):
+        df.filter(F.crc32("doc_id") % 2 == i).coalesce(1).write.parquet(f"{src}/b{i}")
+
+    def run():
+        stream = (
+            spark.readStream.schema("doc_id string, tokens array<int>, n_tok int, source string")
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src + "/*")
+        )
+        encode_stream(stream, root, CFG, checkpoint=ckpt, trigger_once=True).awaitTermination(300)
+
+    run()
+    assert current_snapshot(root)["txn"] == {ckpt: 1}
+    for f in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", f))
+    n_snaps = len(list_snapshots(root))
+    run()  # Spark replays batch 1
+    assert os.path.exists(os.path.join(ckpt, "commits", "1")), "batch 1 was not replayed"
+    assert len(list_snapshots(root)) == n_snaps
+    decoded = decode_table(read_pages(spark, root), CFG)
+    assert decoded.count() == df.count()
+    assert roundtrip_check(df, decoded).count() == 0
 
 
 def test_stateful_dedup_ttl_expires_and_readmits(spark, tmp_path_factory):

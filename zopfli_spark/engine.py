@@ -1268,25 +1268,67 @@ def roundtrip_check(df: DataFrame, decoded: DataFrame) -> DataFrame:
     return bad
 
 
-def metrics_table(pages: DataFrame, run_id: str = "run") -> DataFrame:
-    """Per-partition codec-choice / ratio / throughput metrics (FIXTURES.md §4)
-    — plain declarative aggregation over the pages output."""
-    return (
-        pages.groupBy("part_id", "codec")
-        .agg(
-            F.count("*").alias("pages"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.sum("n_values").alias("n_values"),
-            F.sum("enc_us").alias("enc_us"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("ratio", F.col("raw_bytes") / F.col("enc_bytes"))
-        .withColumn(
-            # a sub-µs page floors enc_us to 0; clamp to 1µs so the ANSI
-            # divide never trips (observed with tiny allow-listed pages)
-            "tokens_per_sec",
-            F.col("n_values")
-            / (F.greatest(F.col("enc_us"), F.lit(1)) / F.lit(1_000_000.0)),
-        )
+METRICS_SCHEMA = (
+    "part_id int, codec string, pages long, raw_bytes long, enc_bytes long, "
+    "n_values long, enc_us long, run_id string, ratio double, tokens_per_sec double"
+)
+
+#: the page-metadata columns :func:`metrics_rows` reads
+METRICS_INPUT = ("part_id", "codec", "raw_bytes", "enc_bytes", "n_values", "enc_us")
+
+_METRICS_SUMS = ("raw_bytes", "enc_bytes", "n_values", "enc_us")
+
+_METRICS_ARROW = pa.schema(
+    [
+        ("part_id", pa.int32()),
+        ("codec", pa.string()),
+        ("pages", pa.int64()),
+        *((c, pa.int64()) for c in _METRICS_SUMS),
+        ("run_id", pa.string()),
+        ("ratio", pa.float64()),
+        ("tokens_per_sec", pa.float64()),
+    ]
+)
+
+
+def metrics_rows(meta: pa.Table, run_id: str = "run") -> pa.Table:
+    """Per-(part_id, codec) codec-choice / ratio / throughput metrics
+    (FIXTURES.md §4) of page-metadata rows (the :data:`METRICS_INPUT`
+    columns of encoded pages), sorted by (part_id, codec). The store
+    derives its metrics from the committed files with this on the driver;
+    :func:`metrics_table` runs it per part_id in Spark."""
+    g = meta.group_by(["part_id", "codec"], use_threads=False).aggregate(
+        [([], "count_all"), *((c, "sum") for c in _METRICS_SUMS)]
+    ).sort_by([("part_id", "ascending"), ("codec", "ascending")])
+
+    def f64(a):
+        return pc.cast(a, pa.float64())
+
+    # a sub-µs page floors enc_us to 0 (observed with tiny allow-listed
+    # pages); the rate clamps it to 1µs so it stays finite
+    secs = pc.divide(f64(pc.max_element_wise(g["enc_us_sum"], 1)), 1_000_000.0)
+    return pa.table(
+        [
+            g["part_id"],
+            g["codec"],
+            g["count_all"],
+            *(g[f"{c}_sum"] for c in _METRICS_SUMS),
+            pa.array([run_id] * g.num_rows, pa.string()),
+            pc.divide(f64(g["raw_bytes_sum"]), f64(g["enc_bytes_sum"])),
+            pc.divide(f64(g["n_values_sum"]), secs),
+        ],
+        schema=_METRICS_ARROW,
     )
+
+
+def metrics_table(pages: DataFrame, run_id: str = "run") -> DataFrame:
+    """:func:`metrics_rows` of an encoded-pages DataFrame, per part_id."""
+    ensure_shipped(pages.sparkSession)
+
+    def rows(tbl: pa.Table) -> pa.Table:
+        try:
+            return metrics_rows(tbl, run_id)
+        finally:
+            forget_zip_finders()
+
+    return pages.select(*METRICS_INPUT).groupBy("part_id").applyInArrow(rows, schema=METRICS_SCHEMA)

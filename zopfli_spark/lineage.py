@@ -30,11 +30,16 @@ reads, and such a store is re-encoded (sources/store.py).
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
+
+from .deploy import ensure_shipped, forget_zip_finders
 
 LINEAGE_SCHEMA = (
     "content_key long, content_hash long, mode long, n_values long, "
@@ -58,47 +63,65 @@ def group_content_hash(values: np.ndarray, doc_ids) -> int:
     return int.from_bytes(h.digest(), "little", signed=True)
 
 
+#: the page-metadata columns :func:`lineage_rows` reads
+LINEAGE_INPUT = ("part_id", "content_key", "content_hash_group", "page_id", "n_rows", "n_values", "codec")
+
+_LINEAGE_ARROW = pa.schema(
+    [
+        ("content_key", pa.int64()),
+        ("content_hash", pa.int64()),
+        # LONG, never int: config.mode packs the codec_allowlist fingerprint
+        # at bits 31-62 (config.py), so an int32 column silently truncated it
+        # and resume never hit for allow-listed configs (VERDICT r3 wrong #1)
+        ("mode", pa.int64()),
+        ("n_values", pa.int64()),
+        ("n_rows", pa.int32()),
+        ("plan", pa.string()),
+        ("part_id", pa.int32()),
+    ]
+)
+
+
+def lineage_rows(meta: pa.Table, mode: int) -> pa.Table:
+    """The lineage rows of page-metadata rows (the :data:`LINEAGE_INPUT`
+    columns of encoded pages): one per (content_key, content_hash_group,
+    part_id), whose ``plan`` lists the group's pages as JSON objects
+    ``{"page_id","n_rows","codec"}`` in (page_id, n_rows, codec) order.
+    part_id is constant within a group: it only carries the group id along
+    as the routing key. The store derives its lineage from the committed
+    files with this on the driver; :func:`lineage_from_pages` runs it per
+    part_id in Spark."""
+    # page_id -1 = the group-dictionary row (group_dict configs): derived
+    # state, re-built deterministically on replay from the recorded page
+    # codecs — recording it would corrupt the plan's n_rows cumsum
+    pages = meta.filter(pc.greater_equal(meta["page_id"], 0))
+    order = ("part_id", "content_key", "content_hash_group", "page_id", "n_rows", "codec")
+    pages = pages.take(pc.sort_indices(pages, [(c, "ascending") for c in order]))
+    rows = zip(*(pages[c].to_pylist() for c in (*order, "n_values")))
+    out = []
+    for (part, key, h), grp in itertools.groupby(rows, key=lambda r: r[:3]):
+        grp = list(grp)
+        plan = ",".join(
+            f'{{"page_id":{p},"n_rows":{n},"codec":{json.dumps(c)}}}' for *_, p, n, c, _ in grp
+        )
+        n_values, n_rows = sum(r[6] for r in grp), sum(r[4] for r in grp)
+        out.append((key, h, mode, n_values, n_rows, f"[{plan}]", part))
+    cols = list(zip(*out)) or [()] * len(_LINEAGE_ARROW)
+    return pa.table(list(map(list, cols)), schema=_LINEAGE_ARROW)
+
+
 def lineage_from_pages(pages: DataFrame, mode: int) -> DataFrame:
-    """Derive lineage rows from an encoded-pages DataFrame (one per group)."""
-    per_page = pages.filter(F.col("page_id") >= 0).select(
-        # page_id -1 = the group-dictionary row (group_dict configs): derived
-        # state, re-built deterministically on replay from the recorded page
-        # codecs — recording it would corrupt the plan's n_rows cumsum
-        "content_key",
-        "content_hash_group",
-        "page_id",
-        "n_rows",
-        "n_values",
-        "codec",
-        "part_id",
-    )
-    return (
-        # part_id is constant within a group: it only carries the group id
-        # along as the routing key
-        per_page.groupBy("content_key", "content_hash_group", "part_id")
-        .agg(
-            F.sum("n_values").alias("n_values"),
-            F.sum("n_rows").alias("n_rows"),
-            F.to_json(
-                F.array_sort(
-                    F.collect_list(F.struct("page_id", "n_rows", "codec"))
-                )
-            ).alias("plan_struct"),
-        )
-        .select(
-            "content_key",
-            F.col("content_hash_group").alias("content_hash"),
-            # LONG, never int: config.mode packs the codec_allowlist
-            # fingerprint at bits 31-62 (config.py), so an int32 column
-            # silently truncated it and resume never hit for allow-listed
-            # configs (VERDICT r3 wrong #1)
-            F.lit(mode).cast("long").alias("mode"),
-            "n_values",
-            F.col("n_rows").cast("int"),
-            F.col("plan_struct").alias("plan"),
-            F.col("part_id").cast("int"),
-        )
-    )
+    """Lineage rows of an encoded-pages DataFrame (one per group):
+    :func:`lineage_rows` over each part_id's pages."""
+    ensure_shipped(pages.sparkSession)
+
+    def rows(tbl: pa.Table) -> pa.Table:
+        try:
+            return lineage_rows(tbl, mode)
+        finally:
+            forget_zip_finders()
+
+    return pages.select(*LINEAGE_INPUT).groupBy("part_id").applyInArrow(rows, schema=LINEAGE_SCHEMA)
 
 
 def struct_plan_to_pages(plan: str) -> list[tuple[int, str]]:

@@ -8,8 +8,14 @@ envelope is a partitioned Parquet table with Iceberg-style snapshots:
     <root>/pages/part_id=<g>/*.parquet   immutable page files
     <root>/snapshots/<seq>-<id>.json     manifests: each snapshot's page files
     <root>/snapshots/<seq>.commit        commit markers: which manifest won <seq>
-    <root>/lineage/                      StatsDB-analog resume records (append-only)
-    <root>/metrics/                      per-run metrics rows (append-only)
+    <root>/lineage/*.parquet             StatsDB-analog resume records (append-only)
+    <root>/metrics/*.parquet             per-run metrics rows (append-only)
+
+The pages write is the commit's only Spark job. Its lineage and metrics rows
+are derived on the driver from one column-pruned read of the committed files
+(no header or payload), and each lands as one parquet file per commit under
+``lineage/`` and ``metrics/`` — a small record write after the block is
+done, as the reference's StatsDBSave is (src/zopfli/deflate.c:1230-1272).
 
 The manifest plays the central-directory role: a page file belongs to the
 table only once a committed manifest lists it, as in Delta Lake's add-file
@@ -38,13 +44,22 @@ import uuid
 import warnings
 from collections.abc import Iterator
 
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..engine import PAGES_SCHEMA, encode_table, metrics_table
-from ..lineage import LINEAGE_SCHEMA, lineage_from_pages
+from ..engine import (
+    _PAGES_ARROW,
+    METRICS_INPUT,
+    METRICS_SCHEMA,
+    PAGES_SCHEMA,
+    encode_table,
+    metrics_rows,
+)
+from ..lineage import LINEAGE_INPUT, LINEAGE_SCHEMA, lineage_rows
 
 
 # One parquet row group per pages file (row groups are Spark's scan-split
@@ -116,10 +131,13 @@ def write_pages(pages: DataFrame, root: str) -> list[str]:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def _read_files(spark: SparkSession, root: str, files: list[str]) -> DataFrame:
-    """Page files (relative to ``root``) as one relation. The schema is
-    given, so building it runs no inference job; ``basePath`` keeps
-    ``part_id`` a partition column, which filters prune."""
+def read_pages(spark: SparkSession, root: str, snapshot_id: str | None = None) -> DataFrame:
+    """The pages of a snapshot (default: the current one, see
+    :func:`_snapshot`) as one relation — time travel is reading an older
+    snapshot's files. The schema is given, so building it runs no inference
+    job; ``basePath`` keeps ``part_id`` a partition column, which filters
+    prune."""
+    files = _snapshot(root, snapshot_id)["files"]
     return (
         spark.read.schema(PAGES_SCHEMA)
         .option("basePath", os.path.join(root, "pages"))
@@ -127,10 +145,27 @@ def _read_files(spark: SparkSession, root: str, files: list[str]) -> DataFrame:
     )
 
 
-def read_pages(spark: SparkSession, root: str, snapshot_id: str | None = None) -> DataFrame:
-    """The pages of a snapshot (default: the current one, see
-    :func:`_snapshot`) — time travel is reading an older snapshot's files."""
-    return _read_files(spark, root, _snapshot(root, snapshot_id)["files"])
+#: manifest summary field -> the page column it sums over the added files
+_SUMMARY = {"added_rows": "n_rows", "added_values": "n_values", "added_enc_bytes": "enc_bytes"}
+#: what a commit reads back from its files on the driver: the manifest
+#: summary's, lineage_rows' and metrics_rows' columns — no header or payload
+_META_ARROW = pa.schema(
+    [f for f in _PAGES_ARROW if f.name in {*_SUMMARY.values(), *LINEAGE_INPUT, *METRICS_INPUT}]
+)
+_PART_ID = ds.partitioning(pa.schema([_PAGES_ARROW.field("part_id")]), flavor="hive")
+
+
+def _page_meta(root: str, files: list[str]) -> pa.Table:
+    """The :data:`_META_ARROW` columns of page files (relative to ``root``)
+    as one Arrow table, read on the driver; ``part_id`` comes from each
+    file's ``part_id=<g>`` dir."""
+    return ds.dataset(
+        [os.path.join(root, f) for f in files],
+        schema=_META_ARROW,
+        format="parquet",
+        partitioning=_PART_ID,
+        partition_base_dir=os.path.join(root, "pages"),
+    ).to_table()
 
 
 def store_partition_count(root: str, sub: str = "pages") -> int:
@@ -143,11 +178,19 @@ def store_partition_count(root: str, sub: str = "pages") -> int:
     return len(_parquet_files(os.path.join(root, sub)))
 
 
-def append_lineage(pages: DataFrame, root: str, config: EngineConfig = DEFAULT_CONFIG) -> None:
-    """Append StatsDB-analog rows derived from an encoded-pages DataFrame."""
-    lineage_from_pages(pages, config.mode).write.mode("append").parquet(
-        os.path.join(root, "lineage")
-    )
+def _append_table(path: str, table: pa.Table) -> None:
+    """Add ``table`` to the append-only table dir ``path`` as one new
+    parquet file, seen whole or not at all: it is written under a hidden
+    temp name (:func:`_write_tmp`), which neither Spark's reader nor
+    :func:`_parquet_files` lists, then renamed into place."""
+    os.makedirs(path, exist_ok=True)
+    os.replace(_write_tmp(path, table), os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
+
+
+def append_lineage(meta: pa.Table, root: str, config: EngineConfig = DEFAULT_CONFIG) -> None:
+    """Append the StatsDB-analog rows (:func:`lineage.lineage_rows`) of
+    page-metadata rows, e.g. a commit's (:func:`_page_meta`)."""
+    _append_table(os.path.join(root, "lineage"), lineage_rows(meta, config.mode))
 
 
 def _live_lineage(df: DataFrame) -> DataFrame:
@@ -256,13 +299,13 @@ def maybe_compact_lineage(root: str, spark: SparkSession) -> bool:
     return False
 
 
-def append_metrics(metrics: DataFrame, root: str) -> None:
-    """Append per-run metrics rows, stamped with the append wall-clock so
-    retention (:func:`compact_metrics`) can order runs without trusting
-    caller-supplied run_id strings to sort chronologically."""
-    metrics.withColumn("appended_at", F.lit(float(time.time()))).write.mode(
-        "append"
-    ).parquet(os.path.join(root, "metrics"))
+def append_metrics(metrics: pa.Table, root: str) -> None:
+    """Append per-run metrics rows (:func:`engine.metrics_rows`), stamped
+    with the append wall-clock so retention (:func:`compact_metrics`) can
+    order runs without trusting caller-supplied run_id strings to sort
+    chronologically."""
+    at = pa.array([time.time()] * metrics.num_rows, pa.float64())
+    _append_table(os.path.join(root, "metrics"), metrics.append_column("appended_at", at))
 
 
 def read_metrics(spark: SparkSession, root: str) -> DataFrame | None:
@@ -311,20 +354,22 @@ def encode_and_commit(
     config: EngineConfig = DEFAULT_CONFIG,
     append: bool = False,
     split_hints: DataFrame | dict | None = None,
-) -> DataFrame:
+    txn: dict[str, int] | None = None,
+) -> pa.Table:
     """Encode ``df`` against the store's lineage (hits skip the search),
-    commit the pages as a snapshot (:func:`commit_snapshot`), and append
-    their lineage. Returns the committed pages, read back from their files.
-    When the append-only lineage dir has accumulated more than
-    :data:`COMPACT_AFTER_FILES` parquet files, it is compacted to one row per
-    live key and group id, so resume reads stay O(live groups), not O(run
-    history)."""
+    commit the pages as a snapshot (:func:`commit_snapshot`; ``txn`` as in
+    :func:`_commit_manifest`), and append their lineage. Returns the
+    committed pages' metadata (:func:`_page_meta`); the pages write is the
+    only Spark job that writes. When the append-only lineage dir has
+    accumulated more than :data:`COMPACT_AFTER_FILES` parquet files, it is
+    compacted to one row per live key and group id, so resume reads stay
+    O(live groups), not O(run history)."""
     spark = df.sparkSession
     pages = encode_table(df, config, lineage=read_lineage(spark, root), split_hints=split_hints)
-    added = _read_files(spark, root, commit_snapshot(pages, root, append)["added"])
-    append_lineage(added, root, config)
+    meta = _commit(pages, root, append, txn)[1]
+    append_lineage(meta, root, config)
     maybe_compact_lineage(root, spark)
-    return added
+    return meta
 
 
 def encode_to_store(
@@ -338,11 +383,12 @@ def encode_to_store(
     overwrite snapshot, then the run's metrics appended. Returns the metrics.
     Earlier snapshots stay readable (time travel) until
     :func:`expire_snapshots` drops them (``cli gc --keep-snapshots``).
-    ``split_hints`` pins page boundaries (see engine.encode_table)."""
-    pages = encode_and_commit(df, root, config, False, split_hints)
-    m = metrics_table(pages, run_id)
+    ``split_hints`` pins page boundaries (see engine.encode_table). The
+    metrics come from the commit's driver-side read, so the returned
+    DataFrame is local: collecting it runs no Spark job."""
+    m = metrics_rows(encode_and_commit(df, root, config, False, split_hints), run_id)
     append_metrics(m, root)
-    return m
+    return df.sparkSession.createDataFrame(m, schema=METRICS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -457,19 +503,33 @@ def _snapshot(root: str, snapshot_id: str | None = None) -> dict:
     return m
 
 
-def _write_tmp(d: str, text: str) -> str:
-    """Write ``text`` to a new temp file in ``d`` and return its path, to be
-    moved or linked into place. The name is unique to the call: with a
-    shared name, an overlapping commit's os.replace could move it away
-    first."""
+def _write_tmp(d: str, data: str | pa.Table) -> str:
+    """Write ``data`` (text, or a table as parquet) to a new temp file in
+    ``d`` and return its path, to be moved or linked into place. The name is
+    unique to the call: with a shared name, an overlapping commit's
+    os.replace could move it away first. It is hidden (``.*``) and not
+    ``*.parquet``, so no reader lists it, and a failed write removes it."""
     tmp = os.path.join(d, f".{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(text)
+    try:
+        if isinstance(data, str):
+            with open(tmp, "w") as fh:
+                fh.write(data)
+        else:
+            pq.write_table(data, tmp)
+    except BaseException:
+        _unlink(tmp)
+        raise
     return tmp
 
 
 def _commit_manifest(
-    root: str, files: list[str], summary: dict, schema: list[str], append: bool, max_retries: int = 16
+    root: str,
+    files: list[str],
+    summary: dict,
+    schema: list[str],
+    append: bool,
+    max_retries: int = 16,
+    txn: dict[str, int] | None = None,
 ) -> dict:
     """Optimistic snapshot commit (Iceberg's lock-free protocol): re-read the
     parent, write the manifest, then try to CLAIM the sequence number via
@@ -480,7 +540,12 @@ def _commit_manifest(
 
     ``files`` (relative to root) are the commit's added page files; an
     append lists them after its parent's, an overwrite alone. The first
-    commit has no parent."""
+    commit has no parent.
+
+    ``txn`` ({app id: batch id}, Delta's txn action) records the last
+    micro-batch a streaming writer committed (:func:`txn_version`). An
+    append inherits its parent's entries and updates them with ``txn``;
+    an overwrite keeps ``txn`` alone."""
     d = _snap_dir(root)
     os.makedirs(d, exist_ok=True)
     snap_id = uuid.uuid4().hex[:12]
@@ -503,6 +568,7 @@ def _commit_manifest(
             "operation": "append" if (append and parent) else "overwrite",
             "files": [*parent["files"], *files] if (append and parent) else list(files),
             "added": list(files),
+            "txn": {**(parent.get("txn", {}) if (append and parent) else {}), **(txn or {})},
             "summary": summary,
             "schema": schema,
         }
@@ -531,6 +597,32 @@ def _commit_manifest(
     raise RuntimeError(f"snapshot commit contention: {max_retries} retries exhausted")
 
 
+def txn_version(root: str, app_id: str) -> int:
+    """The last batch id ``app_id`` committed to the current snapshot
+    (:func:`_commit_manifest`'s ``txn``), or -1."""
+    m = current_snapshot(root)
+    return m.get("txn", {}).get(app_id, -1) if m else -1
+
+
+def _commit(
+    pages: DataFrame, root: str, append: bool, txn: dict[str, int] | None = None
+) -> tuple[dict, pa.Table]:
+    """:func:`commit_snapshot`, also returning the added files' page
+    metadata (:func:`_page_meta`)."""
+    files = write_pages(pages, root)
+    # summarize from the files just written, on the driver: re-aggregating
+    # the (lazy) input would run the encode again, and a Spark aggregate
+    # would add a job to every commit
+    meta = _page_meta(root, files)
+    summary = {
+        "added_files": len(files),
+        "added_pages": meta.num_rows,
+        **{k: int(pc.sum(meta[c]).as_py() or 0) for k, c in _SUMMARY.items()},
+    }
+    schema = [f.simpleString() for f in pages.schema.fields]
+    return _commit_manifest(root, files, summary, schema, append, txn=txn), meta
+
+
 def commit_snapshot(pages: DataFrame, root: str, append: bool = True) -> dict:
     """Write pages (:func:`write_pages`) and commit their files as a new
     snapshot; returns its manifest.
@@ -539,20 +631,7 @@ def commit_snapshot(pages: DataFrame, root: str, append: bool = True) -> dict:
     fast-append); ``append=False`` makes them the whole table (overwrite;
     older snapshots stay readable — time travel — until
     :func:`expire_snapshots`). Concurrent-writer safe (see _commit_manifest)."""
-    files = write_pages(pages, root)
-    # summarize from the files just written, on the driver: re-aggregating
-    # the (lazy) input would run the encode again, and a Spark aggregate
-    # would add a job to every commit
-    cols = {"added_rows": "n_rows", "added_values": "n_values", "added_enc_bytes": "enc_bytes"}
-    ts = [pq.read_table(os.path.join(root, f), columns=list(cols.values())) for f in files]
-    summary = {
-        "added_files": len(files),
-        "added_pages": sum(t.num_rows for t in ts),
-        **{k: sum(int(pc.sum(t[c]).as_py() or 0) for t in ts) for k, c in cols.items()},
-    }
-    return _commit_manifest(
-        root, files, summary, [f.simpleString() for f in pages.schema.fields], append
-    )
+    return _commit(pages, root, append)[0]
 
 
 def expire_snapshots(root: str, keep_last: int = 2) -> dict:

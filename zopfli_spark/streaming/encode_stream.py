@@ -31,17 +31,27 @@ def encode_stream(
     ``stream_df`` must be a streaming DataFrame with the tokens schema
     (doc_id, tokens, n_tok, source). Duplicate docs across batches append
     (dedup is upstream policy); lineage hits occur when identical GROUP
-    content re-appears — checkpoint replay after a crash, or a full
-    re-ingest — since content hashes are group-level, not per-doc."""
-    from ..sources.store import encode_and_commit
+    content re-appears — a full re-ingest — since content hashes are
+    group-level, not per-doc. With a ``checkpoint``, a micro-batch Spark
+    replays after a crash is not appended again: each commit records
+    ``{checkpoint: batch_id}`` in its manifest (store.txn_version), and a
+    batch at or below the recorded id is skipped."""
+    from ..sources.store import encode_and_commit, txn_version
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # foreachBatch is at-least-once: a crash after our commit but before
+        # Spark's replays the batch on restart. A checkpointed query records
+        # its batch id in the commit (Delta's txn action) and skips a batch
+        # it already committed; without a checkpoint, ids restart at 0
+        if checkpoint is not None and batch_id <= txn_version(root, checkpoint):
+            return
         # the emptiness probe, the planner's Σ n_tok aggregate and the
         # encode all read the batch: cache it so its source is read once
         batch_df.persist()
         try:
             if not batch_df.isEmpty():
-                encode_and_commit(batch_df, root, config, append=True)
+                txn = {checkpoint: batch_id} if checkpoint is not None else None
+                encode_and_commit(batch_df, root, config, append=True, txn=txn)
         finally:
             batch_df.unpersist()
 
