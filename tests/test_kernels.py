@@ -415,6 +415,21 @@ _CRAFTS = {
 }
 
 
+@pytest.mark.parametrize("tag", ["ZLIB", "FOR_ZLIB"])
+def test_retired_zlib_tags_raise(tag):
+    """No encoder emits ZLIB or FOR_ZLIB and no readable store holds them:
+    even a well-formed blob under either tag is refused."""
+    import zlib as _z
+
+    v = np.arange(100, dtype="<i4")
+    bodies = {
+        "ZLIB": _z.compress(v.tobytes()),
+        "FOR_ZLIB": _i64(0) + bytes([7]) + _z.compress(bitio.pack_bits(v.astype(np.uint64), 7)),
+    }
+    with pytest.raises(ValueError, match="unknown codec tag"):
+        kernels.decode_blob(bytes([getattr(kernels, tag)]) + bodies[tag], 100)
+
+
 @pytest.mark.parametrize("name", sorted(_CRAFTS))
 def test_crafted_corrupt_blob_raises_cleanly(name):
     import struct as _struct

@@ -159,6 +159,47 @@ def test_encode_to_store_runs_two_spark_jobs(spark, tokens_df, tmp_path_factory)
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
+def test_pages_write_adds_no_shuffle(spark, tokens_df, tmp_path_factory):
+    """write_pages writes encode_table's partitions as they come: its job
+    runs the encode's stages and no exchange of its own, cold (scan, then
+    encode and write) and resumed (input scan, lineage scan, lineage dedup,
+    then cogroup and write). One file per group either way. (AQE off, so
+    the write is one job holding every stage.)"""
+    root = str(tmp_path_factory.mktemp("store"))
+    tracker = spark.sparkContext.statusTracker()
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        encode_to_store(tokens_df, root, CFG)
+        for run, lineage, stages in (
+            ("cold", None, 2),
+            ("resume", read_lineage(spark, root), 4),
+        ):
+            pages = encode_table(tokens_df, CFG, lineage=lineage)
+            tag = f"pages-write-{run}"
+            files, n = _jobs(spark, tag, lambda: store.write_pages(pages, root))
+            (job,) = tracker.getJobIdsForGroup(tag)
+            assert len(tracker.getJobInfo(job).stageIds) == stages, run
+            assert len({os.path.dirname(f) for f in files}) == len(files) > 1, run
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+def test_commit_refuses_pages_not_placed_by_group(spark, tokens_df, tmp_path_factory):
+    """Pages whose groups span partitions would land as several files per
+    group: the commit raises before any file moves, and the store keeps its
+    snapshot, its page files and no staging dir."""
+    root = str(tmp_path_factory.mktemp("store"))
+    commit_snapshot(encode_table(tokens_df, CFG), root)
+    before = current_snapshot(root)
+    files = _parquet_files(os.path.join(root, "pages"), hidden=True)
+    with pytest.raises(ValueError, match="not placed by group"):
+        commit_snapshot(encode_table(tokens_df, CFG).repartition(3), root)
+    assert current_snapshot(root) == before
+    assert _parquet_files(os.path.join(root, "pages"), hidden=True) == files
+    assert not [d for d in os.listdir(os.path.join(root, "pages")) if d.startswith("_")]
+
+
 # The Spark SQL bodies lineage_from_pages and metrics_table had before the
 # store derived both on the driver: the reference the Arrow derivation
 # (lineage.lineage_rows, engine.metrics_rows) must equal row for row.

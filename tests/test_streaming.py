@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import time
 
 import pytest
 
@@ -21,28 +20,6 @@ CFG = EngineConfig(
     group_budget_values=80_000,
     giant_doc_values=40_000,
 )
-
-
-def _stop_when_drained(q, timeout_s: float = 300.0) -> None:
-    """Stop a stateful availableNow query once it has processed all its data.
-
-    With processing-time timeouts Spark runs a no-data micro-batch on every
-    trigger, so such a query never ends on its own and never idles:
-    ``awaitTermination(300)`` waits out its whole timeout and
-    ``processAllAvailable()`` never returns. Spark plans a no-data batch only
-    when no source has new data, so the first progress that read no rows
-    marks every input file as processed."""
-    deadline = time.monotonic() + timeout_s
-    while True:
-        if not q.isActive:
-            q.awaitTermination()  # raises the query's failure, if any
-            return
-        p = q.lastProgress
-        if p is not None and p["numInputRows"] == 0:
-            break
-        assert time.monotonic() < deadline, "query did not drain its input"
-        time.sleep(0.05)
-    q.stop()
 
 
 def test_streaming_encode_roundtrip(spark, tmp_path_factory):
@@ -132,8 +109,8 @@ def test_encode_stream_computes_each_micro_batch_once(spark, tmp_path_factory):
 
 
 def test_stateful_dedup_across_batches(spark, tmp_path_factory):
-    """applyInPandasWithState dedup: a doc re-delivered in a LATER micro-
-    batch must be dropped by the state store, not re-emitted."""
+    """Streaming dedup: a doc re-delivered in a LATER micro-batch must be
+    dropped by the state store, not re-emitted."""
     from zopfli_spark.streaming.stateful import dedup_stream
 
     src = str(tmp_path_factory.mktemp("dd_src"))
@@ -199,6 +176,23 @@ def test_stateful_running_source_stats(spark, tmp_path_factory):
         .collect()
     }
     assert got == want
+
+
+def test_stateful_output_schemas(spark, tmp_path_factory):
+    """The stateful operators' output contracts: dedup keeps the tokens
+    schema (no helper columns leak), stats rows are (source, n_docs,
+    n_tok_total) with bigint counts."""
+    from zopfli_spark.streaming.stateful import dedup_stream, running_source_stats
+
+    tokens = "struct<doc_id:string,tokens:array<int>,n_tok:int,source:string>"
+    stream = spark.readStream.schema(
+        "doc_id string, tokens array<int>, n_tok int, source string"
+    ).parquet(str(tmp_path_factory.mktemp("schema_src")))
+    assert dedup_stream(stream).schema.simpleString() == tokens
+    assert dedup_stream(stream, state_ttl_minutes=1.0).schema.simpleString() == tokens
+    assert running_source_stats(stream).schema.simpleString() == (
+        "struct<source:string,n_docs:bigint,n_tok_total:bigint>"
+    )
 
 
 def test_streaming_restart_processes_only_new_files(spark, tmp_path_factory):
@@ -304,7 +298,7 @@ def test_stateful_dedup_ttl_expires_and_readmits(spark, tmp_path_factory):
             .trigger(availableNow=True)
             .start()
         )
-        _stop_when_drained(q)
+        assert q.awaitTermination(120)
 
     run_once()
     assert spark.read.parquet(out_dir).count() == 2  # A emitted
@@ -356,7 +350,7 @@ def test_stateful_dedup_under_rocksdb_provider(spark, tmp_path_factory):
             .trigger(availableNow=True)
             .start()
         )
-        _stop_when_drained(q)
+        assert q.awaitTermination(120)
         progress = q.recentProgress
     finally:
         for k, v in old.items():

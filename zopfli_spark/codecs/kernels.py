@@ -26,8 +26,10 @@ Blob format (self-describing, recursive for composites)::
     DELTA       4: [i64 first][u8 width][packed zigzag diffs]
     RLE         5: [u32 n_runs][u32 len(values_blob)][values_blob][lengths_blob]
     DICT        6: [u32 card][u32 len(dict_blob)][dict_blob][indices_blob]
-    ZLIB        7: [zlib.compress of '<i4' raw]              (decode only)
-    FOR_ZLIB    8: [i64 base][u8 width][zlib of packed residuals] (decode only)
+    ZLIB 7, FOR_ZLIB 8: retired — no reader accepts them (unknown codec
+                   tag); the tags and names stay reserved
+    PLANE_ZLIB  9: [i64 base][u8 n_planes] n_planes × ([u32 len][zlib of one
+                   byte plane of v-base, least significant first])
     HUFFMAN    10: [u32 card][u32 len(dict_blob)][dict_blob]
                    [u8 max_code_len][u32 len(len_tbl)][len_tbl — nested blob]
                    [u16 miniblock K][u32 len(offsets_blob)][offsets_blob]
@@ -1070,14 +1072,6 @@ def decode_blob(buf: bytes, n: int) -> np.ndarray:
         if n and (int(indices.min()) < 0 or int(indices.max()) >= card):
             raise ValueError("DICT indices out of range")
         return dict_vals[indices]
-    if tag == ZLIB:
-        raw = zlib.decompress(bytes(body))
-        return np.frombuffer(raw, dtype="<i4", count=n).astype(np.int64)
-    if tag == FOR_ZLIB:
-        (base,) = _I64.unpack(body[:8])
-        width = body[8]
-        packed = zlib.decompress(bytes(body[9:]))
-        return unpack_bits(packed, n, width).astype(np.int64) + base
     if tag == PLANE_ZLIB:
         (base,) = _I64.unpack(body[:8])
         n_planes = body[8]

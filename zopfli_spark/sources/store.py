@@ -112,20 +112,29 @@ def write_pages(pages: DataFrame, root: str) -> list[str]:
     return their paths relative to ``root``. No reader sees them until a
     committed manifest lists them (:func:`commit_snapshot`).
 
-    Spark writes into a private ``pages/_staging-<id>/`` dir, so a failed
-    job never touches a committed file; the files then move into the
-    part_id dirs under unique names. One group per file (the repartition),
-    its dict row first (the sort), one row group per file."""
+    ``pages`` must hold each group in one partition, as ``encode_table``
+    places them: the write adds no shuffle, so each task writes one file per
+    group it holds — one group per file, its dict row first (the sort), one
+    row group per file. A group split across partitions would land in two
+    files, so it raises ValueError before any file moves. Spark writes into
+    a private ``pages/_staging-<id>/`` dir, so a failed or refused write
+    never touches a committed file; the files then move into the part_id
+    dirs under unique names."""
     pages_dir = os.path.join(root, "pages")
     staging = os.path.join(pages_dir, f"_staging-{uuid.uuid4().hex[:12]}")
     try:
         (
-            pages.repartition(F.col("part_id"))
-            .sortWithinPartitions("part_id", "page_id")
+            pages.sortWithinPartitions("part_id", "page_id")
             .write.option("parquet.block.size", _ONE_ROW_GROUP)
             .partitionBy("part_id")
             .parquet(staging)
         )
+        dirs = [os.path.dirname(f) for f in _parquet_files(staging)]
+        if len(set(dirs)) < len(dirs):
+            raise ValueError(
+                "pages not placed by group: a part_id spans several partitions "
+                "(write encode_table's output as it comes)"
+            )
         return [os.path.relpath(f, root) for f in _move_files(staging, pages_dir)]
     finally:
         shutil.rmtree(staging, ignore_errors=True)
