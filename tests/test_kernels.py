@@ -438,3 +438,141 @@ def test_crafted_corrupt_blob_raises_cleanly(name):
     blob, n = _CRAFTS[name]()
     with pytest.raises((ValueError, _struct.error, _z.error)):
         kernels.decode_blob(blob, n)
+
+
+# ---------------------------------------------------------------------------
+# price, don't build: exact size plans and one build per encode_best call
+# ---------------------------------------------------------------------------
+
+_COUNTED_BUILDERS = ("_enc_for", "_enc_delta", "_build_rle", "_build_dict", "_build_dict_shift")
+# realized candidates: they build nested sub-blobs, which are not candidates
+_REALIZED = ("_enc_plane_zlib", "_enc_huffman")
+
+
+def test_encode_best_builds_at_most_one_analytic_candidate(monkeypatch):
+    """Every analytic candidate is priced exactly and only the argmin is
+    built: within one encode_best call (nested calls, such as a Huffman
+    code-length table's, count on their own), at most one of the analytic
+    builders runs outside another builder."""
+    frames: list[list[str]] = []
+    depth = [0]
+
+    def scope(name, fn, counted):
+        def wrapper(*a, **k):
+            if counted and frames and depth[0] == 0:
+                frames[-1].append(name)
+            depth[0] += 1
+            try:
+                return fn(*a, **k)
+            finally:
+                depth[0] -= 1
+
+        return wrapper
+
+    for name in _COUNTED_BUILDERS + _REALIZED:
+        monkeypatch.setattr(kernels, name, scope(name, getattr(kernels, name), name in _COUNTED_BUILDERS))
+    seen: list[list[str]] = []
+    inner = kernels.encode_best
+
+    def counting_encode_best(*a, **k):
+        frames.append([])
+        saved, depth[0] = depth[0], 0
+        try:
+            return inner(*a, **k)
+        finally:
+            depth[0] = saved
+            seen.append(frames.pop())
+
+    monkeypatch.setattr(kernels, "encode_best", counting_encode_best)
+    for name, v in sorted(CASES.items()):
+        full = kernels.encode_best(v)
+        for budget in (None, len(full), len(full) + 1, int(0.9 * len(full)) + 1, 1 + 4 * len(v)):
+            seen.clear()
+            kernels.encode_best(v, budget=budget)
+            assert seen and all(len(builds) <= 1 for builds in seen), (name, budget, seen)
+
+
+def _check_plans(v: np.ndarray) -> None:
+    """Each exact size function equals len() of its builder's blob."""
+    v = kernels._as_i64(v)
+    n = len(v)
+    plan = kernels._plan_simple(v)
+    assert plan[0] == len(kernels._build_simple(v, plan)) == len(encode_simple(v))
+    if n < 2 or v.min() == v.max():
+        return
+    w_for = bitio.bit_width(int(v.max() - v.min()))
+    assert len(kernels._enc_for(v, int(v.min()), w_for)) == kernels._FRAME_HDR + kernels._size_packed(n, w_for)
+    zz = bitio.zigzag_encode(np.diff(v))
+    w_d = bitio.bit_width(int(zz.max()))
+    assert len(kernels._enc_delta(v, zz, w_d)) == kernels._FRAME_HDR + kernels._size_packed(n - 1, w_d)
+    run_vals, run_lens = kernels._run_lengths(v)
+    lens_plan = kernels._plan_simple(run_lens)
+    rle = kernels._plan_rle(run_vals, lens_plan)
+    blob = kernels._build_rle(run_vals, run_lens, rle)
+    assert rle[0] == len(blob)
+    assert np.array_equal(decode_blob(blob, n), v)
+    uniq = np.unique(v)
+    d = kernels._plan_dict(uniq, n, run_vals, lens_plan)
+    blob = kernels._build_dict(v, uniq, run_lens, d)
+    assert d[0] == len(blob)
+    assert np.array_equal(decode_blob(blob, n), v)
+    # the RLE-of-index variant is priced only at or under n // 2 runs
+    if len(run_vals) > n // 2:
+        assert d[3] is None
+    s, est = kernels._dict_shift_best_s(uniq, n)
+    if s is None:
+        return
+    for budget in (int(np.floor(est)), int(np.ceil(est)), int(est) + 1):
+        ds = kernels._plan_dict_shift(uniq, n, budget)
+        assert (ds is None) == (est >= budget)
+    ds = kernels._plan_dict_shift(uniq, n, 1 << 62)
+    blob = kernels._build_dict_shift(v, ds)
+    assert ds[0] == len(blob)
+    assert np.array_equal(decode_blob(blob, n), v)
+
+
+_PLAN_EDGES = {
+    "card2": np.array([0, 2**31 - 1] * 50, dtype=np.int64),
+    "card2_runs": np.repeat(np.array([-7, 9] * 20, dtype=np.int64), 5),
+    # exactly n // 2 runs: the RLE-of-index variant is still priced
+    "runs_half": np.repeat(np.arange(500, dtype=np.int64) % 3, 2),
+    "runs_half_plus_one": np.concatenate(([5], np.repeat(np.arange(500) % 3, 2))).astype(np.int64),
+    "int32_extremes": np.array([-(2**31), 2**31 - 1, 0, -1, 1] * 40, dtype=np.int64),
+    "negatives": np.arange(1, 3000, dtype=np.int64) * 37 % 70000 - 35000,
+    "clustered_negative": (
+        np.random.default_rng(1).integers(-(1 << 17), 1 << 17, 64)[np.arange(5000) * 7 % 64] * 4096
+        + np.arange(5000) * 13 % 64
+    ),
+    "two": np.array([3, -3], dtype=np.int64),
+    "three": np.array([1, 1, 2], dtype=np.int64),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PLAN_EDGES))
+def test_size_plans_are_exact_on_edges(name):
+    _check_plans(_PLAN_EDGES[name])
+
+
+@pytest.mark.parametrize("width", [1, 31, 32])
+def test_dict_index_price_matches_bitpack(width):
+    """The dict price's bitpacked index term, up to the widths the
+    ``w_idx < 32`` gate admits."""
+    idx = RNG.integers(0, 1 << width, 777).astype(np.uint64)
+    assert len(kernels._enc_bitpack(idx, width)) == 2 + kernels._size_packed(777, width)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=3000),  # n
+    st.integers(min_value=1, max_value=700),  # card
+    st.integers(min_value=1, max_value=6),  # max run length
+    st.sampled_from([0, 4, 12, 20]),  # low-bit noise width
+    st.integers(min_value=-(2**31), max_value=2**31 - 1),  # offset
+    st.integers(min_value=0, max_value=2**32 - 1),  # seed
+)
+def test_property_size_plans_are_exact(n, card, maxrun, noise, offset, seed):
+    rng = np.random.Generator(np.random.PCG64(seed))
+    centers = rng.integers(-(1 << 10), 1 << 10, card) << noise
+    idx = np.repeat(rng.integers(0, card, n), rng.integers(1, maxrun + 1, n))[:n]
+    v = centers[idx] + rng.integers(0, 1 << noise, n) + offset
+    _check_plans(np.clip(v, -(2**31), 2**31 - 1))

@@ -115,3 +115,32 @@ def test_split_dp_boundaries_pinned(tag):
     values, lens = _mixture()
     rc = _RangeCost(values, lens, gh, card_term=card)
     assert _digest(split_dp(rc, lens, BUDGET)) == GOLDEN_DP[tag]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [5],
+        [-3, 0, 7, 1 << 19, (1 << 20) - 1],
+        # the last edge past the lookup table: values above it fall back
+        [-(1 << 20), -5, 0, 1 << 20, (1 << 20) + 1, 1 << 30],
+        list(range(-1000, 254_000, 1000)),
+        list(range(0, 21_000, 7)),  # more edges than a uint8 table holds
+        [-(2**31), 0, 2**31 - 1],
+    ],
+)
+def test_bucket_lookup_matches_searchsorted(edges):
+    """``_RangeCost``'s bucket lookup table equals ``searchsorted(edges, v,
+    side="right")``: below the first edge, on and next to every edge, more
+    than 2^20 above the first edge, and negative."""
+    from zopfli_spark.pages import _bucket_of
+
+    e = np.array(edges, dtype=np.int64)
+    rng = np.random.default_rng(len(edges))
+    v = np.concatenate([
+        e, e - 1, e + 1,
+        [e[0] - (1 << 21), e[0] + (1 << 20), e[0] + (1 << 20) + 1, e[0] + (1 << 21)],
+        rng.integers(int(e[0]) - 100, int(e[-1]) + 100, 5000),
+        rng.integers(-(2**31), 2**31 - 1, 5000),
+    ]).astype(np.int64)
+    assert np.array_equal(_bucket_of(e, v), np.searchsorted(e, v, side="right"))

@@ -12,8 +12,12 @@ its encoding-mode auto-selection:
   reference: src/zopfli/squeeze.c:201-236) → the ``*_lower_bound`` gates in
   :func:`encode_best`.
 * ``ZopfliCalculateBlockSize`` ("exact, not estimated" size accounting,
-  reference: src/zopfli/deflate.c:877-906) → candidates are *materialized* and
-  compared by real ``len(blob)``, never by heuristic score alone.
+  reference: src/zopfli/deflate.c:877-906) → every analytic candidate has an
+  exact size function (its ``_plan_*``) that shares its code with the
+  builder, so candidates are compared by exact size, never by heuristic
+  score alone, and only the argmin is built — the cost-only twin
+  ``ZopfliCalculateBlockSizeAutoType`` (deflate.c:908-947). The DEFLATE and
+  Huffman candidates have no cheaper exact price and are realized.
 
 Blob format (self-describing, recursive for composites)::
 
@@ -213,9 +217,48 @@ def _size_packed(n: int, width: int) -> int:
     return (n * width + 7) // 8
 
 
+#: [u8 tag][i64 base or first][u8 width] of FOR_BITPACK and DELTA
+_FRAME_HDR = 1 + 8 + 1
+#: [u8 tag][u32 count][u32 len(first sub-blob)] of RLE and DICT
+_PAIR_HDR = 1 + 4 + 4
+
+
 # ---------------------------------------------------------------------------
 # Auto-selecting encoder
 # ---------------------------------------------------------------------------
+
+
+def _plan_simple(v: np.ndarray) -> tuple[int, int, int]:
+    """(exact size, tag, width) of :func:`encode_simple`'s choice for an
+    int64 array, without packing a bit — the price every composite codec
+    adds for its nested arrays."""
+    n = len(v)
+    if n == 0:
+        return 1, PLAIN, 0
+    vmin = int(v.min())
+    vmax = int(v.max())
+    if vmin == vmax:
+        return (1 + 8, CONSTANT, 0) if n >= 3 else (1 + 4 * n, PLAIN, 0)
+    w_for = bit_width(vmax - vmin)
+    w_d = bit_width(int(zigzag_encode(np.diff(v)).max()))
+    sizes = {
+        PLAIN: (1 + 4 * n, 0),
+        FOR_BITPACK: (_FRAME_HDR + _size_packed(n, w_for), w_for),
+        DELTA: (_FRAME_HDR + _size_packed(n - 1, w_d), w_d),
+    }
+    best = min(sizes, key=lambda k: (sizes[k][0], k))
+    return sizes[best][0], best, sizes[best][1]
+
+
+def _build_simple(v: np.ndarray, plan: tuple[int, int, int]) -> bytes:
+    _, tag, width = plan
+    if tag == PLAIN:
+        return _enc_plain(v)
+    if tag == CONSTANT:
+        return _enc_constant(v[0])
+    if tag == FOR_BITPACK:
+        return _enc_for(v, int(v.min()), width)
+    return _enc_delta(v, zigzag_encode(np.diff(v)), width)
 
 
 def encode_simple(v: np.ndarray) -> bytes:
@@ -225,27 +268,7 @@ def encode_simple(v: np.ndarray) -> bytes:
     the lower-bound discipline of reference src/zopfli/squeeze.c:201-236.
     """
     v = _as_i64(v)
-    n = len(v)
-    if n == 0:
-        return bytes([PLAIN])
-    vmin = int(v.min())
-    vmax = int(v.max())
-    if vmin == vmax:
-        return _enc_constant(vmin) if n >= 3 else _enc_plain(v)
-    w_for = bit_width(vmax - vmin)
-    sizes = {
-        PLAIN: 1 + 4 * n,
-        FOR_BITPACK: 1 + 8 + 1 + _size_packed(n, w_for),
-    }
-    zz = zigzag_encode(np.diff(v))
-    w_d = bit_width(int(zz.max()))
-    sizes[DELTA] = 1 + 8 + 1 + _size_packed(n - 1, w_d)
-    best = min(sizes, key=lambda k: (sizes[k], k))
-    if best == PLAIN:
-        return _enc_plain(v)
-    if best == FOR_BITPACK:
-        return _enc_for(v, vmin, w_for)
-    return _enc_delta(v, zz, w_d)
+    return _build_simple(v, _plan_simple(v))
 
 
 def _run_lengths(v: np.ndarray, dv: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
@@ -262,24 +285,51 @@ def _run_lengths(v: np.ndarray, dv: np.ndarray | None = None) -> tuple[np.ndarra
     return v[starts], (ends - starts).astype(np.int64)
 
 
-def _build_rle(v: np.ndarray, run_vals: np.ndarray, run_lens: np.ndarray) -> bytes:
-    vb = encode_simple(run_vals)
-    lenb = encode_simple(run_lens)
+def _plan_rle(run_vals: np.ndarray, lens_plan: tuple[int, int, int]) -> tuple:
+    """Exact RLE size and the nested plans :func:`_build_rle` consumes;
+    ``lens_plan`` is the run lengths' plan, shared with the dict's
+    RLE-of-index price (the index stream has the same runs)."""
+    vals_plan = _plan_simple(run_vals)
+    return _PAIR_HDR + vals_plan[0] + lens_plan[0], vals_plan, lens_plan
+
+
+def _build_rle(run_vals: np.ndarray, run_lens: np.ndarray, plan: tuple) -> bytes:
+    _, vals_plan, lens_plan = plan
+    vb = _build_simple(run_vals, vals_plan)
+    lenb = _build_simple(run_lens, lens_plan)
     return bytes([RLE]) + _U32.pack(len(run_vals)) + _U32.pack(len(vb)) + vb + lenb
 
 
-def _build_dict(v: np.ndarray, uniq: np.ndarray, inverse: np.ndarray) -> bytes:
-    card = len(uniq)
-    w_idx = bit_width(card - 1)
-    dict_blob = encode_simple(uniq)
-    inv = inverse.astype(np.int64)
-    idx_blob = _enc_bitpack(inv.astype(np.uint64), w_idx)
-    r_v, r_l = _run_lengths(inv)
-    if len(r_v) <= len(inv) // 2:
-        r_blob = _build_rle(inv, r_v, r_l)
-        if len(r_blob) < len(idx_blob):
-            idx_blob = r_blob
-    return bytes([DICT]) + _U32.pack(card) + _U32.pack(len(dict_blob)) + dict_blob + idx_blob
+def _plan_dict(
+    uniq: np.ndarray, n: int, run_vals: np.ndarray, lens_plan: tuple[int, int, int]
+) -> tuple:
+    """Exact DICT size: the sorted dictionary plus the smaller of the
+    bitpacked index stream and its RLE. The index stream's runs are the
+    values' runs, so the RLE price needs only the run values' indices, never
+    the n-long index stream."""
+    w_idx = bit_width(len(uniq) - 1)
+    dict_plan = _plan_simple(uniq)
+    idx_size = 2 + _size_packed(n, w_idx)  # _enc_bitpack: [tag][width][packed]
+    rle = None
+    if len(run_vals) <= n // 2:
+        run_idx = np.searchsorted(uniq, run_vals)
+        rle_plan = _plan_rle(run_idx, lens_plan)
+        if rle_plan[0] < idx_size:
+            rle, idx_size = (run_idx, rle_plan), rle_plan[0]
+    return _PAIR_HDR + dict_plan[0] + idx_size, dict_plan, w_idx, rle
+
+
+def _build_dict(
+    v: np.ndarray, uniq: np.ndarray, run_lens: np.ndarray, plan: tuple
+) -> bytes:
+    _, dict_plan, w_idx, rle = plan
+    dict_blob = _build_simple(uniq, dict_plan)
+    if rle is None:
+        idx = np.searchsorted(uniq, v).astype(np.uint64)
+        idx_blob = _enc_bitpack(idx, w_idx)
+    else:
+        idx_blob = _build_rle(rle[0], run_lens, rle[1])
+    return bytes([DICT]) + _U32.pack(len(uniq)) + _U32.pack(len(dict_blob)) + dict_blob + idx_blob
 
 
 # powers of two for the coarse-cardinality sweep (uint64 domain)
@@ -317,23 +367,34 @@ def _dict_shift_best_s(uniq: np.ndarray, n: int) -> tuple[int | None, float]:
     return best_s, best_est
 
 
-def _build_dict_shift(v: np.ndarray, uniq: np.ndarray, n: int, budget: int) -> bytes | None:
+def _plan_dict_shift(uniq: np.ndarray, n: int, budget: int) -> tuple | None:
+    """Exact DICT_SHIFT size at the estimated-best shift, or None when the
+    estimate cannot beat ``budget``: [u8 tag][u8 shift][u32 cardq]
+    [u32 len(dict)][dict][u32 len(idx)][bitpacked idx][n·shift low bits]."""
+    s, est = _dict_shift_best_s(uniq, n)
+    if s is None or est >= budget:
+        return None
+    qu_all = uniq >> s
+    qu = qu_all[np.concatenate(([True], np.diff(qu_all) != 0))]
+    dict_plan = _plan_simple(qu)
+    w_idx = bit_width(max(len(qu) - 1, 1))
+    size = 2 + 4 + 4 + dict_plan[0] + 4 + 2 + _size_packed(n, w_idx) + _size_packed(n, s)
+    return size, s, qu, dict_plan, w_idx
+
+
+def _build_dict_shift(v: np.ndarray, plan: tuple) -> bytes:
     """Quantized ("coarsened") dictionary — the dict-header analog of
     OptimizeHuffmanForRle (reference src/zopfli/deflate.c:556-776; SURVEY §4
     #14): when raw cardinality makes the dictionary header dominate, split
     v = (q << s) | r and dictionary-code only the quotients, storing the low
     s bits raw. Lossless by construction; wins on clustered-values-plus-noise
     pages where full-card DICT drowns in header bytes."""
-    s, est = _dict_shift_best_s(uniq, n)
-    if s is None or est >= budget:
-        return None
+    _, s, qu, dict_plan, w_idx = plan
     q = v >> s
     r = (v - (q << s)).astype(np.uint64)  # in [0, 2^s) (floor-shift residual)
-    qu_all = uniq >> s
-    qu = qu_all[np.concatenate(([True], np.diff(qu_all) != 0))]
     idx = np.searchsorted(qu, q)
-    dict_blob = encode_simple(qu)
-    idx_blob = _enc_bitpack(idx.astype(np.uint64), bit_width(max(len(qu) - 1, 1)))
+    dict_blob = _build_simple(qu, dict_plan)
+    idx_blob = _enc_bitpack(idx.astype(np.uint64), w_idx)
     resid = pack_bits(r, s)
     return (
         bytes([DICT_SHIFT, s])
@@ -802,20 +863,20 @@ def encode_forced(
         return _enc_delta(v, zz, bit_width(int(zz.max())) if n > 1 else 0)
     if codec_name == "rle":
         rv, rl = _run_lengths(v)
-        return _build_rle(v, rv, rl)
+        return _build_rle(rv, rl, _plan_rle(rv, _plan_simple(rl)))
     if codec_name in ("dict", "dict_rle"):
-        uniq, inverse = np.unique(v, return_inverse=True)
-        return _build_dict(v, uniq, inverse)
+        uniq = np.unique(v)
+        rv, rl = _run_lengths(v)
+        return _build_dict(v, uniq, rl, _plan_dict(uniq, n, rv, _plan_simple(rl)))
     if codec_name == "huffman":
         uniq, inverse = np.unique(v, return_inverse=True)
         lengths, _ = _huffman_select_lengths(np.bincount(inverse))
         return _enc_huffman(v, uniq, inverse, lengths)
     if codec_name == "dict_shift":
-        uniq = np.unique(v)
-        blob = _build_dict_shift(v, uniq, n, 1 << 62)
-        if blob is None:
+        plan = _plan_dict_shift(np.unique(v), n, 1 << 62)
+        if plan is None:
             raise ValueError("dict_shift forced on non-viable page")
-        return blob
+        return _build_dict_shift(v, plan)
     if codec_name == "plane_zlib":
         return _enc_plane_zlib(v, vmin, w_for, zlib_level, plane_strategy)
     raise ValueError(f"unknown codec name {codec_name!r}")
@@ -833,17 +894,24 @@ def encode_best(
 ) -> bytes | None:
     """Encode with the exact-cost argmin over all viable codecs.
 
-    Mirrors ``AddLZ77BlockAutoType`` (reference src/zopfli/deflate.c:1071-1131):
-    every candidate's *real* encoded size decides, and PLAIN is always a
-    candidate so the result is never larger than raw + 1 tag byte (stored-block
+    Mirrors ``AddLZ77BlockAutoType`` (reference src/zopfli/deflate.c:1071-1131)
+    through its cost-only twin ``ZopfliCalculateBlockSizeAutoType``
+    (deflate.c:908-947): the analytic candidates (FOR and delta bitpack, RLE,
+    DICT with its RLE-of-index variant, DICT_SHIFT) are priced by exact size
+    functions that share their code with the builders, one running winner is
+    kept, and only the final argmin is built. PLANE_ZLIB and HUFFMAN are
+    realized: DEFLATE output has no analytic size, and the Huffman encoder
+    prices itself exactly before it emits. PLAIN is always a candidate, so
+    the result is never larger than raw + 1 tag byte (stored-block
     guarantee, deflate.c:951-989).
 
     ``budget``: candidate-encode cap (merge/squeeze proposals, where only a
     result strictly under the caller's current bytes can be adopted) — the
     size gates start from min(plain, budget), so candidates that cannot beat
-    the proposal's bar are never materialized, and None is returned when
-    nothing comes in under it. The returned blob is always a valid encoding;
-    a tighter starting bar only prunes candidates that could not win.
+    the proposal's bar are never priced or realized, and None is returned
+    when nothing comes in under it. The returned blob is always a valid
+    encoding; a tighter starting bar only prunes candidates that could not
+    win.
     """
     # keep a narrow view for sort-heavy probes (unique on int32 moves half
     # the bytes of the int64 working copy)
@@ -861,9 +929,16 @@ def encode_best(
     def ok(tag: int) -> bool:
         return allowed is None or tag in allowed
 
-    candidates: list[bytes] = []
+    def unique():
+        # a sort, no argsort: the index stream is built (searchsorted) only
+        # by the dict builder and the Huffman encoder
+        u, c = np.unique(v_narrow if v_narrow.dtype == np.int32 else v, return_counts=True)
+        return u.astype(np.int64, copy=False), c
+
     plain_size = 1 + 4 * n
     best_size = plain_size if budget is None else min(plain_size, budget)
+    # the running winner: best_size is its exact size, build() makes it
+    build = None
     # budget-FREE running best for the two heuristic admission gates below
     # (plane-DEFLATE and Huffman): their entropy comparisons are heuristics,
     # not lower bounds — plane DEFLATE routinely realizes BELOW order-0
@@ -875,100 +950,91 @@ def encode_best(
     # so the heuristic gates behave identically with or without a budget.
     heur = plain_size
     # invariant: heur >= best_size. heur starts at plain_size >= best_size,
-    # and an exact analytic size below best_size is materialized, lowering
-    # both, so the lower-bound gates below compare against best_size alone.
+    # and an exact size below best_size becomes the winner, lowering both,
+    # so the lower-bound gates below compare against best_size alone.
 
-    # --- analytic candidates -------------------------------------------------
+    # --- analytic candidates: priced exactly, only the argmin is built --------
     w_for = bit_width(vmax - vmin)
     if ok(FOR_BITPACK):
-        s = 1 + 8 + 1 + _size_packed(n, w_for)
+        s = _FRAME_HDR + _size_packed(n, w_for)
         heur = min(heur, s)
         if s < best_size:
-            candidates.append(_enc_for(v, vmin, w_for))
-            best_size = min(best_size, len(candidates[-1]))
+            best_size, build = s, lambda: _enc_for(v, vmin, w_for)
 
     dv = np.diff(v)
     zz = zigzag_encode(dv)
     w_d = bit_width(int(zz.max())) if n > 1 else 0
     if ok(DELTA) and n > 1:
-        s = 1 + 8 + 1 + _size_packed(n - 1, w_d)
+        s = _FRAME_HDR + _size_packed(n - 1, w_d)
         heur = min(heur, s)
         if s < best_size:
-            candidates.append(_enc_delta(v, zz, w_d))
-            best_size = min(best_size, len(candidates[-1]))
+            best_size, build = s, lambda: _enc_delta(v, zz, w_d)
 
     # --- run-length ----------------------------------------------------------
     run_vals, run_lens = _run_lengths(v, dv)
     n_runs = len(run_vals)
+    lens_plan = None
     if ok(RLE) and n_runs <= n // 2:
         # lower bound: each run ≥ (w_for + 1 bit) — prune hopeless cases
         lb = 1 + 8 + (n_runs * (w_for + 1) + 7) // 8
         if lb < best_size:
-            blob = _build_rle(v, run_vals, run_lens)
-            heur = min(heur, len(blob))
-            if len(blob) < best_size:
-                candidates.append(blob)
-                best_size = len(blob)
+            lens_plan = _plan_simple(run_lens)
+            plan = _plan_rle(run_vals, lens_plan)
+            heur = min(heur, plan[0])
+            if plan[0] < best_size:
+                best_size, build = plan[0], lambda p=plan: _build_rle(run_vals, run_lens, p)
 
     # --- dictionary ----------------------------------------------------------
-    uniq, inverse = None, None
+    uniq, counts = None, None
     if ok(DICT):
-        uniq, inverse = np.unique(
-            v_narrow if v_narrow.dtype == np.int32 else v, return_inverse=True
-        )
-        uniq = uniq.astype(np.int64, copy=False)
+        uniq, counts = unique()
         card = len(uniq)
         w_idx = bit_width(card - 1)
         lb = 1 + 4 + 4 + (card * 2 + n * w_idx + 7) // 8
         if card >= 2 and w_idx < 32 and lb < best_size:
-            blob = _build_dict(v, uniq, inverse)
-            heur = min(heur, len(blob))
-            if len(blob) < best_size:
-                candidates.append(blob)
-                best_size = len(blob)
+            if lens_plan is None and n_runs <= n // 2:
+                lens_plan = _plan_simple(run_lens)
+            plan = _plan_dict(uniq, n, run_vals, lens_plan)
+            heur = min(heur, plan[0])
+            if plan[0] < best_size:
+                best_size, build = plan[0], lambda p=plan: _build_dict(v, uniq, run_lens, p)
 
     # --- coarsened (quantized) dictionary -------------------------------------
     if ok(DICT_SHIFT) and uniq is not None and len(uniq) > 256:
-        blob = _build_dict_shift(v, uniq, n, best_size)
-        if blob is not None:
-            heur = min(heur, len(blob))
-            if len(blob) < best_size:
-                candidates.append(blob)
-                best_size = len(blob)
+        plan = _plan_dict_shift(uniq, n, best_size)
+        if plan is not None:
+            heur = min(heur, plan[0])
+            if plan[0] < best_size:
+                best_size, build = plan[0], lambda p=plan: _build_dict_shift(v, p)
 
-    # --- entropy-coded candidates (gated) --------------------------------------
+    # --- entropy-coded candidates (gated, realized) ----------------------------
     # PLANE_ZLIB runs FIRST: under the Z_RLE strategy it is the cheap
     # workhorse (~5× faster than match-search DEFLATE), so its realized size
     # becomes the bar the Huffman gate must clear — pruning the package-merge
     # machinery on pages where plane DEFLATE already sits at/below entropy
     # (mixed-kind pages exploit ORDER structure order-0 Huffman cannot).
-    counts = None
     if ok(PLANE_ZLIB) and n >= 64:
         # run DEFLATE only when the bitpack-family best is still far above the
         # order-0 entropy bound — i.e. distributional structure remains that
         # only an entropy coder can exploit. Lower-bound pruning discipline of
         # GetCostModelMinCost (reference src/zopfli/squeeze.c:201-236).
         if uniq is None:
-            uniq, inverse = np.unique(v, return_inverse=True)
-        counts = np.bincount(inverse)
+            uniq, counts = unique()
         h_bytes = entropy_bits(counts) / 8.0
         if heur > h_bytes * 1.1:
             pz = _enc_plane_zlib(v, vmin, w_for, zlib_level, plane_strategy)
             heur = min(heur, len(pz))
             if len(pz) < best_size:
-                candidates.append(pz)
-                best_size = len(pz)
+                best_size, build = len(pz), lambda b=pz: b
 
     if try_huffman and ok(HUFFMAN) and n >= 64:
         # canonical Huffman over dict indices: exact payload bits are known
         # analytically from (counts · code lengths) before any emission —
         # the ZopfliCalculateBlockSize discipline (reference deflate.c:877-906)
         if uniq is None:
-            uniq, inverse = np.unique(v, return_inverse=True)
+            uniq, counts = unique()
         card = len(uniq)
         if 2 <= card <= _HUFF_MAX_CARD:
-            if counts is None:
-                counts = np.bincount(inverse)
             # two-stage lower bound (GetCostModelMinCost discipline): Shannon
             # entropy bounds the Huffman payload from below, so a cheap gate
             # runs before the package-merge; exact (counts · lengths) after.
@@ -989,18 +1055,22 @@ def encode_best(
                 p1 = int((counts * l1).sum())
                 if fixed + (p1 + 7) // 8 < best_size:
                     lengths, _ = _huffman_select_lengths(counts, l1=l1)
-                    blob = _enc_huffman(v, uniq, inverse, lengths, budget=best_size)
+                    blob = _enc_huffman(
+                        v, uniq, np.searchsorted(uniq, v), lengths, budget=best_size
+                    )
                     if blob is not None:
-                        candidates.append(blob)
-                        best_size = len(blob)
+                        best_size, build = len(blob), lambda b=blob: b
 
-    if candidates:
-        best = min(candidates, key=len)
-        if len(best) < plain_size:
-            return best
-    if budget is not None and plain_size >= budget:
-        return None
-    return _enc_plain(v)
+    if build is None:
+        if budget is not None and plain_size >= budget:
+            return None
+        return _enc_plain(v)
+    blob = build()
+    if len(blob) != best_size:
+        raise AssertionError(
+            f"{blob_codec_name(blob)} built {len(blob)} bytes, priced {best_size}"
+        )
+    return blob
 
 
 # ---------------------------------------------------------------------------
