@@ -1,7 +1,8 @@
 """Golden page hashes: the exact output of ``engine._encode_group`` on small
 deterministic groups, one case per search path (dial profiles, group-dict
 adoption and revert, mode grid, split modes, codec allow-list, split hints,
-lineage replays). Every output column except the two timers is pinned by
+lineage replays, and page headers whose doc_ids take the dict and the FSST
+string codecs). Every output column except the two timers is pinned by
 its SHA-256 in row order, so a refactor that moves a single byte, page
 boundary, codec name or flag fails here. Spark-free: each case calls
 ``_encode_group`` directly on an Arrow table shaped like the planner's
@@ -29,11 +30,11 @@ GEO_SMALL = dict(page_budget_values=4096, group_budget_values=1 << 20, giant_doc
 TIMERS = ("enc_us", "enc_cpu_us")
 
 
-def _tbl(docs: list[np.ndarray]) -> pa.Table:
+def _tbl(docs: list[np.ndarray], ids: list[str] | None = None) -> pa.Table:
     n = len(docs)
     return pa.table(
         {
-            "doc_id": pa.array([f"doc_{i:04d}" for i in range(n)]),
+            "doc_id": pa.array(ids if ids is not None else [f"doc_{i:04d}" for i in range(n)]),
             "tokens": pa.array([d.tolist() for d in docs], pa.list_(pa.int32())),
             "n_tok": pa.array([len(d) for d in docs], pa.int32()),
             "source": pa.array([("web", "code", "math")[i % 3] for i in range(n)]),
@@ -128,6 +129,14 @@ def _input(name: str) -> pa.Table:
     if name == "low_card":  # no window qualifies to train a group dictionary
         rng = np.random.default_rng(8)
         return _tbl([rng.integers(0, 200, int(rng.integers(200, 900))).astype(np.int32) for _ in range(20)])
+    if name == "dup_ids":  # repeated doc_ids: page headers take the dict string path
+        docs = _mixture(6, 240, 120)
+        ids = [f"dokument-\u00e9\u4e2d-{i // 4:03d}" if i % 9 else "" for i in range(len(docs))]
+        return _tbl(docs, ids)
+    if name == "long_ids":  # >= 2,048 doc_id bytes per page: the FSST string path
+        docs = _mixture(7, 1200, 24)
+        ids = [f"https://corpus.example.org/shard-{i % 7:02d}/item/{i:06d}.jsonl\x00" for i in range(len(docs))]
+        return _tbl(docs, ids)
     raise KeyError(name)
 
 
@@ -175,6 +184,23 @@ CFG = {
         group_dict=True, codec_allowlist=("bitpack", "for_bitpack", "zlib", "rle"), **GEO
     ),
     "recompress": EngineConfig(recompress_passes=2, group_dict=True, cluster_docs=True, **GEO),
+    "dup_ids": EngineConfig(**GEO),
+    "dup_ids_ratio": EngineConfig.ratio(**GEO),
+    "long_ids": EngineConfig(**GEO),
+    "long_ids_ratio": EngineConfig.ratio(**GEO),
+}
+
+#: the input of each case not run on "mix"; a replay runs on its base's input
+INPUTS = {
+    "mode_grid": "blocks",
+    "mode_grid_order_blind": "order_blind",
+    "mode_grid_same_geometry": "order_blind",
+    "group_dict_mode_grid": "zipf",
+    "group_dict_untrained": "low_card",
+    "dup_ids": "dup_ids",
+    "dup_ids_ratio": "dup_ids",
+    "long_ids": "long_ids",
+    "long_ids_ratio": "long_ids",
 }
 
 _HINT_BOUNDS = list(range(10, 160, 10))
@@ -205,21 +231,13 @@ def _case(name: str) -> pa.Table:
         )
     if name.startswith("replay_"):
         base = name[len("replay_"):]
-        inp = "blocks" if base == "mode_grid" else "mix"
-        return _encode_group(_input(inp), CFG[base], plan_tbl=_plan_tbl(_run(base)))
+        return _encode_group(_input(INPUTS.get(base, "mix")), CFG[base], plan_tbl=_plan_tbl(_run(base)))
     if name == "stale_plan_searches":
         plan = _plan_tbl(_run("default"))
         short = json.loads(plan.column("plan")[0].as_py())[:-1]
         plan = plan.set_column(1, "plan", pa.array([json.dumps(short)]))
         return _encode_group(_input("mix"), CFG["default"], plan_tbl=plan)
-    inp = {
-        "mode_grid": "blocks",
-        "mode_grid_order_blind": "order_blind",
-        "mode_grid_same_geometry": "order_blind",
-        "group_dict_mode_grid": "zipf",
-        "group_dict_untrained": "low_card",
-    }.get(name, "mix")
-    return _encode_group(_input(inp), CFG[name])
+    return _encode_group(_input(INPUTS.get(name, "mix")), CFG[name])
 
 
 @functools.lru_cache(maxsize=None)
@@ -269,6 +287,40 @@ GOLDEN: dict[str, dict[str, str]] = {
         "payload": "c1149b6a58184fd396f9cb80eb5582d8b56a061e9ee8ebec8b4b7a3d727b61f3",
         "raw_bytes": "9a3804a195053f0e289b2e57d67fb8cd161a3cca2394d6e5525dc7ff473a1fc0",
         "resumed": "cb25ca7a712f6f369ac664c94d76d4538d02d9affe91197f7a63276ca620d668",
+    },
+    "dup_ids": {
+        "checksum": "a0a89b3568d07f9d139b8ba8f79b8e84442db3f4fc84334fed4e45dd8017ad2e",
+        "codec": "224a2362cce83cbd47cf401ed39b6e2754e3ab8cb08029b551a044574bbef0b0",
+        "content_hash_group": "7876a27b1d989f1aeecfe87b98679c6057db39f96431d072a96c91eaee345a4d",
+        "content_key": "f0373fa0e11d90c3543aa600995f1a2c0b319684802ca680adfcbe8ffdd6b239",
+        "enc_bytes": "912de794f65b8001b5773b362f428696690e1a6396335b44be9565cda8cbd619",
+        "first_doc_id": "0e93056d41cbcacd3f7bc7d06764bc1b690a44012e58d94d237a5d64ec16e0e4",
+        "header": "c09f26f6cc42c9a45a3ad72623befcb4cbde3d564bcd1d62a2cb81f4fd955847",
+        "last_doc_id": "1c16e5b6e099057a5291760649e663fd1efab296a177208ace11ca26ce46fafc",
+        "n_rows": "7af8171da4953894c9bd43a0790ac0ba64c23deb9972277b3ca26f0bf12704ff",
+        "n_values": "f9d94d8f4d56ea8a8ad90d8e105c29d3ff05f46f0d31ba50c2be3c2482df30da",
+        "page_id": "068ff0cf40cd49ec76ac5101505e9ea3875525b709a9db927049e4812f3bd59f",
+        "part_id": "700cdc6f64c942740484e314a97178ca99d55338d97330ef8a646014b3a6f362",
+        "payload": "0c5828fd5dbd01ab4919483c4492cc59ac79a7c1d6e8d62fcf11bd9e3f90893c",
+        "raw_bytes": "2e8fa042a0c549e418b5a79c56aeafab241d54766ed5828544fc52c2cafc7d19",
+        "resumed": "700cdc6f64c942740484e314a97178ca99d55338d97330ef8a646014b3a6f362",
+    },
+    "dup_ids_ratio": {
+        "checksum": "f42eaba847615e73fb749fcd6cc1670c0e00cb3a9f6242193dec508b26205f83",
+        "codec": "8575bd6486598394398d26051aa290955b3c16018f516770404e84b2b7c6081e",
+        "content_hash_group": "6fc80855cee3e0b30d2bb42b045bec49ae72c3a9f3d53e47b5baaa6849e17322",
+        "content_key": "4356700077d8e16b408fc7d84f4cdc19128ecaf0bfe69498971e1091658e27ab",
+        "enc_bytes": "c9b9edbb5e2c47a91546324f5b1456caf09b1257e7e82cdf8052ccb4763e1807",
+        "first_doc_id": "57d23c8d83c11e79e7ed204f566b02f5e56e6030eb19ba24706b54640a6ec3ff",
+        "header": "b2b12c819309001211f3f17e7a99296c18f430ae0b8553e0502a2d9658fefa6e",
+        "last_doc_id": "5c7978c333fb3afb9d455b1b8afb502e0f03b4a02410d9be2e0acd1e3a1ca1ad",
+        "n_rows": "c0b68dff9e421411503a34181e3a8c8589502404673f4d53970b304d047c5ec1",
+        "n_values": "76730f7d6611580307e8ae5ec24c3f2acef96d944201e187e4ee18a39d3e27c0",
+        "page_id": "809d533fc370950a0e8c21b32c9e303611bc2ea742fe8532180a1ce64075835f",
+        "part_id": "c14bc7d02c76f1aeaef4499b60987f4ef3b4e23b000ea9940627b633166707f6",
+        "payload": "411ffc0d0d1c8ded0d5c686d3aeb0f23a8d8d3654ca2e732d6e2a7e7189ddc42",
+        "raw_bytes": "fef4e0e84c9f57d74258f0dd1a9806f24a7313ea6e250c5e4a27aa1b771b5091",
+        "resumed": "c14bc7d02c76f1aeaef4499b60987f4ef3b4e23b000ea9940627b633166707f6",
     },
     "group_dict_mode_grid": {
         "checksum": "25dfe3a750703d4f4f31c8b8ddaf8a94246b64692b6ce3be20515c2c01f956f1",
@@ -389,6 +441,40 @@ GOLDEN: dict[str, dict[str, str]] = {
         "raw_bytes": "02a1f22e770408016753f1f695b93abf1f5cf105ce2817283169bcf360cfbac7",
         "resumed": "cf6ed71415dc5353c781210aca866b263cb911ce76c7ca893e664b4bb1052ef7",
     },
+    "long_ids": {
+        "checksum": "bd0957998f2f90770ab320fbc77876b014e67b1546245a358c0b15a68c97c352",
+        "codec": "224a2362cce83cbd47cf401ed39b6e2754e3ab8cb08029b551a044574bbef0b0",
+        "content_hash_group": "c87417cf3f0bbfa5045da972ddb4621ba54a0a67ef572edbff3d1ed080f73852",
+        "content_key": "ef5b2e288bcf54591289b86cfc19fa6cf7985f283e15712bbc10b16f20cfa4c3",
+        "enc_bytes": "3ce690c07594f62ccad58c51d6e3387c6a2a95a2ba7ee04707a749ed5d8a76ef",
+        "first_doc_id": "de39018dcce4e6857866ef0c59bb543a6aa7d19e0c738b732939f52226dc99b0",
+        "header": "ccd5c1f00dd1a0cf80dd6bfdddee5ae6f7ffb3e0820b582267b2ad3fd27d9a6f",
+        "last_doc_id": "40b4c39686faeb5dade3278bc4e60dd4cc7221274b0cac2190519dddad069182",
+        "n_rows": "df9dbbd460c79fdfc32f53714c8ef29d5357c72a13d3e2f01091ebc01a39b700",
+        "n_values": "b206999b6aa93394edc802e31a8fc67afef38d3e68bdf6b6abfc8b00bc8d5c0e",
+        "page_id": "068ff0cf40cd49ec76ac5101505e9ea3875525b709a9db927049e4812f3bd59f",
+        "part_id": "700cdc6f64c942740484e314a97178ca99d55338d97330ef8a646014b3a6f362",
+        "payload": "dbf08d2d485316fc37622773d743b292531836875df01c012ffaf22f627b793a",
+        "raw_bytes": "ef2bfd7b9437774db2d7e051c0cd9244f872851bc5c7008c1c04f9921627381a",
+        "resumed": "700cdc6f64c942740484e314a97178ca99d55338d97330ef8a646014b3a6f362",
+    },
+    "long_ids_ratio": {
+        "checksum": "69f5e9d08b35d6e95297e0f7619888007cf868eff0f306396f0f2291e1f44c9e",
+        "codec": "fb3cbe8f6ee5286309e6bfebaa182c90f9206553a03b875642ff16a330a2f5ec",
+        "content_hash_group": "78247a95abe672a18311787b6619d9abbb1a4b1e247cd284633a8b5817ff143a",
+        "content_key": "23eeaa5f878d8513c22ac43c8bd405923b24e8cb5b76d26a0d3a59069d1605e9",
+        "enc_bytes": "e8883aceaba7bc4645d203487362aa0447efb5e01b8c97fa7dd113f06a07293a",
+        "first_doc_id": "4f09dd6d5bd42668af275ac046fa06871ac6dc4e9e000b8109d40df6518c419b",
+        "header": "97f32af9751c291a07ae7e2b1e3bc3521c681f0a0432c1de86df0627ac8aba2b",
+        "last_doc_id": "4bfab5b1c0d2d1bd90bceb707711a835ad08dd54a92bc69de162a8658c93097c",
+        "n_rows": "8f69fb20b5d15c7ddc55dd2811c9259e18925eb717685990ea6b15fadfe21f5f",
+        "n_values": "c4de805db89a5504df8b59791b75b97a4b9dc66ab5d2dd6f1c2c961e9ca19840",
+        "page_id": "b4fd587ed6b9c523aae092d02df1a3f3367e7c9fd446175b37d05398ae8f223c",
+        "part_id": "aff24e1891407fc1209fff93e67c9d1327aae71e6a881d2bc088badcc035b6e2",
+        "payload": "c67da3c173dc1920275c9627c32f7c43ad7ad4e96dc924fab2dffcbecd7db572",
+        "raw_bytes": "884843df2fcc5fe7a1adb2de7cbd8aaf85808fcc3dc119bc8b92d40a6ce82025",
+        "resumed": "aff24e1891407fc1209fff93e67c9d1327aae71e6a881d2bc088badcc035b6e2",
+    },
     "mode_grid": {
         "checksum": "24370b511430ddee9f4be8a5312206a2ea6f49c19c38f2149ba77a21e90bbbbf",
         "codec": "872017bf8d1ce71d045e47ce3bea39a7bccc6acf1735922197a360df7e99c5f1",
@@ -490,6 +576,23 @@ GOLDEN: dict[str, dict[str, str]] = {
         "payload": "12cf788b938d1b033d28c32b3b587ed17156e8afe5f6dff6470f8cf273608e75",
         "raw_bytes": "1536cbb5c969f47684a44bafe86b482228cd818648277c10b7bc803c742ac025",
         "resumed": "af096a52f326899a15e5a08e2b83cd8afe55355d9db17892fe90746d5ca63149",
+    },
+    "replay_long_ids_ratio": {
+        "checksum": "69f5e9d08b35d6e95297e0f7619888007cf868eff0f306396f0f2291e1f44c9e",
+        "codec": "fb3cbe8f6ee5286309e6bfebaa182c90f9206553a03b875642ff16a330a2f5ec",
+        "content_hash_group": "78247a95abe672a18311787b6619d9abbb1a4b1e247cd284633a8b5817ff143a",
+        "content_key": "23eeaa5f878d8513c22ac43c8bd405923b24e8cb5b76d26a0d3a59069d1605e9",
+        "enc_bytes": "e8883aceaba7bc4645d203487362aa0447efb5e01b8c97fa7dd113f06a07293a",
+        "first_doc_id": "4f09dd6d5bd42668af275ac046fa06871ac6dc4e9e000b8109d40df6518c419b",
+        "header": "97f32af9751c291a07ae7e2b1e3bc3521c681f0a0432c1de86df0627ac8aba2b",
+        "last_doc_id": "4bfab5b1c0d2d1bd90bceb707711a835ad08dd54a92bc69de162a8658c93097c",
+        "n_rows": "8f69fb20b5d15c7ddc55dd2811c9259e18925eb717685990ea6b15fadfe21f5f",
+        "n_values": "c4de805db89a5504df8b59791b75b97a4b9dc66ab5d2dd6f1c2c961e9ca19840",
+        "page_id": "b4fd587ed6b9c523aae092d02df1a3f3367e7c9fd446175b37d05398ae8f223c",
+        "part_id": "aff24e1891407fc1209fff93e67c9d1327aae71e6a881d2bc088badcc035b6e2",
+        "payload": "c67da3c173dc1920275c9627c32f7c43ad7ad4e96dc924fab2dffcbecd7db572",
+        "raw_bytes": "884843df2fcc5fe7a1adb2de7cbd8aaf85808fcc3dc119bc8b92d40a6ce82025",
+        "resumed": "d05eb4fbff95c5ce6af369e8248eb289510e9c060a7a812f42e1bd94f9835cbc",
     },
     "replay_mode_grid": {
         "checksum": "24370b511430ddee9f4be8a5312206a2ea6f49c19c38f2149ba77a21e90bbbbf",
@@ -601,7 +704,7 @@ def test_golden_pages(name):
     assert _digests(_run(name)) == GOLDEN[name]
 
 
-@pytest.mark.parametrize("base", ["ratio", "mode_grid"])
+@pytest.mark.parametrize("base", ["ratio", "mode_grid", "long_ids_ratio"])
 def test_replay_reproduces_search_bytes(base):
     """A lineage replay forces the recorded codecs (group_huffman, "@lvl"
     names) and must emit the searched output byte for byte."""
