@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from zopfli_spark import EngineConfig, decode_table, encode_table, metrics_table
@@ -71,8 +72,23 @@ def _lineitem_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: results whose input holds more rows than this sort by range partitioning
+#: instead of in one task (see :func:`_ordered`)
+_SINGLE_SORT_MAX_ROWS = 1_000_000
+
+
+def _input_rows(df: DataFrame) -> int | None:
+    """Σ rows of the parquet files ``df`` reads, from their footers (no
+    Spark job), or None when a footer cannot be read."""
+    try:
+        return sum(pq.read_metadata(f).num_rows for f in df.inputFiles())
+    except Exception:
+        return None
+
+
 def _ordered(df: DataFrame, *cols) -> DataFrame:
-    """Total order for a SMALL final result without a range exchange (r7).
+    """Total order for a final result, without a range exchange when the
+    result is small (r7).
 
     A plain ``orderBy`` compiles to a range-partitioned sort whose sampling
     pass EXECUTES THE WHOLE CHILD PLAN a second time just to pick partition
@@ -80,8 +96,19 @@ def _ordered(df: DataFrame, *cols) -> DataFrame:
     encode→decode pipeline (measured on sf0.1: 4.7 s → 2.5 s for
     roundtrip_lineitem with identical rows AND identical order). One
     round-robin exchange into a single partition plus an in-partition sort
-    executes the child once; every declared result here is ≤ ~56 K rows, so
-    the single sort task is trivial."""
+    executes the child once, but funnels the whole result through one task.
+
+    The per-doc and per-group queries return at most one row per input
+    row, so the rows of the tables ``df`` reads bound that task (the pair
+    queries return the near-duplicate pairs their filters keep, a few per
+    doc on these inputs). Up to ``_SINGLE_SORT_MAX_ROWS`` input rows
+    (sf0.1's largest table, lineitem, holds 600 K) the result sorts in one
+    task; above it, or when the input cannot be counted, it takes the range
+    sort, whose tasks stay bounded as the documents grow. Both give the
+    same rows in the same order."""
+    rows = _input_rows(df)
+    if rows is None or rows > _SINGLE_SORT_MAX_ROWS:
+        return df.orderBy(*cols)
     return df.repartition(1).sortWithinPartitions(*cols)
 
 

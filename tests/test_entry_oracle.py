@@ -4,7 +4,10 @@ its oracle_sql() DuckDB result (row count + sorted-column value equality)."""
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -50,3 +53,24 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert set(df.columns) >= {"part_id", "codec", "ratio", "tokens_per_sec"}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_ordered_sorts_an_oversized_result_by_range(spark, tmp_path, monkeypatch):
+    """``_ordered`` sorts in one task only while the rows it reads stay
+    within its bound; a result read from more rows takes the range sort,
+    with the same rows in the same order."""
+    n = 4000
+    path = str(tmp_path / "keys.parquet")
+    pq.write_table(pa.table({"k": np.random.default_rng(0).permutation(n)}), path)
+    df = spark.read.parquet(path)
+    assert entry_mod._input_rows(df) == n
+    small = entry_mod._ordered(df, "k")
+    assert "SinglePartition" in _plan(small) and "rangepartitioning" not in _plan(small)
+    monkeypatch.setattr(entry_mod, "_SINGLE_SORT_MAX_ROWS", n - 1)
+    big = entry_mod._ordered(df, "k")
+    assert "rangepartitioning" in _plan(big) and "SinglePartition" not in _plan(big)
+    assert [r.k for r in big.collect()] == [r.k for r in small.collect()] == list(range(n))

@@ -106,6 +106,19 @@ def test_read_lineage_plan_is_one_exchange(spark, tokens_df, tmp_path_factory):
     assert plan.count("Exchange ") == 1 and "Window" not in plan
 
 
+def test_read_lineage_without_files_builds_no_read(tmp_path):
+    """A store with no lineage file reads as None before any Spark work: a
+    fresh root, and a root whose lineage/ holds only an append's in-flight
+    temp file. (``spark`` is None, so a read attempt would raise.)"""
+    root = str(tmp_path)
+    assert read_lineage(None, root) is None
+    path = os.path.join(root, "lineage")
+    os.makedirs(path)
+    store._write_tmp(path, pa.table({"content_key": pa.array([1], pa.int64())}))
+    assert len(os.listdir(path)) == 1
+    assert read_lineage(None, root) is None
+
+
 def test_failed_encode_leaves_store_readable(spark, tokens_df, tmp_path_factory):
     """An encode whose UDF raises must leave the committed snapshot as it
     was. With AQE off, such a failure during a Spark overwrite of pages/

@@ -1000,7 +1000,17 @@ def encode_best(
                 best_size, build = plan[0], lambda p=plan: _build_dict(v, uniq, run_lens, p)
 
     # --- coarsened (quantized) dictionary -------------------------------------
-    if ok(DICT_SHIFT) and uniq is not None and len(uniq) > 256:
+    # Exact skip: shift s keeps cardq >= card / 2^s quotients (one quotient
+    # covers at most 2^s values), so 2^(bit_width(cardq-1)+s) >= cardq·2^s
+    # >= card and every shift's estimate in _dict_shift_best_s is at least
+    # 14 + n·bit_width(card-1)/8. When that bound reaches best_size, every
+    # estimate does, and _plan_dict_shift would return None.
+    if (
+        ok(DICT_SHIFT)
+        and uniq is not None
+        and len(uniq) > 256
+        and 14.0 + n * bit_width(len(uniq) - 1) / 8.0 < best_size
+    ):
         plan = _plan_dict_shift(uniq, n, best_size)
         if plan is not None:
             heur = min(heur, plan[0])
@@ -1008,6 +1018,12 @@ def encode_best(
                 best_size, build = plan[0], lambda p=plan: _build_dict_shift(v, p)
 
     # --- entropy-coded candidates (gated, realized) ----------------------------
+    # the page's order-0 entropy, computed once for both gates below
+    h_bits = 0.0
+    if n >= 64 and (ok(PLANE_ZLIB) or (try_huffman and ok(HUFFMAN))):
+        if uniq is None:
+            uniq, counts = unique()
+        h_bits = entropy_bits(counts)
     # PLANE_ZLIB runs FIRST: under the Z_RLE strategy it is the cheap
     # workhorse (~5× faster than match-search DEFLATE), so its realized size
     # becomes the bar the Huffman gate must clear — pruning the package-merge
@@ -1018,10 +1034,7 @@ def encode_best(
         # order-0 entropy bound — i.e. distributional structure remains that
         # only an entropy coder can exploit. Lower-bound pruning discipline of
         # GetCostModelMinCost (reference src/zopfli/squeeze.c:201-236).
-        if uniq is None:
-            uniq, counts = unique()
-        h_bytes = entropy_bits(counts) / 8.0
-        if heur > h_bytes * 1.1:
+        if heur > h_bits / 8.0 * 1.1:
             pz = _enc_plane_zlib(v, vmin, w_for, zlib_level, plane_strategy)
             heur = min(heur, len(pz))
             if len(pz) < best_size:
@@ -1031,8 +1044,6 @@ def encode_best(
         # canonical Huffman over dict indices: exact payload bits are known
         # analytically from (counts · code lengths) before any emission —
         # the ZopfliCalculateBlockSize discipline (reference deflate.c:877-906)
-        if uniq is None:
-            uniq, counts = unique()
         card = len(uniq)
         if 2 <= card <= _HUFF_MAX_CARD:
             # two-stage lower bound (GetCostModelMinCost discipline): Shannon
@@ -1047,7 +1058,7 @@ def encode_best(
             lb_dict = 10 + (card - 1 + 7) // 8
             fixed = 1 + 4 + 4 + lb_dict + 1 + 4 + 9 + 2 + 4 + 1 + 4
             lb_table = (card * 3) // 8
-            if fixed + lb_table + int(entropy_bits(counts)) // 8 < huffman_headroom * heur:
+            if fixed + lb_table + int(h_bits) // 8 < huffman_headroom * heur:
                 # optimal lengths first; the exact unsmoothed payload is a
                 # lower bound for both variants, so it gates BEFORE paying
                 # for the smoothed-variant comparison

@@ -74,7 +74,9 @@ def _utf8_buffers(arr: pa.Array) -> tuple[bytes, np.ndarray]:
     bufs = arr.buffers()
     offs = np.frombuffer(bufs[1], dtype=off_dtype)[arr.offset : arr.offset + n + 1]
     lengths = np.diff(offs).astype(np.int64)
-    data = bufs[2].to_pybytes()[int(offs[0]) : int(offs[-1])] if bufs[2] is not None else b""
+    # copy only this slice's bytes, not the whole buffer of a sliced column
+    lo, hi = int(offs[0]), int(offs[-1])
+    data = bufs[2].slice(lo, hi - lo).to_pybytes() if bufs[2] is not None else b""
     return data, lengths
 
 
@@ -103,8 +105,7 @@ def strings_from_utf8(data: bytes, lengths: np.ndarray) -> pa.Array:
     )
 
 
-def _enc_s_plain(strings: pa.Array) -> bytes:
-    data, lengths = _utf8_buffers(strings)
+def _enc_s_plain(data: bytes, lengths: np.ndarray) -> bytes:
     lb = encode_simple(lengths)
     return bytes([S_PLAIN]) + _U32.pack(len(lb)) + lb + data
 
@@ -269,8 +270,7 @@ def _fsst_decode(code_bytes: bytes, table: list[bytes]) -> bytes:
     return out.tobytes()
 
 
-def _enc_s_fsst(strings: pa.Array) -> bytes | None:
-    data, lengths = _utf8_buffers(strings)
+def _enc_s_fsst(data: bytes, lengths: np.ndarray) -> bytes | None:
     # training cost only amortizes on larger corpora (measured: FSST on
     # per-page doc_id blobs was 15% of encode CPU at 400-byte corpora)
     if not (2048 <= len(data) <= _FSST_MAX_CORPUS):
@@ -298,41 +298,91 @@ def _dec_s_fsst(body: memoryview, n: int) -> pa.Array:
     return strings_from_utf8(data, lengths)
 
 
-def encode_strings(strings, try_fsst: bool = True) -> bytes:
-    """Auto-select string codec by exact encoded size (argmin, like
-    kernels.encode_best; reference src/zopfli/deflate.c:1071-1131).
+class StringTable:
+    """A string column prepared once for many row-span encodes: its utf-8
+    buffer and row offsets, each row's rank in the column's sorted
+    dictionary, and whether every row is distinct.
 
-    Accepts a pyarrow StringArray (the hot path — zero per-row Python) or
-    any object-array-like (tests/legacy). The dictionary probe runs as
-    Arrow C kernels (dictionary_encode + take), never numpy object unique —
-    and unlike numpy's fixed-width "U" dtype, Arrow preserves embedded and
-    trailing NULs exactly (the r1 corruption class)."""
-    arr = as_string_array(strings)
-    n = len(arr)
-    best = _enc_s_plain(arr)
-    if n == 0:
-        return best
-    denc = pc.dictionary_encode(arr)
-    dict_arr, idx = denc.dictionary, denc.indices
-    card = len(dict_arr)
-    if 1 <= card <= n // 2:
-        # sort the dictionary (matches the old np.unique layout: sorted
-        # values delta/FoR-code better) and remap indices by rank
+    A page header encodes the doc_id and source slices of its row span, and
+    the split search prices thousands of overlapping spans per group. Built
+    once per group, the table answers each span from numpy slices, with no
+    per-span Arrow ``dictionary_encode`` / ``sort_indices`` / ``take`` — the
+    per-block state that every parse iteration reads, as Zopfli's
+    longest-match cache (reference src/zopfli/cache.c:29-133) does.
+
+    :meth:`encode` is the string codec: ``encode(r0, r1)`` is exactly the
+    auto-selected blob of rows ``[r0, r1)``. Ranks are global, and the
+    dictionary order is a total order on the strings, so a span's sorted
+    dictionary is its ranks' ``np.unique`` and its index stream their
+    ``searchsorted`` into it."""
+
+    def __init__(self, strings):
+        arr = as_string_array(strings)
+        self.n = len(arr)
+        data, self.lengths = _utf8_buffers(arr)
+        self.data = np.frombuffer(data, dtype=np.uint8)
+        self.offsets = np.concatenate(([0], np.cumsum(self.lengths)))
+        self.distinct = True
+        if self.n == 0:
+            return
+        # Arrow C kernels, never numpy object unique: unlike numpy's
+        # fixed-width "U" dtype, Arrow keeps embedded and trailing NULs (the
+        # r1 corruption class). The dictionary is sorted so that its values
+        # delta/FoR-code better, and every row maps to its value's rank.
+        denc = pc.dictionary_encode(arr)
+        dict_arr = denc.dictionary
+        card = len(dict_arr)
+        self.distinct = card == self.n
+        if self.distinct:
+            return
         order = pc.sort_indices(dict_arr).to_numpy(zero_copy_only=False)
         rank = np.empty(card, dtype=np.int64)
         rank[order] = np.arange(card)
-        inverse = rank[idx.to_numpy(zero_copy_only=False)]
-        vals_sorted = pc.take(dict_arr, pa.array(order))
-        vb = _enc_s_plain(vals_sorted)
-        ib = encode_simple(inverse)
-        cand = bytes([S_DICT]) + _U32.pack(card) + _U32.pack(len(vb)) + vb + ib
-        if len(cand) < len(best):
-            best = cand
-    if try_fsst:
-        f = _enc_s_fsst(arr)
+        self.ranks = rank[denc.indices.to_numpy(zero_copy_only=False)]
+        vals, self.dict_lengths = _utf8_buffers(pc.take(dict_arr, pa.array(order)))
+        self.dict_data = np.frombuffer(vals, dtype=np.uint8)
+        self.dict_offsets = np.concatenate(([0], np.cumsum(self.dict_lengths)))
+
+    def _dict_values(self, uranks: np.ndarray) -> tuple[bytes, np.ndarray]:
+        """(utf-8 bytes, lengths) of the dictionary values at ``uranks``."""
+        lengths = self.dict_lengths[uranks]
+        ends = np.cumsum(lengths)
+        shift = np.repeat(self.dict_offsets[uranks] - (ends - lengths), lengths)
+        return self.dict_data[np.arange(int(ends[-1])) + shift].tobytes(), lengths
+
+    def encode(self, r0: int, r1: int) -> bytes:
+        """Exact-size argmin of S_PLAIN / S_DICT / S_FSST over rows
+        ``[r0, r1)`` (like kernels.encode_best; reference
+        src/zopfli/deflate.c:1071-1131)."""
+        n = r1 - r0
+        lengths = self.lengths[r0:r1]
+        data = self.data[self.offsets[r0] : self.offsets[r1]].tobytes()
+        best = _enc_s_plain(data, lengths)
+        if n == 0:
+            return best
+        # a column of distinct rows has card == n > n // 2 in every span
+        if not self.distinct:
+            ranks = self.ranks[r0:r1]
+            uranks = np.unique(ranks)
+            card = len(uranks)
+            if card <= n // 2:
+                vb = _enc_s_plain(*self._dict_values(uranks))
+                ib = encode_simple(np.searchsorted(uranks, ranks))
+                cand = bytes([S_DICT]) + _U32.pack(card) + _U32.pack(len(vb)) + vb + ib
+                if len(cand) < len(best):
+                    best = cand
+        f = _enc_s_fsst(data, lengths)
         if f is not None and len(f) < len(best):
             best = f
-    return best
+        return best
+
+
+def encode_strings(strings) -> bytes:
+    """Auto-selected string blob of a whole column (see
+    :meth:`StringTable.encode`). Accepts a pyarrow StringArray (the hot
+    path — zero per-row Python) or any object-array-like."""
+    tbl = StringTable(strings)
+    return tbl.encode(0, tbl.n)
 
 
 def decode_strings(buf: bytes, n: int) -> pa.Array:

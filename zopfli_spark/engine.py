@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from .codecs import kernels
 from .codecs.bitio import bit_width
 from .codecs.kernels import _GH_MAX_CARD, GROUP_HUFFMAN
+from .codecs.strings import StringTable
 from .config import DEFAULT_CONFIG, MAX_UNSUCCESSFUL, EngineConfig
 from .deploy import ensure_shipped, forget_zip_finders
 from .lineage import (
@@ -462,6 +463,8 @@ class GroupCtx:
                 ]
                 lens = lens_p
         self.doc_ids, self.sources, self.values, self.lens = doc_ids, sources, values, lens
+        # every page header's string blobs are cut from these two tables
+        self.doc_tbl, self.src_tbl = StringTable(doc_ids), StringTable(sources)
         self.val_offsets = np.concatenate(([0], np.cumsum(lens)))
         self.allowed_tags = _allowlist_tags(config.codec_allowlist)
         # the group_huffman candidate honors the codec allow-list like every
@@ -548,6 +551,10 @@ class GroupCtx:
         return kernels.encode_group_huffman(sym, esc_vals, gd, gd.crc)
 
     # --- span encoding -----------------------------------------------------
+    def header(self, r0: int, r1: int) -> bytes:
+        """The page header of rows ``[r0, r1)``."""
+        return build_header(self.doc_tbl, self.src_tbl, self.lens, r0, r1)
+
     def encode(
         self,
         r0: int,
@@ -609,6 +616,7 @@ class GroupCtx:
             allowed=self.allowed_tags,
             group_encoder=self.encode_group_values,
             budget=budget,
+            header_fn=lambda: self.header(r0, r1),
         )
         # group_huffman candidate IN the argmin (config.group_dict): the
         # shared dictionary is fixed per group, so every span encode — first
@@ -636,12 +644,11 @@ class GroupCtx:
         if cand_sz >= bar:
             return page
         if page is None:
-            rows = slice(r0, r1)
-            header = build_header(self.doc_ids[rows], self.sources[rows], self.lens[rows])
+            header = self.header(r0, r1)
             if cand_sz + len(header) >= budget:
                 return None
             checksum = page_checksum(
-                self.doc_ids[rows], self.sources[rows], self.lens[rows], self.values[v0:v1]
+                self.doc_ids[r0:r1], self.sources[r0:r1], self.lens[r0:r1], self.values[v0:v1]
             )
         else:
             header, checksum = page[0], page[3]

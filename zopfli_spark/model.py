@@ -29,10 +29,11 @@ def entropy_bits(counts: np.ndarray) -> float | np.ndarray:
     with one cost per histogram. Zero counts cost nothing; an empty
     histogram costs 0."""
     c = np.asarray(counts, dtype=np.float64)
-    total = c.sum(axis=-1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        clogc = np.where(c > 0, c * np.log2(c), 0.0).sum(axis=-1)
-        h = np.where(total > 0, total * np.log2(total), 0.0) - clogc
+    total = np.asarray(c.sum(axis=-1))
+    # log2 only where the count is positive: a zero term is 0·0, the same
+    # float as the 0 it stands for, with no -inf to mask
+    clogc = (c * np.log2(c, out=np.zeros_like(c), where=c > 0)).sum(axis=-1)
+    h = total * np.log2(total, out=np.zeros_like(total), where=total > 0) - clogc
     return float(h) if h.ndim == 0 else h
 
 

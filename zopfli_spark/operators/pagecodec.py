@@ -34,12 +34,7 @@ from ..codecs.kernels import (
     encode_forced,
     encode_simple,
 )
-from ..codecs.strings import (
-    _utf8_buffers,
-    as_string_array,
-    decode_strings,
-    encode_strings,
-)
+from ..codecs.strings import StringTable, _utf8_buffers, as_string_array, decode_strings
 
 _U32 = struct.Struct("<I")
 
@@ -70,16 +65,19 @@ def page_checksum(doc_ids, sources, lens: np.ndarray, values: np.ndarray) -> int
 HEADER_FLOOR = 24
 
 
-def build_header(doc_ids, sources, lens: np.ndarray) -> bytes:
-    """Encode the page header (lens + doc_id + source blobs) — split out so
-    budgeted candidate encodes (merge/squeeze proposals) can compute the
-    payload first and skip the header work entirely when the payload alone
-    already exceeds the byte budget."""
-    lens_blob = encode_simple(np.asarray(lens, dtype=np.int64))
-    docid_blob = encode_strings(doc_ids)
-    source_blob = encode_strings(sources)
+def build_header(
+    doc_ids: StringTable, sources: StringTable, lens: np.ndarray, r0: int, r1: int
+) -> bytes:
+    """Encode the header of rows ``[r0, r1)`` (lens + doc_id + source
+    blobs) from the column-wide string tables — split out so budgeted
+    candidate encodes (merge/squeeze proposals) can compute the payload
+    first and skip the header work entirely when the payload alone already
+    exceeds the byte budget."""
+    lens_blob = encode_simple(np.asarray(lens[r0:r1], dtype=np.int64))
+    docid_blob = doc_ids.encode(r0, r1)
+    source_blob = sources.encode(r0, r1)
     return (
-        _U32.pack(len(doc_ids))
+        _U32.pack(r1 - r0)
         + _U32.pack(len(lens_blob))
         + lens_blob
         + _U32.pack(len(docid_blob))
@@ -104,6 +102,7 @@ def encode_page(
     allowed: frozenset | None = None,
     group_encoder=None,
     budget: int | None = None,
+    header_fn=None,
 ) -> tuple[bytes, bytes, str, int] | None:
     """→ (header, payload, codec_name, checksum). ``doc_ids``/``sources``
     may be pa.StringArray (hot path, buffer-native) or object arrays.
@@ -116,7 +115,9 @@ def encode_page(
     ``budget``: candidate-encode byte cap (merge/squeeze proposals) —
     returns None instead of a page when header+payload cannot come in under
     it, skipping most of the codec search and all of the header/checksum
-    work on the (majority) losing proposals."""
+    work on the (majority) losing proposals. ``header_fn``: callable() → the
+    page header, supplied by the engine from the group's string tables;
+    without it the header is built from ``doc_ids`` and ``sources``."""
     if forced_codec == "group_huffman":
         if group_encoder is None:
             raise ValueError("group_huffman replay needs the engine's group_encoder")
@@ -152,7 +153,10 @@ def encode_page(
         name = blob_codec_name(payload)
         if level_tag is not None and name == "plane_zlib":
             name = f"{name}@{level_tag}"
-    header = build_header(doc_ids, sources, lens)
+    if header_fn is None:
+        header = build_header(StringTable(doc_ids), StringTable(sources), lens, 0, len(lens))
+    else:
+        header = header_fn()
     if budget is not None and len(header) + len(payload) >= budget:
         return None
     return header, payload, name, page_checksum(doc_ids, sources, lens, values)

@@ -219,8 +219,12 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
     any that are gone when it runs (``ignoreMissingFiles``): a compaction in
     between deletes the files it rewrote, and the rewritten copies are not in
     the listing. Such a read misses those plans, and their groups are
-    searched again, to the same bytes; no stale plan is ever delivered."""
+    searched again, to the same bytes; no stale plan is ever delivered.
+    A store with no lineage file (a fresh root, or one whose only file is an
+    in-flight temp) returns None without building a Spark read."""
     path = os.path.join(root, "lineage")
+    if not _parquet_files(path):
+        return None
     try:
         # explicit schema: building the DataFrame runs no inference job, and
         # Spark's parquet reader widens int32 files into the `mode long`
