@@ -79,7 +79,8 @@ _SINGLE_SORT_MAX_ROWS = 1_000_000
 
 def _input_rows(df: DataFrame) -> int | None:
     """Σ rows of the parquet files ``df`` reads, from their footers (no
-    Spark job), or None when a footer cannot be read."""
+    Spark job), or None when a footer cannot be read: Spark lists files by
+    URIs such as ``s3a://`` that pyarrow cannot open."""
     try:
         return sum(pq.read_metadata(f).num_rows for f in df.inputFiles())
     except Exception:
@@ -100,8 +101,8 @@ def _ordered(df: DataFrame, *cols) -> DataFrame:
 
     The per-doc and per-group queries return at most one row per input
     row, so the rows of the tables ``df`` reads bound that task (the pair
-    queries return the near-duplicate pairs their filters keep, a few per
-    doc on these inputs). Up to ``_SINGLE_SORT_MAX_ROWS`` input rows
+    queries return the near-duplicate pairs their filters keep, which this
+    bound does not cover). Up to ``_SINGLE_SORT_MAX_ROWS`` input rows
     (sf0.1's largest table, lineitem, holds 600 K) the result sorts in one
     task; above it, or when the input cannot be counted, it takes the range
     sort, whose tasks stay bounded as the documents grow. Both give the
